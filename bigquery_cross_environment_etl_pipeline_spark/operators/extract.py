@@ -7,7 +7,7 @@ Semantics from the reference's extract path
   (billing_etl.py:280-281)
 - a counting scan with the same predicate (billing_etl.py:253-257)
 - watermark derivation ``max(ts)`` over the extracted batch
-  (billing_etl.py:167)
+  (billing_etl.py:167), observed by the load's own pass
 
 Architecture divergence (deliberate, SURVEY.md §7.4.3): the reference
 paginates with ``LIMIT n OFFSET k`` and no ORDER BY — O(pages * scan)
@@ -78,14 +78,21 @@ def count_in_window(source: DataFrame, ts_col: str, start: TimeLike, end: TimeLi
     return source.filter(half_open_interval(ts_col, start, end)).count()
 
 
-def batch_watermark(batch: DataFrame, ts_col: str) -> dt.datetime | None:
-    """A2/T2: new watermark = max(ts) of the extracted batch (None if empty).
+def batch_watermark(max_ts: dt.datetime | None, now: dt.datetime) -> dt.datetime:
+    """A2/T2: the next window's start, from the batch's observed ``max(ts)``.
 
-    Computed engine-side as an aggregate — the reference's driver-side
-    ``max(row[...] for row in rows)`` (billing_etl.py:167) would require
-    collecting the batch.
+    ``max_ts`` comes from the load's own pass (``LoadResult.max_ts``,
+    an ``observe`` metric over every row the load saw) — the reference's
+    driver-side ``max(row[...] for row in rows)`` (billing_etl.py:167)
+    without collecting the batch or scanning it a second time. An empty
+    batch advances to ``now`` (billing_etl.py:160-168).
+
+    Divergence: the watermark is one microsecond PAST ``max(ts)`` — the
+    reference restarts the next window AT ``max(ts)`` and re-extracts
+    the boundary row (at-least-once); with the +1µs tick adjacent
+    half-open windows partition the stream exactly.
     """
-    return batch.agg(F.max(ts_col).alias("wm")).first()["wm"]
+    return max_ts + dt.timedelta(microseconds=1) if max_ts is not None else now
 
 
 def backfill_windows(

@@ -2152,6 +2152,10 @@ def _idct_blocks(blocks):
         dc = blocks[..., 0, 0].astype(np.float64)
         a = m[0] * dc[..., None]  # (by, bx, 8): m[0,x]*dc
         return a[..., :, None] * m[0]  # (by, bx, 8, 8): (m[0,x]*dc)*m[0,w]
+    # the einsum must stay at its default optimize=False: the DC-only
+    # path above is bit-identical only to the single C-order c_einsum
+    # loop; an optimized contraction (tensordot/BLAS) re-associates the
+    # sums and the two paths would drift apart in the last bits
     return np.einsum("ux,yvut,tw->yvxw", m, blocks.astype(np.float64), m)
 
 

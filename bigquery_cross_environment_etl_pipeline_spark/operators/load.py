@@ -13,7 +13,9 @@ Spark-first re-expression:
   rows that fail validation are quarantined instead of aborting the job,
   reproducing the reference's partial-success behavior without its
   duplicate-on-retry flaw (SURVEY.md §7.4.1). One pass computes
-  good/bad counts via ``observe`` metrics — no second scan.
+  good/bad counts — and, given ``ts_col``, the batch's ``max(ts)`` the
+  next watermark derives from (T2) — via ``observe`` metrics, with no
+  second scan.
 - Idempotency: each load stamps a ``batch_id``; re-running a window with
   the same batch_id overwrites its own prior output (dedup-on-read is
   then unnecessary). This is the deliberate divergence from the
@@ -23,6 +25,7 @@ Spark-first re-expression:
 from __future__ import annotations
 
 import dataclasses
+import datetime as dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +41,9 @@ class LoadResult:
     total_rows: int
     loaded_rows: int
     rejected_rows: int
+    #: max(ts_col) over every row the load saw, rejected ones included
+    #: (None for an empty batch or when no ``ts_col`` was given)
+    max_ts: dt.datetime | None = None
 
 
 def load_append(
@@ -47,6 +53,7 @@ def load_append(
     validate: Column | None = None,
     reject_path: str | None = None,
     time_partition_col: str | None = None,
+    ts_col: str | None = None,
 ) -> LoadResult:
     """S8: append ``df`` to ``dest_path``, quarantining invalid rows.
 
@@ -61,6 +68,10 @@ def load_append(
     window scan prune whole directories (the reference created its
     destination unpartitioned, dataset_utils.py:334-338; SURVEY.md §4
     flags time partitioning as the added optimization).
+
+    ``ts_col``: a timestamp column whose MAX over all rows (valid or
+    not) is observed in the same pass and returned as ``max_ts`` — the
+    incremental job's watermark input, at no extra scan.
     """
     stamped = df.withColumn("_batch_id", F.lit(batch_id))
     partition_cols = ["_batch_id"]
@@ -68,11 +79,13 @@ def load_append(
         stamped = stamped.withColumn("_dt", F.to_date(F.col(time_partition_col)))
         partition_cols.append("_dt")
     ok = validate if validate is not None else F.lit(True)
+    max_ts = [F.max(ts_col).alias("max_ts")] if ts_col is not None else []
     obs = Observation("load_accounting")
     observed = stamped.observe(
         obs,
         F.count(F.lit(1)).alias("total"),
         F.sum(F.when(ok, 1).otherwise(0)).alias("good"),
+        *max_ts,
     )
     good_rows = observed.filter(ok)
     # Idempotent re-run: replace only this batch's partitions.
@@ -94,7 +107,10 @@ def load_append(
         status, code = STATUS_PARTIAL, 206
     else:
         status, code = STATUS_FAILED, 500
-    return LoadResult(status=status, code=code, total_rows=total, loaded_rows=good, rejected_rows=bad)
+    return LoadResult(
+        status=status, code=code, total_rows=total, loaded_rows=good, rejected_rows=bad,
+        max_ts=metrics.get("max_ts"),
+    )
 
 
 def json_boundary(df: DataFrame) -> DataFrame:

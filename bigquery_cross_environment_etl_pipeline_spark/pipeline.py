@@ -6,16 +6,28 @@ commit protocol (reference core/services/billing_etl.py:43-219):
 1. resolve tenant config (S3); provision destination if missing (D7)
 2. read watermark = latest SUCCESS end_date_time, else epoch (T1)
 3. extract window [watermark, now) (S1/P4) — ``now`` pinned once per run
-4. derive new watermark = max(ts) of batch; now() on empty batch (T2)
-5. checkpoint IN_PROGRESS  (T4)
-6. transform hook (U1) — ``DataFrame.transform``, identity by default
-7. append-load with partial-failure accounting (S8)
+4. checkpoint IN_PROGRESS  (T4)
+5. transform hook (U1) — ``DataFrame.transform``, identity by default
+6. append-load with partial-failure accounting (S8); the same pass
+   observes max(ts) over every row the load saw, rejected rows included
+7. derive new watermark = that max(ts) + 1µs; ``now`` on an empty
+   batch (T2, ``batch_watermark``) — no second scan of the window
 8. checkpoint SUCCESS / FAILED (T4), retry whole attempt <= 3 with
    exponential backoff (T7)
 
+The data path is ONE Spark job (the load's write): the checkpoint log is
+read and appended on the driver (``CheckpointLog``) and the watermark
+rides the load's ``observe`` metrics. The transform hook must keep
+``ts_col``; a hook that drops rows moves the watermark with them (a hook
+that drops every row makes an empty batch, which advances to ``now``).
+
 Divergences (documented, SURVEY.md §7.4): idempotent overwrite-by-batch-id
 instead of at-least-once append; no LIMIT/OFFSET pagination; ``now``
-pinned at the driver.
+pinned at the driver. The batch id is (org, window start): the start is
+the last SUCCESS watermark, so a run that crashed after its load but
+before its SUCCESS checkpoint re-runs under the SAME id — even with a
+later ``now`` — and overwrites its own partition instead of loading the
+window twice.
 """
 
 from __future__ import annotations
@@ -83,23 +95,17 @@ def process_etl_job(
         try:
             wm = checkpoints.last_success_watermark(org_id, project_id)
             batch, start, end = extract_incremental(source, ts_col, wm, now, epoch=EPOCH)
-            # T2: data-driven watermark; empty batch advances to `now`
-            # (reference billing_etl.py:160-168). Divergence: we advance one
-            # microsecond PAST max(ts) — the reference restarts the next
-            # window AT max(ts) and re-extracts the boundary row
-            # (at-least-once); with the +1µs tick adjacent windows
-            # partition the stream exactly.
-            max_ts = batch_watermark(batch, ts_col)
-            new_wm = (max_ts + dt.timedelta(microseconds=1)) if max_ts else now
-
             checkpoints.save(STATUS_IN_PROGRESS, org_id, project_id, None, now=now)
             transformed = batch.transform(transform)
-            batch_id = f"org{org_id}-{start:%Y%m%dT%H%M%S}-{end:%Y%m%dT%H%M%S}"
+            # keyed by the window START only (microseconds included): a
+            # restart after a crash re-loads into the same partition
+            batch_id = f"org{org_id}-{start:%Y%m%dT%H%M%S%f}"
             result: LoadResult = load_append(
-                transformed, dest_path, batch_id=batch_id, validate=validate
+                transformed, dest_path, batch_id=batch_id, validate=validate, ts_col=ts_col
             )
             if result.status == STATUS_FAILED:
                 raise RuntimeError(f"load failed: {result}")
+            new_wm = batch_watermark(result.max_ts, now)
             checkpoints.save(STATUS_SUCCESS, org_id, project_id, new_wm, now=now)
             return JobResult(
                 status=result.status,

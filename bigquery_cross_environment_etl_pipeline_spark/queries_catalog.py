@@ -83,6 +83,13 @@ _FORCE_WINDOW: list[str] = [
     # (value-identical; tests pin it) — the driver hash re-attests
     # training AND application on the new expression
     "bpe_token_counts",
+    # the checkpoint log is now written and read on the driver (pyarrow
+    # files committed by rename) and the job's watermark comes from the
+    # load's observe() pass: the protocol queries re-attest the new
+    # path on a vanilla session (INT96 default writer)
+    "etl_checkpoint_roundtrip",
+    "etl_protocol_edge_cases",
+    "etl_retry_envelope",
 ]
 
 _STABLE_ORDER = [

@@ -4,6 +4,7 @@ idempotent re-runs, partial-failure verdicts, provisioning DDL."""
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +15,7 @@ from bigquery_cross_environment_etl_pipeline_spark.operators.config import (
     StepStatusStore,
     attach_config,
 )
+from bigquery_cross_environment_etl_pipeline_spark.operators.extract import extract_incremental
 from bigquery_cross_environment_etl_pipeline_spark.operators.load import load_append
 from bigquery_cross_environment_etl_pipeline_spark.pipeline import process_etl_job
 from bigquery_cross_environment_etl_pipeline_spark.schemas import (
@@ -114,6 +116,73 @@ def test_etl_job_rerun_is_idempotent(spark, tmp_path, events):
     ckpt2 = CheckpointLog(spark, str(tmp_path / "ckpt"))
     process_etl_job(spark, 1, events, "ts", dest, ckpt2, now=mid)
     assert spark.read.parquet(dest).count() == n1
+
+
+class _Crash(BaseException):
+    """A process death: escapes the job's ``except Exception`` retry
+    envelope, so no FAILED row is written and nothing is retried."""
+
+
+def test_restart_after_crash_between_load_and_success_loads_rows_once(
+    spark, tmp_path, events, monkeypatch
+):
+    """A run loads its window, then dies before its SUCCESS checkpoint.
+    The restart comes later (a later ``now``), so its window is a superset
+    of the crashed one; it must replace the crashed run's partition, not
+    add to it — every source row ends up loaded exactly once."""
+    ckpt = CheckpointLog(spark, str(tmp_path / "ckpt"))
+    dest = str(tmp_path / "dest")
+    save = CheckpointLog.save
+
+    def die_before_success(self, status, *args, **kwargs):
+        if status == STATUS_SUCCESS:
+            raise _Crash()
+        return save(self, status, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointLog, "save", die_before_success)
+    with pytest.raises(_Crash):
+        process_etl_job(spark, 1, events, "ts", dest, ckpt, now=dt.datetime(2024, 1, 15))
+    assert spark.read.parquet(dest).count() > 0  # the crashed load landed
+    monkeypatch.setattr(CheckpointLog, "save", save)
+
+    r = process_etl_job(spark, 1, events, "ts", dest, ckpt, now=dt.datetime(2024, 2, 1))
+    assert r.status == STATUS_SUCCESS
+    loaded = Counter(row["event_id"] for row in spark.read.parquet(dest).collect())
+    source = Counter(row["event_id"] for row in events.collect())
+    assert loaded == source, "each source row must be loaded exactly once"
+
+
+def test_transform_dropping_every_row_advances_to_now(spark, tmp_path, events):
+    """T2 through the hook: a transform that prunes the whole batch makes an
+    empty load, and the job still commits with the watermark at ``now``."""
+    ckpt = CheckpointLog(spark, str(tmp_path / "ckpt"))
+    now = dt.datetime(2024, 1, 15)
+    r = process_etl_job(
+        spark, 1, events, "ts", str(tmp_path / "dest"), ckpt, now=now,
+        transform=lambda d: d.filter(F.lit(False)),
+    )
+    assert (r.status, r.rows_extracted, r.rows_loaded) == (STATUS_SUCCESS, 0, 0)
+    assert r.new_watermark == now
+    assert ckpt.last_success_watermark(1, "default") == now
+
+
+def test_watermark_covers_rejected_rows(spark, tmp_path, events):
+    """Rows the validator rejects were still extracted: the watermark moves
+    past them (the next window must not re-extract them)."""
+    ckpt = CheckpointLog(spark, str(tmp_path / "ckpt"))
+    now = dt.datetime(2024, 1, 15)
+    batch, _, _ = extract_incremental(events, "ts", None, now)
+    newest = batch.orderBy(F.col("ts").desc(), F.col("event_id")).first()
+    assert batch.filter(F.col("ts") == newest["ts"]).count() == 1
+    r = process_etl_job(
+        spark, 1, events, "ts", str(tmp_path / "dest"), ckpt, now=now,
+        validate=F.col("event_id") != newest["event_id"],
+    )
+    assert r.status == "PARTIAL_SUCCESS"
+    assert r.rows_loaded == r.rows_extracted - 1 == batch.count() - 1
+    want = newest["ts"] + dt.timedelta(microseconds=1)
+    assert r.new_watermark == want
+    assert ckpt.last_success_watermark(1, "default") == want
 
 
 def test_load_partial_success_verdict(spark, tmp_path, events):
