@@ -2,17 +2,26 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+which also carries the run's ``cpus``, ``master``, ``host`` and ``load``.
 
 Each query executes to completion through the noop sink (full plan runs,
-no driver-side result transfer skewing the numbers).
+no driver-side result transfer skewing the numbers), twice; its time is
+the faster pass, since the first pays one-time codegen compilation.
 
-Round 11: every pass also records a CPU-time channel (process-tree
-utime+stime from /proc plus per-stage executorCpuTime from the
-AppStatusStore) — co-tenant load inflates wall clock but barely moves
-CPU, so cpu_queries/cpu_sec in BENCH_DETAIL.json is the signal the
-round-over-round regression comparison trusts, judged against the
-committed BENCH_CPU_REF.json (minted with --write-cpu-ref; valid even
-from a loaded box).
+Measurement uses perfbench's /proc meters (perfbench/procstat.py):
+
+- Load: a ``DisturbanceSampler`` runs across the whole query loop and
+  reports hypervisor steal and the mean run-queue length. The run is
+  ``loaded`` when steal reached perfbench's ``STEAL_LIMIT_PCT``; no spin
+  loop and no per-host constant is involved.
+- CPU: every pass records the process-tree CPU (``ProcessTree``: total
+  and worker-python) and per-stage executorCpuTime. Co-tenant load
+  inflates wall clock but barely moves CPU, so these channels are the
+  regression signal, judged against BENCH_CPU_REF.json. That reference
+  is per host: ``--write-cpu-ref`` mints it stamped with
+  ``procstat.host_facts()``. A reference that is absent or stamped for
+  another host turns the detector off, and BENCH_DETAIL.json records
+  why as ``cpu_ref_skipped``.
 """
 
 from __future__ import annotations
@@ -23,12 +32,12 @@ import re
 import sys
 import time
 
-# module scope (stdlib, always present): an import failure inside the
-# _spin_parallel try block would make its except tuple itself raise
-# NameError on BrokenExecutor instead of falling back (ADVICE r6)
-from concurrent.futures import BrokenExecutor, ProcessPoolExecutor
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import procstat  # noqa: E402
+from workloads import STEAL_LIMIT_PCT  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -214,98 +223,15 @@ BENCH_QUERIES = [
 ]
 
 
-#: committed quiet-machine reference for the calibration spin (median
-#: of repeated runs on an idle local[32] host — re-measure and commit
-#: whenever the hardware changes). Re-minted round 12: the r8-era
-#: 0.75/0.78 pair was measured on a faster host class — this box
-#: spins 0.86-1.04 (median 0.92 single / 0.96 mt over 15+7 samples)
-#: while PROVABLY idle (loadavg 0 running, /proc/stat steal delta 0,
-#: vmstat 100% idle), so every pass since r8 read "loaded" and
-#: --write-quiet was permanently refused. The emitted load_factor =
-#: measured/quiet lets the driver/judge normalize ambient-load noise
-#: out of round-over-round comparisons instead of inferring it from
-#: cross-file query ratios (VERDICT r5 item 5); loaded=true flags a
-#: pass whose numbers should be read as inflated.
-CALIBRATION_QUIET_SEC = 0.92
-#: committed quiet median for the PARALLEL spin — barely above the
-#: single-core value on an unloaded 32-core box; diverges from it
-#: exactly when co-tenant load eats cores without slowing any single
-#: thread (the failure mode the round-6 single-spin probe missed:
-#: load_factor 1.0 while every 32-thread query ran ~1.1x). Like
-#: CALIBRATION_QUIET_SEC this pair (quiet value + worker count) is
-#: HOST-PINNED: on a different box re-measure and re-commit both
-#: (workers scale as cpu_count/4 so a smaller host doesn't flag an
-#: idle machine as loaded by oversubscribing itself).
-CALIBRATION_MT_QUIET_SEC = 0.96
-CALIBRATION_MT_WORKERS = max(1, min(8, (os.cpu_count() or 8) // 4))
-CALIBRATION_LOADED_FACTOR = 1.2
-
-
-#: load-outlier re-timing (VERDICT r8 item 2): the r8 external record
-#: carries a 49.92s pricing_summary_q1 — 60x its quiet time — purely
-#: from sustained co-tenant load that min-of-2 cannot absorb. Defense:
-#: compare every query's best pass against the COMMITTED quiet-host
-#: reference (BENCH_QUIET.json, written by `bench.py --write-quiet` on
-#: an idle box and committed) and re-time, with bounded extra passes,
-#: any query whose best is > RETIME_RATIO x its quiet time (load may
-#: subside mid-run) or whose two passes split by > RETIME_RATIO
-#: (transient spike — one confirming pass). Queries still inflated
-#: after the retry budget are ANNOTATED per-query in the artifact,
-#: attributed by the calibration evidence: `loaded_queries` when the
-#: pass measured loaded ("this number is load, not code"), or
-#: `regression_candidates` when the pass measured QUIET (a 4x on an
-#: idle host is a real regression and must never wear a load label).
-RETIME_RATIO = 3.0
-RETIME_MAX_EXTRA = 3
-QUIET_REF_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_QUIET.json"
-)
-
-
-def load_quiet_reference(path: str = QUIET_REF_PATH) -> dict[str, float]:
-    """Per-query quiet-pass seconds from the committed reference;
-    empty when absent (first run on a new host) — re-timing then
-    falls back to the pass-split trigger alone. Only references
-    matching the CURRENT sf directory apply: comparing an sf0.01 run
-    against committed sf0.1 times would flag everything or nothing."""
-    try:
-        with open(path) as fh:
-            d = json.load(fh)
-        if d.get("sf_dir") != SF_DIR:
-            return {}
-        return {
-            k: float(v)
-            for k, v in d.get("queries", {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-    except (OSError, ValueError):
-        return {}
-
-
-def needs_retime(passes: list[float], quiet_ref: float | None) -> bool:
-    """True while a query's timing is not yet credible: best pass
-    still > RETIME_RATIO x the committed quiet time (sustained load —
-    keep retrying within budget), or the initial two passes split by
-    > RETIME_RATIO with no confirming third pass yet (transient
-    spike). Sub-100ms quiet references are below the scheduler-noise
-    floor — a 3x there is milliseconds, not a load artifact — so the
-    ratio trigger only arms above it."""
-    best = min(passes)
-    if quiet_ref is not None and quiet_ref >= 0.1 and best > RETIME_RATIO * quiet_ref:
-        return True
-    return len(passes) == 2 and max(passes) > RETIME_RATIO * best
-
-
 # ---------------------------------------------------------------------------
-# CPU-time channel (VERDICT r10 item 1): two consecutive rounds the
-# committed wall-clock number was noise-dominated by co-tenant load,
-# and the quiet-window hunter proved a quiet pass may never come.
-# CPU time barely moves with co-tenant load, so it is the channel the
-# round-over-round regression comparison trusts. Two meters:
-#   - cpu_sec: utime+stime of the WHOLE PROCESS TREE rooted at this
-#     driver (JVM + pyspark daemon/workers + driver python) read from
-#     /proc — covers the Python codec stages executorCpuTime cannot
-#     see. Linux-only; degrades to absent elsewhere.
+# CPU-time channel (VERDICT r10 item 1): co-tenant load inflates wall
+# clock but barely moves CPU, so CPU is the channel the round-over-round
+# regression comparison trusts. Two meters:
+#   - cpu_sec / py_cpu_sec: ``procstat.ProcessTree`` — CPU of the WHOLE
+#     PROCESS TREE rooted at this driver (JVM + pyspark daemon/workers +
+#     driver python) and its worker-python share, read from /proc —
+#     covers the Python codec stages executorCpuTime cannot see.
+#     Linux-only; degrades to absent elsewhere.
 #   - jvm_cpu_sec: per-stage executorCpuTime from the AppStatusStore,
 #     summed over the stages each pass submitted (stage-id floor per
 #     pass, so retained-stage eviction of OLD stages can never make a
@@ -313,82 +239,35 @@ def needs_retime(passes: list[float], quiet_ref: float | None) -> bool:
 #     view of the same pass.
 # ---------------------------------------------------------------------------
 
-#: CPU ratio above which a query is flagged against the committed CPU
-#: reference. Tighter than RETIME_RATIO on purpose: CPU needs no load
-#: headroom — 1.5x the reference CPU is a real plan/code change, not
-#: a busy box (frequency scaling + SMT contention stay well under it).
+#: CPU ratio above which a query is flagged against the CPU reference.
+#: CPU needs no load headroom — 1.5x the reference CPU is a real
+#: plan/code change, not a busy box (frequency scaling + SMT contention
+#: stay well under it).
 CPU_REGRESSION_RATIO = 1.5
-CPU_REF_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_CPU_REF.json"
-)
+CPU_REF_PATH = os.path.join(HERE, "BENCH_CPU_REF.json")
 
 
-def proc_tree_cpu_by_class() -> tuple[float, float] | None:
-    """(total, worker_python) CPU seconds of this process and every
-    live descendant — utime+stime plus reaped-children cutime/cstime
-    for the total. ``worker_python`` is the CPU of python processes
-    UNDER the JVM (pyspark daemons + workers): the share the
-    executorCpuTime meter cannot see, measured directly so the
-    regression detector's Python channel is actual Python work, never
-    the JVM's own GC/JIT remainder (round-11 refinement). Since round
-    12 (ADVICE r11) the worker channel also counts cutime/cstime for
-    those processes: a worker that EXITS between snapshots migrates
-    its CPU into the daemon's reaped-children counters, which used to
-    leave the total but silently vanish from worker_python —
-    negative/undercounted per-pass deltas that could mint a
-    systematically low reference. (The daemon's children are only
-    workers, so its cutime is worker CPU by construction.) None when
-    /proc is unavailable (non-Linux) — the channel then degrades to
-    absent rather than lying."""
+def _probe(fn):
+    """``fn()``, or None when /proc cannot be read (non-Linux): a
+    missing meter degrades its channel to absent — the bench must never
+    die on a probe."""
     try:
-        tick = os.sysconf("SC_CLK_TCK")
-        stats: dict[int, tuple[int, int, str]] = {}
-        children: dict[int, list[int]] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    # comm (field 2) may contain spaces/parens — split
-                    # on the LAST ')' per proc(5)
-                    raw = fh.read()
-                comm = raw.split("(", 1)[1].rsplit(")", 1)[0]
-                rest = raw.rsplit(")", 1)[1].split()
-            except (OSError, IndexError):
-                continue  # raced a process exit
-            pid = int(d)
-            ppid = int(rest[1])
-            # fields 14-17 (utime stime cutime cstime), 0-indexed from
-            # field 3 => rest[11:15]; own = utime+stime only (live)
-            own = int(rest[11]) + int(rest[12])
-            full = own + int(rest[13]) + int(rest[14])
-            stats[pid] = (full, own, comm)
-            children.setdefault(ppid, []).append(pid)
-        total = 0
-        worker_py = 0
-        stack: list[tuple[int, bool]] = [(os.getpid(), False)]
-        seen: set[int] = set()
-        while stack:
-            p, under_jvm = stack.pop()
-            if p in seen:
-                continue
-            seen.add(p)
-            full, own, comm = stats.get(p, (0, 0, "?"))
-            total += full
-            is_jvm = comm == "java"
-            if under_jvm and not is_jvm:
-                worker_py += full
-            for c in children.get(p, []):
-                stack.append((c, under_jvm or is_jvm))
-        return total / tick, worker_py / tick
-    except (OSError, ValueError, AttributeError):
+        return fn()
+    except (OSError, ValueError, IndexError, AttributeError):
         return None
 
 
-def proc_tree_cpu_sec() -> float | None:
-    """Back-compat scalar view of ``proc_tree_cpu_by_class``."""
-    both = proc_tree_cpu_by_class()
-    return None if both is None else both[0]
+def load_block(sample: dict[str, float] | None) -> dict | None:
+    """The run's ``load`` field from a ``DisturbanceSampler`` reading.
+    ``loaded`` uses perfbench's rule: steal of ``STEAL_LIMIT_PCT`` or
+    more marks a disturbed run."""
+    if sample is None:
+        return None
+    return {
+        "steal_pct": round(sample["steal_pct"], 2),
+        "runq": round(sample["runq"], 2),
+        "loaded": sample["steal_pct"] >= STEAL_LIMIT_PCT,
+    }
 
 
 class JvmCpuMeter:
@@ -459,69 +338,61 @@ class JvmCpuMeter:
 #: while worker-python CPU and >=0.5s executor CPU stayed flat.
 CPU_JVM_REF_FLOOR = 0.5
 CPU_WORKER_REF_FLOOR = 0.5
-CPU_TREE_REF_FLOOR = 2.0  # legacy-ref fallback only
 
 
-def load_cpu_reference(path: str = CPU_REF_PATH) -> tuple[
-    dict[str, float], dict[str, float], dict[str, float]
-]:
-    """Committed per-query (process-tree CPU, JVM executor CPU,
-    worker-python CPU) for the current sf dir; empty when absent or for
-    a different scale. Unlike the wall-clock quiet reference, this CAN
-    be minted on a loaded box (--write-cpu-ref): load-robustness is the
+def load_cpu_reference(
+    host: dict | None, path: str = CPU_REF_PATH
+) -> tuple[dict[str, float], dict[str, float], str | None]:
+    """Per-query (JVM executor CPU, worker-python CPU) from the
+    reference ``--write-cpu-ref`` minted, and why it was skipped (None
+    when it applies). A reference judges only the sf dir and the host
+    it was minted on — CPU seconds from another machine are not
+    comparable — so one whose ``host`` stamp differs from ``host`` is
+    ignored. It CAN be minted on a loaded box: load-robustness is the
     whole point of the channel."""
     try:
         with open(path) as fh:
             d = json.load(fh)
-        if d.get("sf_dir") != SF_DIR:
-            return {}, {}, {}
+    except OSError:
+        return {}, {}, "no reference"
+    except ValueError:
+        return {}, {}, "unreadable"
+    if d.get("sf_dir") != SF_DIR:
+        return {}, {}, "other sf"
+    if host is None or d.get("host") != host:
+        return {}, {}, "host mismatch"
 
-        def clean(key: str) -> dict[str, float]:
-            return {
-                k: float(v)
-                for k, v in d.get(key, {}).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
+    def clean(key: str) -> dict[str, float]:
+        return {
+            k: float(v)
+            for k, v in d.get(key, {}).items()
+            if isinstance(v, (int, float)) and v > 0
+        }
 
-        return (
-            clean("cpu_queries"),
-            clean("jvm_cpu_queries"),
-            clean("py_cpu_queries"),
-        )
-    except (OSError, ValueError):
-        return {}, {}, {}
+    return clean("jvm_cpu_queries"), clean("py_cpu_queries"), None
 
 
 def cpu_regressions(
-    cpu_timings: dict[str, float],
-    cpu_ref: dict[str, float],
-    jvm_cpu_timings: dict[str, float] | None = None,
-    jvm_cpu_ref: dict[str, float] | None = None,
-    py_cpu_timings: dict[str, float] | None = None,
-    py_cpu_ref: dict[str, float] | None = None,
+    jvm_cpu_timings: dict[str, float],
+    jvm_cpu_ref: dict[str, float],
+    py_cpu_timings: dict[str, float],
+    py_cpu_ref: dict[str, float],
 ) -> dict[str, float]:
     """Queries whose measured CPU exceeds CPU_REGRESSION_RATIO x the
-    committed reference on a channel that is STABLE for that query —
-    never relabeled as load (task/worker CPU barely moves with load),
-    so these are regression candidates unconditionally.
+    reference on a channel that is STABLE for that query — never
+    relabeled as load (task/worker CPU barely moves with load), so
+    these are regression candidates unconditionally.
 
-    Two direct channels (round-11 refinement — the original single
-    process-tree ratio false-flagged small queries whose non-task
-    GC/JIT share wobbled between clean passes):
+    Two direct channels (round-11 refinement — a single process-tree
+    ratio false-flagged small queries whose non-task GC/JIT share
+    wobbled between clean passes):
       - JVM channel: per-stage executorCpuTime (task work only);
       - Python channel: worker-python CPU measured directly from the
-        process tree (pyspark daemons/workers under the JVM) — actual
-        Python work, never the JVM's own remainder.
-    Each arms above its noise floor. When the committed reference
-    predates the per-class split (no py_cpu_queries), the detector
-    falls back to the whole-tree ratio with a conservative 2 s floor."""
-    jvm_cpu_timings = jvm_cpu_timings or {}
-    jvm_cpu_ref = jvm_cpu_ref or {}
-    py_cpu_timings = py_cpu_timings or {}
-    py_cpu_ref = py_cpu_ref or {}
+        process tree (pyspark daemons/workers) — actual Python work,
+        never the JVM's own remainder.
+    Each arms above its noise floor."""
     out = {}
-    names = set(cpu_ref) | set(jvm_cpu_ref) | set(py_cpu_ref)
-    for name in names:
+    for name in set(jvm_cpu_ref) | set(py_cpu_ref):
         ratios = []
         jvm_got, jvm_ref = jvm_cpu_timings.get(name), jvm_cpu_ref.get(name)
         if (
@@ -539,100 +410,9 @@ def cpu_regressions(
             and py_got > CPU_REGRESSION_RATIO * py_ref
         ):
             ratios.append(py_got / py_ref)
-        if not py_cpu_ref and not jvm_cpu_ref:
-            got, ref = cpu_timings.get(name), cpu_ref.get(name)
-            if (
-                isinstance(got, (int, float))
-                and isinstance(ref, (int, float))
-                and ref >= CPU_TREE_REF_FLOOR
-                and got > CPU_REGRESSION_RATIO * ref
-            ):
-                ratios.append(got / ref)
         if ratios:
             out[name] = round(max(ratios), 2)
     return out
-
-
-def _spin_once(n: int = 10_000_000) -> float:
-    """One fixed-work single-core spin: deterministic integer loop, no
-    allocation growth — its wall time moves only with CPU contention/
-    frequency, never with code or data changes in this repo."""
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(n):
-        acc += i * i & 1023
-    _ = acc
-    return time.perf_counter() - t0
-
-
-def calibrate(samples: int = 3) -> dict:
-    """Median-of-N spin time + ratio to the committed quiet value.
-    Median (not min) on purpose: the point is to MEASURE the load the
-    query timings actually experienced, not to dodge it."""
-    if samples < 1:
-        raise ValueError("calibrate needs samples >= 1")
-    times = sorted(_spin_once() for _ in range(samples))
-    mid = len(times) // 2
-    # true median: mean of the middle pair for even N (times[N//2]
-    # alone would report the WORSE of the pair as 'the median')
-    med = (
-        times[mid]
-        if len(times) % 2
-        else (times[mid - 1] + times[mid]) / 2.0
-    )
-    factor = round(med / CALIBRATION_QUIET_SEC, 3)
-    mt, mt_degraded = _spin_parallel(CALIBRATION_MT_WORKERS)
-    mt_factor = round(mt / CALIBRATION_MT_QUIET_SEC, 3)
-    return {
-        "spin_sec": round(med, 4),
-        "quiet_sec": CALIBRATION_QUIET_SEC,
-        "load_factor": factor,
-        "spin_mt_sec": round(mt, 4),
-        "load_factor_mt": mt_factor,
-        # effective worker count rides along so a host whose cpu_count
-        # scaled workers below the 8 the quiet reference was measured
-        # with is VISIBLE in the artifact, not silently authoritative
-        "mt_workers": CALIBRATION_MT_WORKERS,
-        # true when the pool fell back to a single-core spin: the
-        # load_factor_mt is then NOT a multi-core measurement and a
-        # loaded multi-core box could read as quiet (ADVICE r6)
-        "mt_degraded": mt_degraded,
-        "loaded": max(factor, mt_factor) > CALIBRATION_LOADED_FACTOR,
-    }
-
-
-def _spin_parallel(
-    workers: int = CALIBRATION_MT_WORKERS,
-) -> tuple[float, bool]:
-    """Median wall time of ``workers`` SIMULTANEOUS fixed-work spins in
-    separate processes (the GIL makes threads useless for this), plus a
-    degraded flag. A single-core spin cannot see multi-core contention —
-    a co-tenant saturating half the box leaves one thread at full speed
-    while every local[32] query stage runs degraded; the parallel spin
-    inflates in exactly that situation. Falls back to (single-core
-    time, degraded=True) if the process pool is unavailable — the flag
-    rides into the calibration dict so the fallback is never mistaken
-    for a genuine multi-core measurement."""
-    try:
-        with ProcessPoolExecutor(workers) as ex:
-            times = sorted(
-                f.result()
-                for f in [ex.submit(_spin_once) for _ in range(workers)]
-            )
-    except (OSError, ImportError, BrokenExecutor):
-        # pool unavailable (ImportError: platforms without sem_open
-        # raise it at POOL CONSTRUCTION, not at module import) OR a
-        # worker died mid-spin (seccomp'd fork, OOM kill surface as
-        # BrokenProcessPool, not OSError) — a missing probe must
-        # degrade, never kill the whole bench pass
-        return _spin_once(), True
-    mid = len(times) // 2
-    med = (
-        times[mid]
-        if len(times) % 2
-        else (times[mid - 1] + times[mid]) / 2.0
-    )
-    return med, False
 
 
 def main() -> None:
@@ -640,27 +420,28 @@ def main() -> None:
     from bigquery_cross_environment_etl_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
+    sc = spark.sparkContext
     queries = queries_catalog.spark_queries()
 
     # JVM/codegen warmup on a tiny table
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
 
-    # two passes per query, report the min: the first pass pays one-time
-    # whole-stage-codegen compilation that a long-running cluster
-    # amortizes away; the min reflects steady-state throughput.
-    # fault-isolated: one broken query must never zero the whole round's
-    # bench signal — record its error and keep timing the rest.
-    cal_before = calibrate()
-    quiet_ref = load_quiet_reference()
-    cpu_ref, jvm_cpu_ref, py_cpu_ref = load_cpu_reference()
+    host = _probe(procstat.host_facts)
+    jvm_cpu_ref, py_cpu_ref, cpu_ref_skipped = load_cpu_reference(host)
+    tree = procstat.ProcessTree()
     jvm_meter = JvmCpuMeter(spark)
     timings: dict[str, object] = {}
     cpu_timings: dict[str, float] = {}
     jvm_cpu_timings: dict[str, float] = {}
     py_cpu_timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    retimed: dict[str, int] = {}
-    loaded_queries: dict[str, float] = {}
+    # two passes per query, report the min: the first pass pays one-time
+    # whole-stage-codegen compilation that a long-running cluster
+    # amortizes away; the min reflects steady-state throughput.
+    # fault-isolated: one broken query must never zero the whole round's
+    # bench signal — record its error and keep timing the rest.
+    sampler = procstat.DisturbanceSampler()
+    _probe(sampler.start)
     for name in BENCH_QUERIES:
         fn = queries.get(name)
         if fn is None:
@@ -675,30 +456,25 @@ def main() -> None:
             fn=fn, cpu=cpu_passes, jvm_cpu=jvm_cpu_passes, py_cpu=py_cpu_passes
         ) -> float:
             jvm_meter.mark()
-            c0 = proc_tree_cpu_by_class()
+            c0 = _probe(tree.cpu)
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
-            c1 = proc_tree_cpu_by_class()
+            c1 = _probe(tree.cpu)
             if c0 is not None and c1 is not None:
                 # clamp at 0: process churn between snapshots can
                 # still produce a slightly negative delta (ADVICE
                 # r11), and a negative "min of passes" would poison
-                # the committed reference
-                cpu.append(max(0.0, c1[0] - c0[0]))
-                py_cpu.append(max(0.0, c1[1] - c0[1]))
+                # the reference
+                cpu.append(max(0.0, c1["total"] - c0["total"]))
+                py_cpu.append(max(0.0, c1["worker"] - c0["worker"]))
             j = jvm_meter.read()
             if j is not None:
                 jvm_cpu.append(j)
             return wall
 
         try:
-            passes = [run_once(), run_once()]
-            ref = quiet_ref.get(name)
-            while len(passes) - 2 < RETIME_MAX_EXTRA and needs_retime(passes, ref):
-                passes.append(run_once())
-            best = min(passes)
-            timings[name] = round(best, 4)
+            timings[name] = round(min(run_once(), run_once()), 4)
             # min across passes, like wall: the first pass carries
             # one-time codegen-compile CPU a cluster amortizes away
             if cpu_passes:
@@ -707,60 +483,30 @@ def main() -> None:
                 jvm_cpu_timings[name] = round(min(jvm_cpu_passes), 4)
             if py_cpu_passes:
                 py_cpu_timings[name] = round(min(py_cpu_passes), 4)
-            if len(passes) > 2:
-                retimed[name] = len(passes)
-            if ref is not None and ref >= 0.1 and best > RETIME_RATIO * ref:
-                # still inflated after the retry budget — record the
-                # ratio; whether it reads as "load" or "regression
-                # candidate" is decided AFTER the pass, from the
-                # calibration probes (a 4x on a measured-quiet host is
-                # a real regression and must never be relabeled load)
-                loaded_queries[name] = round(best / ref, 2)
         except Exception as exc:  # noqa: BLE001 — isolate per query
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
 
-    cal_after = calibrate()
-    # the pass's load = the WORSE of the two probes (load arriving
-    # mid-run must not be averaged away) — judged on whichever factor
-    # is worse, single- or multi-core, like the loaded flag itself
-    cal = max(
-        cal_before,
-        cal_after,
-        key=lambda c: max(c["load_factor"], c["load_factor_mt"]),
-    )
-    # attribute persistent outliers using the calibration evidence:
-    # on a pass that measured loaded they read as co-tenant load; on a
-    # measured-QUIET pass a >3x-over-quiet query is a genuine
-    # regression candidate and must not be masked by a load label
-    if cal["loaded"]:
-        regression_candidates: dict[str, float] = {}
-    else:
-        regression_candidates, loaded_queries = loaded_queries, {}
+    run_facts = {
+        "cpus": sc.defaultParallelism,
+        "master": sc.master,
+        "host": host,
+        "load": load_block(_probe(sampler.stop)),
+    }
     line, detail = compose_output(
         timings,
         errors,
         SF_DIR,
-        cal,
-        retimed=retimed,
-        loaded_queries=loaded_queries,
-        regression_candidates=regression_candidates,
+        run_facts,
         cpu_timings=cpu_timings,
         jvm_cpu_timings=jvm_cpu_timings,
         py_cpu_timings=py_cpu_timings,
         cpu_regression_candidates=cpu_regressions(
-            cpu_timings,
-            cpu_ref,
-            jvm_cpu_timings,
-            jvm_cpu_ref,
-            py_cpu_timings,
-            py_cpu_ref,
+            jvm_cpu_timings, jvm_cpu_ref, py_cpu_timings, py_cpu_ref
         ),
+        cpu_ref_skipped=cpu_ref_skipped,
     )
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-            "w",
-        ) as fh:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass
@@ -778,29 +524,10 @@ def main() -> None:
                 json.dump(
                     {
                         "sf_dir": SF_DIR,
-                        "calibration": cal,
-                        "cpu_queries": cpu_timings,
+                        "host": host,
                         "jvm_cpu_queries": jvm_cpu_timings,
                         "py_cpu_queries": py_cpu_timings,
                     },
-                    fh,
-                    indent=1,
-                )
-    if "--write-quiet" in sys.argv:
-        # refresh the committed quiet reference — ONLY meaningful from
-        # an idle host; refuse when the pass itself measured loaded,
-        # so a loaded run can never become the baseline future runs
-        # are judged against
-        if cal["loaded"]:
-            print(
-                "refusing --write-quiet: this pass measured loaded "
-                f"(load_factor {cal['load_factor']}/{cal['load_factor_mt']})",
-                file=sys.stderr,
-            )
-        else:
-            with open(QUIET_REF_PATH, "w") as fh:
-                json.dump(
-                    {"sf_dir": SF_DIR, "calibration": cal, "queries": timings},
                     fh,
                     indent=1,
                 )
@@ -820,24 +547,19 @@ def compose_output(
     timings: dict,
     errors: dict,
     sf_dir: str,
-    calibration: dict | None = None,
-    retimed: dict | None = None,
-    loaded_queries: dict | None = None,
-    regression_candidates: dict | None = None,
+    run_facts: dict | None = None,
     cpu_timings: dict | None = None,
     jvm_cpu_timings: dict | None = None,
     py_cpu_timings: dict | None = None,
     cpu_regression_candidates: dict | None = None,
+    cpu_ref_skipped: str | None = None,
 ) -> tuple[str, dict]:
     """(compact stdout line, full detail dict). The line carries
     totals + the 10 slowest queries (2 dp); the full per-query map
-    goes to the detail sidecar/stderr. If the line would exceed
-    LINE_BUDGET the query map is dropped entirely rather than ever
-    overflowing the driver's capture window. ``retimed`` (query ->
-    total pass count) and ``loaded_queries`` (query -> best/quiet
-    ratio for queries STILL inflated after the retry budget) ride the
-    detail sidecar, and loaded_queries also rides the line (small by
-    construction — non-empty only under sustained co-tenant load)."""
+    goes to the detail sidecar/stderr. ``run_facts`` (cpus, master,
+    host, load) rides both. If the line would exceed LINE_BUDGET the
+    query maps are dropped entirely rather than ever overflowing the
+    driver's capture window."""
     total = round(sum(t for t in timings.values() if isinstance(t, (int, float))), 4)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -847,17 +569,10 @@ def compose_output(
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        **(run_facts or {}),
     }
     if errors:
         detail["errors"] = errors
-    if calibration is not None:
-        detail["calibration"] = calibration
-    if retimed:
-        detail["retimed_passes"] = retimed
-    if loaded_queries:
-        detail["loaded_queries"] = loaded_queries
-    if regression_candidates:
-        detail["regression_candidates"] = regression_candidates
     if cpu_timings:
         # the load-robust channel the round-over-round comparison
         # trusts: whole-process-tree CPU (covers Python codec stages)
@@ -872,6 +587,8 @@ def compose_output(
         # Python channel (actual Python work, never JVM GC/JIT noise)
         detail["py_cpu_queries"] = py_cpu_timings
         detail["py_cpu_sec"] = round(sum(py_cpu_timings.values()), 2)
+    if cpu_ref_skipped:
+        detail["cpu_ref_skipped"] = cpu_ref_skipped
     if cpu_regression_candidates:
         detail["cpu_regression_candidates"] = cpu_regression_candidates
     slowest = dict(
@@ -889,9 +606,8 @@ def compose_output(
         "n_queries": len(timings),
         "n_errors": len(errors),
         "detail": "BENCH_DETAIL.json",
+        **(run_facts or {}),
     }
-    if calibration is not None:
-        payload["calibration"] = calibration
     if cpu_timings:
         payload["cpu_sec"] = round(sum(cpu_timings.values()), 2)
     if jvm_cpu_timings:
@@ -901,21 +617,9 @@ def compose_output(
             sorted(cpu_regression_candidates.items(), key=lambda kv: -kv[1])[:5]
         )
         payload["n_cpu_regression_candidates"] = len(cpu_regression_candidates)
-    if loaded_queries:
-        payload["loaded_queries"] = dict(
-            sorted(loaded_queries.items(), key=lambda kv: -kv[1])[:5]
-        )
-        payload["n_loaded"] = len(loaded_queries)
-    if regression_candidates:
-        payload["regression_candidates"] = dict(
-            sorted(regression_candidates.items(), key=lambda kv: -kv[1])[:5]
-        )
-        payload["n_regression_candidates"] = len(regression_candidates)
     line = json.dumps(payload)
     if len(line) > LINE_BUDGET:  # drop the maps rather than overflow
         payload["queries"] = {}
-        payload.pop("loaded_queries", None)
-        payload.pop("regression_candidates", None)
         payload.pop("cpu_regression_candidates", None)
         line = json.dumps(payload)
     return line, detail

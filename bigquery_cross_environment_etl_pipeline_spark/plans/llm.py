@@ -24,7 +24,7 @@ from ..queries_catalog import register
 from ..sources.registry import load_table, table_path
 
 
-def _estimated_scan_partitions(spark: SparkSession, path: str) -> int:
+def _estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
     """How many partitions Spark's file-source packing would give a
     parquet scan of ``path`` — computed from os.stat with the SAME
     split math as ``FilePartition.maxSplitBytes`` (bytes-per-core
@@ -32,9 +32,11 @@ def _estimated_scan_partitions(spark: SparkSession, path: str) -> int:
     costs nothing. (The exact check — ``df.rdd.getNumPartitions()`` —
     measured ~0.25 s PER DATAFRAME of physical-planning machinery,
     which across the ~20 gated queries cost more than the repartition
-    decision it served.) Falls back to 1 on any stat error: 'assume
-    narrow' only ever re-adds the tiny local re-spread, never loses
-    scale parallelism."""
+    decision it served.) None when ``path`` cannot be stat'ed: an
+    object-store URI (``s3a://``, ``gs://``) is exactly the many-file
+    corpus that already arrives wide, so guessing 'narrow' there would
+    force a corpus-sized exchange to fix a problem only the local
+    single-file artifact has."""
     try:
         if os.path.isdir(path):
             sizes = [
@@ -78,20 +80,21 @@ def _estimated_scan_partitions(spark: SparkSession, path: str) -> int:
             parts += 1
         return max(1, parts)
     except (OSError, ValueError):
-        return 1
+        return None
 
 
 def _gate_repartition(
-    df: DataFrame, parallelism: int, n_partitions: int
+    df: DataFrame, parallelism: int, n_partitions: int | None
 ) -> DataFrame:
     """Round-robin ``repartition(parallelism)`` ONLY when the input
-    has fewer partitions — an explicit-N repartition is a real
-    exchange AQE never elides, so a source that already carries the
-    parallelism (many-file ingest at scale, ``n_partitions`` from
-    ``_estimated_scan_partitions``) must not pay it. Returns the
-    input object unchanged in that case (identity asserted by
+    is known to have fewer partitions — an explicit-N repartition is
+    a real exchange AQE never elides, so a source that already
+    carries the parallelism (many-file ingest at scale, ``n_partitions``
+    from ``_estimated_scan_partitions``) or whose width is unknown
+    (``None``: a path that cannot be stat'ed) must not pay it. Returns
+    the input object unchanged in that case (identity asserted by
     tests/test_optimization_r12.py)."""
-    if n_partitions >= parallelism:
+    if n_partitions is None or n_partitions >= parallelism:
         return df
     return df.repartition(parallelism)
 

@@ -44,45 +44,6 @@ def test_total_is_sum_of_timings():
     assert d["queries"] == {"b": 2.25, "a": 1.5}
 
 
-def test_calibration_field_rides_the_line():
-    """The calibration probe (VERDICT r5 item 5) must appear in BOTH
-    the stdout line and the detail sidecar, with the load flag derived
-    from the committed quiet reference — and must never push the line
-    over the tail-capture budget."""
-    cal = bench.calibrate(samples=1)
-    assert cal["spin_sec"] > 0
-    assert cal["quiet_sec"] == bench.CALIBRATION_QUIET_SEC
-    # loaded is judged on the WORSE of the single- and multi-core
-    # factors (ADVICE r6: an mt-only load must not read as quiet);
-    # asserting only the single-core factor raced real background load
-    assert cal["loaded"] == (
-        max(cal["load_factor"], cal["load_factor_mt"])
-        > bench.CALIBRATION_LOADED_FACTOR
-    )
-    line, detail = bench.compose_output(
-        *_mk(200), "/root/testdata/sf0.1", cal
-    )
-    assert len(line) <= bench.LINE_BUDGET
-    d = json.loads(line)
-    assert d["calibration"] == cal == detail["calibration"]
-
-
-def test_calibration_includes_the_parallel_spin():
-    """The MULTI-CORE probe (round-6 addition): co-tenant load can eat
-    cores without slowing any single thread, so the calibration must
-    carry a parallel spin beside the single-core one, and the loaded
-    flag must consider BOTH factors."""
-    cal = bench.calibrate(samples=1)
-    assert cal["spin_mt_sec"] > 0
-    assert cal["load_factor_mt"] == round(
-        cal["spin_mt_sec"] / bench.CALIBRATION_MT_QUIET_SEC, 3
-    )
-    assert cal["loaded"] == (
-        max(cal["load_factor"], cal["load_factor_mt"])
-        > bench.CALIBRATION_LOADED_FACTOR
-    )
-
-
 def test_bench_list_is_registered():
     """Every BENCH_QUERIES name must exist in the registry — a rename
     that forgets bench.py should fail here, not as a silent
@@ -94,80 +55,53 @@ def test_bench_list_is_registered():
     assert not missing, missing
 
 
-def test_needs_retime_triggers():
-    """Load-outlier re-timing (VERDICT r8 item 2): a best pass > 3x
-    the committed quiet reference keeps re-timing; a >3x two-pass
-    split earns exactly one confirming pass; sub-100ms references are
-    below the noise floor and never arm the ratio trigger."""
-    # sustained load vs quiet ref: keeps triggering until best drops
-    assert bench.needs_retime([49.9, 50.1], quiet_ref=0.45)
-    assert bench.needs_retime([49.9, 50.1, 48.7], quiet_ref=0.45)
-    assert not bench.needs_retime([49.9, 50.1, 1.2], quiet_ref=0.45)
-    # transient spike: one confirming pass, then stop
-    assert bench.needs_retime([10.0, 1.0], quiet_ref=None)
-    assert not bench.needs_retime([10.0, 1.0, 1.1], quiet_ref=None)
-    # agreeing passes, no ref: credible as-is
-    assert not bench.needs_retime([1.0, 1.1], quiet_ref=None)
-    # noise floor: 3x of an 0.05s query is milliseconds, not load
-    assert not bench.needs_retime([0.3, 0.31], quiet_ref=0.05)
+# ---------------------------------------------------------------------------
+# run facts: cores, master, host and the steal-based load flag
+# ---------------------------------------------------------------------------
+
+_FACTS = {
+    "cpus": 32,
+    "master": "local[32]",
+    "host": {
+        "nproc": 32,
+        "spark_graft_cpus": "32",
+        "cpu_model": "Intel(R) Xeon(R) Platinum 8375C CPU @ 2.90GHz",
+        "mem_gb": 125.8,
+    },
+    "load": {"steal_pct": 0.12, "runq": 3.75, "loaded": False},
+}
 
 
-def test_quiet_reference_is_sf_scoped(tmp_path):
-    """A committed sf0.1 reference must not judge an sf0.01 run."""
-    import json as _json
-
-    p = tmp_path / "BENCH_QUIET.json"
-    p.write_text(
-        _json.dumps({"sf_dir": "/root/testdata/sf0.0417", "queries": {"q": 1.5}})
-    )
-    assert bench.load_quiet_reference(str(p)) == {}
-    p.write_text(
-        _json.dumps({"sf_dir": bench.SF_DIR, "queries": {"q": 1.5, "bad": "x"}})
-    )
-    assert bench.load_quiet_reference(str(p)) == {"q": 1.5}
-    assert bench.load_quiet_reference(str(tmp_path / "missing.json")) == {}
-
-
-def test_loaded_queries_annotation_rides_line_and_detail():
-    """Queries still inflated after the retry budget must be visible
-    in BOTH the stdout line (top-5) and the sidecar (all), and the
-    line must still fit the budget even with many annotations."""
-    timings, errors = _mk(120)
-    loaded = {f"some_quite_long_query_name_number_{i:04d}": 60.0 - i for i in range(30)}
-    retimed = {k: 5 for k in loaded}
+def test_run_facts_ride_line_and_detail_within_budget():
+    """cpus/master/host/load must reach BOTH the line and the detail
+    and survive the budget's map-dropping path at 1000 queries."""
+    timings, errors = _mk(1000, n_errors=5)
+    regress = {k: 9.99 for k in list(timings)[:50]}
     line, detail = bench.compose_output(
-        timings, errors, "/root/testdata/sf0.1",
-        retimed=retimed, loaded_queries=loaded,
+        timings, errors, "data/sf0.1", _FACTS,
+        cpu_timings={k: 0.9 for k in timings},
+        jvm_cpu_timings={k: 0.5 for k in timings},
+        cpu_regression_candidates=regress,
     )
     assert len(line) <= bench.LINE_BUDGET
     d = json.loads(line)
-    assert d["n_loaded"] == 30
-    assert len(d.get("loaded_queries", {})) <= 5
-    assert detail["loaded_queries"] == loaded
-    assert detail["retimed_passes"] == retimed
-    # quiet pass: no annotation keys at all
-    line2, detail2 = bench.compose_output(timings, errors, "/root/testdata/sf0.1")
-    assert "loaded_queries" not in detail2 and "retimed_passes" not in detail2
-    assert "n_loaded" not in json.loads(line2)
+    for key, want in _FACTS.items():
+        assert d[key] == want == detail[key], key
+    for key in ("metric", "value", "unit", "queries", "sf", "n_queries",
+                "n_errors", "detail"):
+        assert key in d, key
+    assert "calibration" not in d and "calibration" not in detail
 
 
-def test_quiet_pass_outliers_are_regression_candidates_not_load():
-    """Attribution (review finding, round 9): a >3x-over-quiet query
-    on a pass whose calibration measured QUIET is a genuine
-    regression candidate — compose_output must carry it under
-    `regression_candidates`, never under the load label that tells
-    future readers to ignore it."""
-    timings, errors = _mk(10)
-    cands = {"q_regressed": 4.2}
-    line, detail = bench.compose_output(
-        timings, errors, "/root/testdata/sf0.1",
-        regression_candidates=cands,
-    )
-    d = json.loads(line)
-    assert detail["regression_candidates"] == cands
-    assert d["regression_candidates"] == {"q_regressed": 4.2}
-    assert d["n_regression_candidates"] == 1
-    assert "loaded_queries" not in detail and "n_loaded" not in d
+def test_loaded_follows_steal_limit():
+    limit = bench.STEAL_LIMIT_PCT
+    assert bench.load_block({"steal_pct": limit, "runq": 1.0})["loaded"]
+    assert bench.load_block({"steal_pct": limit + 5.0, "runq": 0.0})["loaded"]
+    quiet = bench.load_block({"steal_pct": limit - 0.01, "runq": 12.345})
+    # run-queue length is reported, never judged
+    assert quiet == {"steal_pct": round(limit - 0.01, 2), "runq": 12.35,
+                     "loaded": False}
+    assert bench.load_block(None) is None  # no /proc: the field degrades
 
 
 # ---------------------------------------------------------------------------
@@ -199,59 +133,84 @@ def test_cpu_channel_rides_detail_and_line_within_budget():
 
 
 def test_cpu_regressions_flags_only_real_ratios():
+    # one case per channel for each rule: a: 1.75x > 1.5 -> flagged;
+    # b: 1.2x -> clean; tiny: below the 0.5s channel floor -> never
+    # arms; gone: unmeasured -> skipped
     ref = {"a": 2.0, "b": 1.0, "tiny": 0.05, "gone": 3.0}
     got = {"a": 3.5, "b": 1.2, "tiny": 5.0}
-    out = bench.cpu_regressions(got, ref)
-    # a: 1.75x > 1.5 -> flagged; b: 1.2x -> clean; tiny: below the
-    # 100ms noise floor -> never arms; gone: unmeasured -> skipped
-    assert out == {"a": 1.75}
+    assert bench.cpu_regressions(got, ref, {}, {}) == {"a": 1.75}
+    assert bench.cpu_regressions({}, {}, got, ref) == {"a": 1.75}
 
 
 def test_proc_tree_cpu_monotonic_and_positive():
-    c0 = bench.proc_tree_cpu_sec()
+    tree = bench.procstat.ProcessTree()
+    c0 = bench._probe(tree.cpu)
     if c0 is None:  # non-Linux degrade path
         return
     acc = 0
     for i in range(2_000_000):
         acc += i * i & 1023
     _ = acc
-    c1 = bench.proc_tree_cpu_sec()
-    assert c1 >= c0 > 0
+    c1 = bench._probe(tree.cpu)
+    assert c1["total"] >= c0["total"] > 0
+    assert c1["worker"] >= c0["worker"] >= 0
+
+
+def _write_ref(path, sf_dir, host):
+    path.write_text(json.dumps({"sf_dir": sf_dir, "host": host,
+                                "jvm_cpu_queries": {"a": 2.0, "bad": "x"},
+                                "py_cpu_queries": {"a": 0.5}}))
 
 
 def test_cpu_reference_ignores_other_scale(tmp_path):
     p = tmp_path / "ref.json"
-    p.write_text(json.dumps({"sf_dir": "/root/testdata/sf0.1",
-                             "cpu_queries": {"a": 1.0},
-                             "jvm_cpu_queries": {"a": 0.4},
-                             "py_cpu_queries": {"a": 0.5}}))
-    want = (
-        ({"a": 1.0}, {"a": 0.4}, {"a": 0.5})
-        if bench.SF_DIR == "/root/testdata/sf0.1"
-        else ({}, {}, {})
+    host = _FACTS["host"]
+    _write_ref(p, bench.SF_DIR + "7", host)
+    assert bench.load_cpu_reference(host, str(p)) == ({}, {}, "other sf")
+    _write_ref(p, bench.SF_DIR, host)
+    assert bench.load_cpu_reference(host, str(p)) == (
+        {"a": 2.0}, {"a": 0.5}, None
     )
-    assert bench.load_cpu_reference(str(p)) == want
+    assert bench.load_cpu_reference(host, str(tmp_path / "missing.json")) == (
+        {}, {}, "no reference"
+    )
+
+
+def test_cpu_reference_is_host_scoped(tmp_path):
+    """CPU seconds from another machine are not comparable: a reference
+    stamped for another host turns the detector off and says why; the
+    same reference on its own host flags a 1.75x channel."""
+    p = tmp_path / "ref.json"
+    here = _FACTS["host"]
+    other = dict(here, nproc=4, cpu_model="AMD EPYC 7B13")
+    got = {"a": 3.5}
+    _write_ref(p, bench.SF_DIR, other)
+    jvm_ref, py_ref, skipped = bench.load_cpu_reference(here, str(p))
+    assert (jvm_ref, py_ref, skipped) == ({}, {}, "host mismatch")
+    assert bench.cpu_regressions(got, jvm_ref, {}, py_ref) == {}
+    _, detail = bench.compose_output({"a": 1.0}, {}, bench.SF_DIR,
+                                     cpu_ref_skipped=skipped)
+    assert detail["cpu_ref_skipped"] == "host mismatch"
+    # an unstamped reference (no host facts) never matches either
+    assert bench.load_cpu_reference(None, str(p))[2] == "host mismatch"
+
+    _write_ref(p, bench.SF_DIR, here)
+    jvm_ref, py_ref, skipped = bench.load_cpu_reference(here, str(p))
+    assert skipped is None
+    assert bench.cpu_regressions(got, jvm_ref, {}, py_ref) == {"a": 1.75}
 
 
 def test_cpu_regressions_two_channel_detector():
     # JVM channel: armed at >=0.5s ref; Python channel: worker CPU
-    # measured directly; whole-tree never arms when class refs exist
+    # measured directly
     jvm_ref = {"jq": 2.0, "tiny_jvm": 0.2, "both": 1.0}
     jvm_got = {"jq": 3.5, "tiny_jvm": 2.0, "both": 1.1}
     py_ref = {"pq": 4.0, "tiny_py": 0.3, "both": 3.0}
     py_got = {"pq": 7.0, "tiny_py": 3.0, "both": 5.1}
-    tree_ref = {"jq": 9.0, "pq": 9.0, "both": 9.0, "tree_only": 9.0}
-    tree_got = {"jq": 1.0, "pq": 1.0, "both": 1.0, "tree_only": 90.0}
-    out = bench.cpu_regressions(
-        tree_got, tree_ref, jvm_got, jvm_ref, py_got, py_ref
-    )
+    out = bench.cpu_regressions(jvm_got, jvm_ref, py_got, py_ref)
     # jq: jvm 1.75x flags; pq: py 1.75x flags; both: py 1.7x flags;
-    # tiny_*: below channel floors never arm; tree_only: the tree
-    # fallback is OFF when per-class references exist
+    # tiny_*: below channel floors never arm
     assert out == {"jq": 1.75, "pq": 1.75, "both": 1.7}
-    # legacy reference (no per-class maps): tree fallback with 2s floor
-    legacy = bench.cpu_regressions({"a": 3.5, "b": 5.0}, {"a": 2.0, "b": 1.0})
-    assert legacy == {"a": 1.75}
 
 
 def test_jvm_cpu_meter_measures_real_stages(spark):

@@ -8,7 +8,9 @@ claims to preserve:
   carries the requested parallelism (VERDICT r11 item 3 — an
   explicit-N repartition is a real shuffle AQE cannot elide, so the
   many-file 100 TB ingest must not pay it), and still re-spreads the
-  degenerate few-partition scan.
+  degenerate few-partition scan — and adds none when the scan's
+  width is unknown because its path cannot be stat'ed (an object-store
+  URI is the many-file corpus, not the local single-file artifact).
 - ``char_spaced``/``doc_symbols``' split/join spacing (round 12) is
   value-identical to the round-9 per-char capture regex it replaced,
   pinned both directly on edge strings and end-to-end through
@@ -50,6 +52,23 @@ def test_gate_repartition_respreads_narrow_input(spark):
     assert out is not df
     assert out.rdd.getNumPartitions() == 4
     assert sorted(r[0] for r in out.collect()) == list(range(100))
+
+
+def test_unstatable_path_adds_no_exchange(spark):
+    """A path os.stat cannot see (object-store URI) has an unknown
+    width: the gate must not force a corpus-sized round-robin exchange
+    onto it."""
+    from bigquery_cross_environment_etl_pipeline_spark.plans.llm import (
+        _estimated_scan_partitions,
+    )
+
+    n = _estimated_scan_partitions(spark, "s3a://corpus-bucket/documents.parquet")
+    assert n is None
+    df = spark.range(100).coalesce(1)
+    out = _gate_repartition(df, spark.sparkContext.defaultParallelism, n)
+    assert out is df
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_estimated_scan_partitions_matches_spark(spark, tmp_path):

@@ -1,7 +1,15 @@
 #!/usr/bin/env python
-"""Per-query CPU attribution: split the bench's process-tree CPU meter
-into driver-python / JVM / worker-python classes so optimization effort
-lands where the cycles actually are (guide §1: measure first).
+"""Per-query CPU attribution: split the process-tree CPU of each pass
+into driver / JVM / worker classes so optimization effort lands where
+the cycles actually are.
+
+The meter is ``perfbench/procstat.py``'s ``ProcessTree``, the one
+bench.py uses. It classes each process by its own name: ``java`` is
+jvm, ``python*`` is worker, and any other process (a shell helper the
+JVM forks, say) counts under its parent's class. A worker that exits
+between two snapshots has its CPU reappear in its parent's reaped-child
+counters, so during worker churn the jvm/worker split is approximate
+(totals stay correct); compare steady-state passes.
 
 Usage: python tools/cpu_attr.py <query> [<query> ...] [--sf DIR] [--passes N]
 """
@@ -16,59 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.1"
 
+sys.path.insert(0, os.path.join(sys.path[0], "perfbench"))
 
-def tree_cpu_by_class() -> dict[str, float]:
-    """utime+stime (+reaped-children cutime/cstime) per process class
-    for this pid's descendant tree. Matches bench.py's meter on
-    purpose. Caveat: a worker that EXITS between two snapshots has its
-    CPU reappear in the parent's cutime — so during worker churn the
-    jvm/worker split is approximate (totals stay correct); compare
-    steady-state passes."""
-    tick = os.sysconf("SC_CLK_TCK")
-    stats: dict[int, tuple[int, str]] = {}
-    children: dict[int, list[int]] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as fh:
-                raw = fh.read()
-            comm = raw.split("(", 1)[1].rsplit(")", 1)[0]
-            rest = raw.rsplit(")", 1)[1].split()
-        except (OSError, IndexError):
-            continue
-        pid = int(d)
-        ppid = int(rest[1])
-        stats[pid] = (sum(int(x) for x in rest[11:15]), comm)
-        children.setdefault(ppid, []).append(pid)
-    me = os.getpid()
-    out = {"driver_py": 0.0, "jvm": 0.0, "worker_py": 0.0, "other": 0.0}
-    stack: list[tuple[int, bool]] = [(me, False)]
-    seen: set[int] = set()
-    while stack:
-        p, under_jvm = stack.pop()
-        if p in seen:
-            continue
-        seen.add(p)
-        cpu, comm = stats.get(p, (0, "?"))
-        is_jvm = comm == "java"
-        if p == me:
-            cls = "driver_py"
-        elif is_jvm:
-            cls = "jvm"
-        elif under_jvm:
-            # ANY non-java descendant of the JVM — the same rule
-            # bench.py's meter uses (ADVICE r11: the two walks used
-            # different comm filters, so the triage tool could
-            # disagree with the channel it triages). Shell helpers
-            # forked by the JVM land here in BOTH meters now.
-            cls = "worker_py"
-        else:
-            cls = "other"
-        out[cls] += cpu / tick
-        for c in children.get(p, []):
-            stack.append((c, under_jvm or is_jvm))
-    return out
+import procstat  # noqa: E402
 
 
 def main() -> None:
@@ -91,21 +49,21 @@ def main() -> None:
     queries = queries_catalog.spark_queries()
     spark.read.parquet(os.path.join(sf, "region.parquet")).count()
 
+    tree = procstat.ProcessTree()
     for name in args:
         fn = queries[name]
         for p in range(passes):
             spark.sparkContext.setJobDescription(f"cpu_attr:{name}:{p}")
-            c0 = tree_cpu_by_class()
+            c0 = tree.cpu()
             t0 = time.perf_counter()
             fn(spark, sf).write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
-            c1 = tree_cpu_by_class()
-            d = {k: round(c1[k] - c0[k], 2) for k in c1}
-            total = round(sum(d.values()), 2)
+            c1 = tree.cpu()
+            d = {k: c1[k] - c0[k] for k in c1}
             print(
-                f"{name} pass{p}: wall={wall:6.2f}s cpu={total:7.2f}s "
-                f"driver_py={d['driver_py']:6.2f} jvm={d['jvm']:7.2f} "
-                f"worker_py={d['worker_py']:7.2f} other={d['other']:5.2f}",
+                f"{name} pass{p}: wall={wall:6.2f}s "
+                f"driver={d['driver']:6.2f} jvm={d['jvm']:7.2f} "
+                f"worker={d['worker']:7.2f} total={d['total']:7.2f}",
                 flush=True,
             )
     spark.stop()
