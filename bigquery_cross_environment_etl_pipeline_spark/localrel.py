@@ -25,6 +25,8 @@ path, and changing that per-host behaviour is not this helper's job.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -73,3 +75,19 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return out
     except Exception:  # noqa: BLE001 — constant data, correctness first
         return spark.createDataFrame(rows, schema)
+
+
+def has_parquet(path: str) -> bool:
+    """Whether ``path`` is a directory holding at least one parquet file:
+    the existence test of the small driver-managed engine tables
+    (checkpoint log, config store, rollup)."""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for f in os.listdir(path)
+    )
+
+
+def overwrite_local(spark: SparkSession, rows, schema, path: str) -> None:
+    """Rewrite the small table at ``path`` as one parquet file holding
+    ``rows``. The rows are already on the driver and enter the plan as a
+    LocalRelation, so they may have been read from ``path`` itself."""
+    local_df(spark, rows, schema).coalesce(1).write.mode("overwrite").parquet(path)

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import TimestampType
 
+from ..localrel import has_parquet
 from ..schemas import CHECKPOINT_SCHEMA, STATUS_SUCCESS, VALID_STATUSES
 
 #: CHECKPOINT_SCHEMA in arrow terms: timestamps are timestamp[us, UTC],
@@ -75,13 +76,8 @@ class CheckpointLog:
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
     def read(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
@@ -120,7 +116,7 @@ class CheckpointLog:
 
     def last_success_watermark(self, org_id: int, project_id: str) -> dt.datetime | None:
         """S4: latest SUCCESS end_date_time for one tenant (T1)."""
-        if not self._exists():
+        if not has_parquet(self.path):
             return None
         found = ds.dataset(self.path, schema=_ARROW_SCHEMA, format=_PARQUET_FORMAT).to_table(
             columns=["end_date_time"],

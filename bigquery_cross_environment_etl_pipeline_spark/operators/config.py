@@ -18,11 +18,10 @@ config is a small engine table:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import has_parquet, overwrite_local
 from ..schemas import CONFIG_SCHEMA, STEP_STATUS_SCHEMA
 
 CONFIG_COLUMNS = (
@@ -47,13 +46,8 @@ class ConfigStore:
         self.schema = schema
         self.key_cols = tuple(key_cols)
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
     def read(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(self.path)
 
@@ -77,10 +71,7 @@ class ConfigStore:
                 f"NULL key column ({', '.join(self.key_cols)}); refusing to "
                 "rewrite — repair the store instead"
             )
-        from ..localrel import local_df
-
-        out = local_df(self.spark, rows, self.schema)
-        out.coalesce(1).write.mode("overwrite").parquet(self.path)
+        overwrite_local(self.spark, rows, self.schema, self.path)
 
     # -- S3 ------------------------------------------------------------
     def lookup(self, org_id: int) -> Row | None:

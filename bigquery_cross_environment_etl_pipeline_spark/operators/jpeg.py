@@ -525,6 +525,46 @@ def _encode_block(
     return zz[0]
 
 
+def _mcu_units(arrs, sampling, width, height) -> list[list[tuple[int, int, int]]]:
+    """Interleaved MCU walk of a scan over every component: one unit per
+    MCU in raster order, each listing its blocks as (component, block
+    row, block column) in scan order. A single-component scan is one
+    block per MCU."""
+    if len(arrs) == 1:
+        by, bx = arrs[0].shape[:2]
+        return [[(0, y, x)] for y in range(by) for x in range(bx)]
+    hmax = max(h for h, _ in sampling)
+    vmax = max(v for _, v in sampling)
+    mx = -(-width // (8 * hmax))
+    my = -(-height // (8 * vmax))
+    return [
+        [
+            (ci, y * sv + v, x * sh + hh)
+            for ci, (sh, sv) in enumerate(sampling)
+            for v in range(sv)
+            for hh in range(sh)
+        ]
+        for y in range(my)
+        for x in range(mx)
+    ]
+
+
+def _component_units(
+    ci, arrs, sampling, width, height
+) -> list[list[tuple[int, int, int]]]:
+    """Non-interleaved walk of a scan over component ``ci`` alone: one
+    block per unit over the component's SAMPLED grid (not the padded
+    MCU grid)."""
+    sh, sv = sampling[ci]
+    if len(arrs) == 1:
+        nbx, nby = -(-width // 8), -(-height // 8)
+    else:
+        cw = -(-width * sh // max(h for h, _ in sampling))
+        chh = -(-height * sv // max(v for _, v in sampling))
+        nbx, nby = -(-cw // 8), -(-chh // 8)
+    return [[(ci, y, x)] for y in range(nby) for x in range(nbx)]
+
+
 def _validate_and_headers(
     comps,
     width,
@@ -1070,8 +1110,6 @@ def encode_jpeg_progressive_from_coeffs(
         progressive_ac=True, precision=precision,
     )
     n = len(arrs)
-    hmax = max(h for h, _ in sampling)
-    vmax = max(v for _, v in sampling)
     dc_codes = [DC12_CODES if precision == 12 else DC_LUMA_CODES]
     ac_codes = [PROG_AC_CODES]
     if n == 3:
@@ -1083,34 +1121,12 @@ def encode_jpeg_progressive_from_coeffs(
     def zz_of(ci: int, by: int, bx: int) -> list[int]:
         return zz_all[ci][by][bx]
 
-    def dc_units():
-        """Interleaved MCU walk (same order as the sequential scan)."""
-        if n == 1:
-            by, bx = arrs[0].shape[:2]
-            return [[(0, y, x)] for y in range(by) for x in range(bx)]
-        mx = -(-width // (8 * hmax))
-        my = -(-height // (8 * vmax))
-        return [
-            [
-                (ci, y * sv + v, x * sh + hh)
-                for ci, (sh, sv) in enumerate(sampling)
-                for v in range(sv)
-                for hh in range(sh)
-            ]
-            for y in range(my)
-            for x in range(mx)
-        ]
-
-    def ac_units(ci: int):
-        """Non-interleaved walk over the component's SAMPLED grid."""
-        sh, sv = sampling[ci]
-        if n == 1:
-            nbx, nby = -(-width // 8), -(-height // 8)
-        else:
-            cw = -(-width * sh // hmax)
-            chh = -(-height * sv // vmax)
-            nbx, nby = -(-cw // 8), -(-chh // 8)
-        return [[(ci, y, x)] for y in range(nby) for x in range(nbx)]
+    # DC scans walk interleaved MCUs (the sequential scan's order), AC
+    # scans one component at a time
+    mcus = _mcu_units(arrs, sampling, width, height)
+    comp_units = [
+        _component_units(ci, arrs, sampling, width, height) for ci in range(n)
+    ]
 
     def emit_scan(scan_comps, units, ss, se, ah, al, block_fn):
         nonlocal out
@@ -1163,16 +1179,16 @@ def encode_jpeg_progressive_from_coeffs(
         return fn
 
     all_comps = [(i + 1, min(i, 1), min(i, 1)) for i in range(n)]
-    emit_scan(all_comps, dc_units(), 0, 0, 0, al_dc, dc_first)
+    emit_scan(all_comps, mcus, 0, 0, 0, al_dc, dc_first)
     for ci in range(n):
         sel = [(ci + 1, min(ci, 1), min(ci, 1))]
-        emit_scan(sel, ac_units(ci), 1, 5, 0, al_ac, ac_scan(1, 5, 0, al_ac))
-        emit_scan(sel, ac_units(ci), 6, 63, 0, al_ac, ac_scan(6, 63, 0, al_ac))
-    emit_scan(all_comps, dc_units(), 0, 0, al_dc, 0, dc_refine)
+        emit_scan(sel, comp_units[ci], 1, 5, 0, al_ac, ac_scan(1, 5, 0, al_ac))
+        emit_scan(sel, comp_units[ci], 6, 63, 0, al_ac, ac_scan(6, 63, 0, al_ac))
+    emit_scan(all_comps, mcus, 0, 0, al_dc, 0, dc_refine)
     for ci in range(n):
         sel = [(ci + 1, min(ci, 1), min(ci, 1))]
-        emit_scan(sel, ac_units(ci), 1, 5, 1, 0, ac_scan(1, 5, 1, 0))
-        emit_scan(sel, ac_units(ci), 6, 63, 1, 0, ac_scan(6, 63, 1, 0))
+        emit_scan(sel, comp_units[ci], 1, 5, 1, 0, ac_scan(1, 5, 1, 0))
+        emit_scan(sel, comp_units[ci], 6, 63, 1, 0, ac_scan(6, 63, 1, 0))
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 

@@ -660,15 +660,13 @@ def encode_jpeg_arithmetic_from_coeffs(
     entropy instead of Huffman). Restart markers terminate the coder
     (D.1.8 flush), emit RSTn, and reset statistics, predictors, and
     conditioning contexts."""
-    from .jpeg import _validate_and_headers, _sos_segment, _ZZFLAT
+    from .jpeg import _mcu_units, _sos_segment, _validate_and_headers, _ZZFLAT
 
     out, arrs, sampling, qtables = _validate_and_headers(
         comps, width, height, sampling, qtables, restart_interval, 0xC9,
         arithmetic=True,
     )
     n = len(arrs)
-    hmax = max(h for h, _ in sampling)
-    vmax = max(v for _, v in sampling)
     out += _sos_segment(
         [(i + 1, min(i, 1), min(i, 1)) for i in range(n)], 0, 63, 0, 0
     )
@@ -693,22 +691,7 @@ def encode_jpeg_arithmetic_from_coeffs(
         )
         _encode_ac_block(enc, state.ac_stats[acid], zz, DEFAULT_AC_KX)
 
-    if n == 1:
-        by, bx = arrs[0].shape[:2]
-        mcus = [[(0, y, x)] for y in range(by) for x in range(bx)]
-    else:
-        mx = -(-width // (8 * hmax))
-        my = -(-height // (8 * vmax))
-        mcus = [
-            [
-                (i, y * sv + v, x * sh + hh)
-                for i, (sh, sv) in enumerate(sampling)
-                for v in range(sv)
-                for hh in range(sh)
-            ]
-            for y in range(my)
-            for x in range(mx)
-        ]
+    mcus = _mcu_units(arrs, sampling, width, height)
     rst = 0
     for k, unit in enumerate(mcus):
         if restart_interval and k and k % restart_interval == 0:
@@ -897,46 +880,28 @@ def encode_jpeg_arithmetic_progressive_from_coeffs(
     scan runs its own QM coder and fresh statistics (F.1.4.1.1);
     restart markers terminate and re-initialize the coder inside a
     scan."""
-    from .jpeg import _validate_and_headers, _sos_segment, _ZZFLAT
+    from .jpeg import (
+        _ZZFLAT,
+        _component_units,
+        _mcu_units,
+        _sos_segment,
+        _validate_and_headers,
+    )
 
     out, arrs, sampling, qtables = _validate_and_headers(
         comps, width, height, sampling, qtables, restart_interval, 0xCA,
         arithmetic=True,
     )
     n = len(arrs)
-    hmax = max(h for h, _ in sampling)
-    vmax = max(v for _, v in sampling)
     flats = [a.reshape(a.shape[0], a.shape[1], 64) for a in arrs]
     zz_all = [f[:, :, _ZZFLAT].tolist() for f in flats]
     tabs = {i: (min(i, 1), min(i, 1)) for i in range(n)}
     cond = (DEFAULT_DC_L, DEFAULT_DC_U)
 
-    def dc_units():
-        if n == 1:
-            by, bx = arrs[0].shape[:2]
-            return [[(0, y, x)] for y in range(by) for x in range(bx)]
-        mx = -(-width // (8 * hmax))
-        my = -(-height // (8 * vmax))
-        return [
-            [
-                (ci, y * sv + v, x * sh + hh)
-                for ci, (sh, sv) in enumerate(sampling)
-                for v in range(sv)
-                for hh in range(sh)
-            ]
-            for y in range(my)
-            for x in range(mx)
-        ]
-
-    def ac_units(ci: int):
-        sh, sv = sampling[ci]
-        if n == 1:
-            nbx, nby = -(-width // 8), -(-height // 8)
-        else:
-            cw = -(-width * sh // hmax)
-            chh = -(-height * sv // vmax)
-            nbx, nby = -(-cw // 8), -(-chh // 8)
-        return [[(ci, y, x)] for y in range(nby) for x in range(nbx)]
+    mcus = _mcu_units(arrs, sampling, width, height)
+    comp_units = [
+        _component_units(ci, arrs, sampling, width, height) for ci in range(n)
+    ]
 
     def emit_scan(scan_comps, units, ss, se, ah, al, block_fn):
         nonlocal out
@@ -988,14 +953,14 @@ def encode_jpeg_arithmetic_progressive_from_coeffs(
         return fn
 
     all_comps = [(i + 1, min(i, 1), min(i, 1)) for i in range(n)]
-    emit_scan(all_comps, dc_units(), 0, 0, 0, al_dc, dc_first)
+    emit_scan(all_comps, mcus, 0, 0, 0, al_dc, dc_first)
     for ci in range(n):
         sel = [(ci + 1, min(ci, 1), min(ci, 1))]
-        emit_scan(sel, ac_units(ci), 1, 5, 0, al_ac, ac_scan(1, 5, 0, al_ac))
-        emit_scan(sel, ac_units(ci), 6, 63, 0, al_ac, ac_scan(6, 63, 0, al_ac))
-    emit_scan(all_comps, dc_units(), 0, 0, al_dc, 0, dc_refine)
+        emit_scan(sel, comp_units[ci], 1, 5, 0, al_ac, ac_scan(1, 5, 0, al_ac))
+        emit_scan(sel, comp_units[ci], 6, 63, 0, al_ac, ac_scan(6, 63, 0, al_ac))
+    emit_scan(all_comps, mcus, 0, 0, al_dc, 0, dc_refine)
     for ci in range(n):
         sel = [(ci + 1, min(ci, 1), min(ci, 1))]
-        emit_scan(sel, ac_units(ci), 1, 63, 1, 0, ac_scan(1, 63, 1, 0))
+        emit_scan(sel, comp_units[ci], 1, 63, 1, 0, ac_scan(1, 63, 1, 0))
     out += b"\xff\xd9"
     return bytes(out)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from ..functions.scalar import epoch_seconds
+from .load import micros_timestamps
 
 
 def _numeric(col_name: str, df: DataFrame) -> Column:
@@ -92,14 +93,8 @@ def write_zordered(
     ``cols``: range-partition by the Morton key (one shuffle — globally
     disjoint file ranges), sort within each file (tight row-group
     stats), drop the key before writing."""
-    spark = df.sparkSession
-    # stats-bearing timestamp encoding, same reasoning as
-    # load.write_sorted_partitions; save/restore so the session-wide
-    # conf doesn't leak into whatever runs next
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    # stats-bearing timestamp encoding: tight row-group stats per file
+    with micros_timestamps(df.sparkSession):
         z = zorder_key(df, cols, bits)
         (
             df.withColumn("_zkey", z)
@@ -109,11 +104,6 @@ def write_zordered(
             .write.mode("overwrite")
             .parquet(dest_path)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
 
 
 def file_bounding_boxes(

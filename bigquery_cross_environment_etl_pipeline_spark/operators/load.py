@@ -24,6 +24,7 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime as dt
 
@@ -143,20 +144,27 @@ def write_sorted_partitions(
     by range on the sort key first — one shuffle, paid once at write
     time). ``max_records_per_file`` caps file size for downstream
     parallelism without a repartition."""
-    # INT96 (the default parquet timestamp encoding) carries NO
-    # row-group statistics — the entire point of this writer; force the
-    # stats-bearing INT64 micros encoding even on a vanilla session,
-    # restoring the previous value afterwards so the session-wide conf
-    # doesn't leak into whatever runs next.
-    spark = df.sparkSession
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    with micros_timestamps(df.sparkSession):
         writer = df.sortWithinPartitions(*sort_cols).write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
         writer.parquet(dest_path)
+
+
+@contextlib.contextmanager
+def micros_timestamps(spark):
+    """Write parquet timestamps as INT64 TIMESTAMP_MICROS inside the
+    block, restoring the session's previous setting afterwards so it
+    doesn't leak into whatever runs next. INT96, the default encoding,
+    carries NO row-group statistics, so a writer whose point is
+    prunable files must force the stats-bearing one, even on a vanilla
+    session. It has to be the session conf: the parquet writer ignores
+    ``outputTimestampType`` passed as a write option."""
+    conf_key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
+    try:
+        yield
     finally:
         if prev is None:
             spark.conf.unset(conf_key)

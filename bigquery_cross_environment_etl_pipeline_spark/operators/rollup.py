@@ -20,8 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .upsert import merge_upsert
-from ..localrel import local_df
+from ..localrel import has_parquet, overwrite_local
 
 ROLLUP_KEYS = ["bucket", "event_type"]
 
@@ -67,20 +66,13 @@ class RollupTable:
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
     def read(self) -> DataFrame | None:
-        return self.spark.read.parquet(self.path) if self._exists() else None
+        return self.spark.read.parquet(self.path) if has_parquet(self.path) else None
 
     def update(self, batch: DataFrame, ts_col: str = "ts") -> None:
         merged = merge_rollup(self.read(), aggregate_batch(batch, ts_col))
         # rollup is small (one row per bucket x dim); stage then rewrite
-        rows = merged.collect()
-        out = local_df(self.spark, rows, merged.schema)
-        out.coalesce(1).write.mode("overwrite").parquet(self.path)
+        overwrite_local(self.spark, merged.collect(), merged.schema, self.path)
 
     def serve(self) -> DataFrame:
         """Read-side view with derived measures (avg from partials)."""

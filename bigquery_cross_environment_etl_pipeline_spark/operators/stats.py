@@ -34,7 +34,7 @@ import tempfile
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.registry import dataset_fingerprint, load_table
+from ..sources.registry import index_cache_path, load_table
 
 #: Bump on any semantic change to what/how stats are computed so old
 #: sidecars can never serve new-semantics callers.
@@ -42,10 +42,9 @@ STATS_VERSION = 1
 
 
 def _stats_path(sf_dir: str, table: str) -> str:
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/root/repo/.indexes")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = dataset_fingerprint(sf_dir, table)
-    return f"{base}/stats_v{STATS_VERSION}_{tag}_{table}_{fp}.json"
+    return index_cache_path(
+        sf_dir, table, "stats_v{v}_{tag}_{table}_{fp}.json", v=STATS_VERSION
+    )
 
 
 def table_stats(

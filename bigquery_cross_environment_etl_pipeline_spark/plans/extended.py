@@ -16,10 +16,10 @@ from pyspark.sql import Window as W
 from ..functions.scalar import epoch_seconds, finite_metric
 from ..localrel import local_df
 from ..operators.joins import asof_join, range_join
-from ..operators.similarity import eligible_embeddings
 from ..operators.text import tokens
 from ..queries_catalog import TS_FMT_DUCK, TS_FMT_SPARK, register
-from ..sources.registry import load_table
+from ..sources.registry import index_cache_path, load_table
+from ._vectors import _first_vectors, _load_emb, _query_vector
 
 
 # --- as-of join (point-in-time lookup) --------------------------------------
@@ -912,27 +912,6 @@ def approx_distinct_and_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings corpus under the shared vector-eligibility
-    contract — the extended.py twin of plans/llm.py::_load_emb (one
-    idiom, two plan families): every ANN query and index build in this
-    file loads through here so a change to the eligible load can never
-    make the IVF family drift from the llm.py similarity family."""
-    return eligible_embeddings(load_table(spark, sf_dir, "embeddings"))
-
-
-def _duck_dot64(a: str, b: str) -> str:
-    """Unrolled left-associated dot chain at the engine's vector DIM —
-    bitwise-identical to ``similarity.dot_expr``'s fold and to the
-    driver-side Python ``sum()`` in ann_topk_ivf_probe. Delegates to
-    the single shared generator in plans/llm.py so the chain shape and
-    the dimension can never drift between the two oracle families."""
-    from ..operators import similarity
-    from .llm import _duck_dot
-
-    return _duck_dot(a, b, similarity.DIM)
-
-
 def _ivf_base_ctes(n_centroids: int, cent_name: str = "cent") -> str:
     """The IVF index-build half every stage-replay oracle shares —
     ``nrm`` (vector norms), ``{cent_name}`` (seed centroids = lowest-id
@@ -943,8 +922,8 @@ def _ivf_base_ctes(n_centroids: int, cent_name: str = "cent") -> str:
     to version). ``cent_name`` lets the IVF-PQ composition rename its
     IVF centroids to keep the PQ half's CTE names free."""
     from ..operators.similarity import eligible_emb_pred
+    from .llm import _duck_dot as dot
 
-    dot = _duck_dot64
     return f"""nrm AS MATERIALIZED (
       SELECT vec_id, embedding,
              sqrt({dot('embedding', 'embedding')}) AS nrm
@@ -975,7 +954,8 @@ def _ivf_single_query_ctes(
     (sim-then-cid centroid ranking, top ``nprobe`` cells) — the SQL
     replay of similarity._rank_probe_cids, including its zero-norm
     centroid exclusion (``cnrm > 0``)."""
-    dot = _duck_dot64
+    from .llm import _duck_dot as dot
+
     return f"""q AS (SELECT embedding AS qvec, nrm AS qnrm FROM nrm WHERE vec_id = {qid}),
     probe AS (
       SELECT cid FROM {cent_name}, q
@@ -994,7 +974,8 @@ def _ivf_oracle(
     top-k), and every float op is the same left-fold IEEE chain, so
     ANN-by-construction does not mean unverifiable: the oracle builds
     the identical index and probes it the identical way."""
-    dot = _duck_dot64
+    from .llm import _duck_dot as dot
+
     return f"""
     WITH {_ivf_base_ctes(n_centroids)},
     {_ivf_single_query_ctes(nprobe, qid)}
@@ -1026,16 +1007,21 @@ def ann_topk_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold-chain float math, so the oracle replays it stage for stage.
     Recall vs brute force and pruning correctness additionally asserted
     in tests/test_scale_ops.py."""
+    return _ivf_probe_top10(spark, sf_dir)
+
+
+def _ivf_probe_top10(
+    spark: SparkSession, sf_dir: str, refine_iters: int = 0
+) -> DataFrame:
+    """The single-query IVF probe every ``ann_topk_ivf*`` query serves:
+    the 10 nearest neighbours of vector 7, probing 4 of the 8 cells of
+    the persisted index built with ``refine_iters`` Lloyd iterations."""
     from ..operators.similarity import ann_topk_ivf_probe
 
     emb = _load_emb(spark, sf_dir)
-    index_path = _ivf_index(spark, sf_dir)
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    ]
+    index_path = _ivf_index(spark, sf_dir, refine_iters)
     return ann_topk_ivf_probe(
-        spark, index_path, qvec, k=10, nprobe=4, exclude_id=7
+        spark, index_path, _query_vector(emb, 7), k=10, nprobe=4, exclude_id=7
     )
 
 
@@ -1050,16 +1036,18 @@ def _ivf_index(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> str:
     import os
 
     from ..operators.similarity import IVF_BUILD_VERSION, ivf_index_persist
-    from ..sources.registry import dataset_fingerprint
 
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/root/repo/.indexes")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = dataset_fingerprint(sf_dir, "embeddings")
     # the cache key carries the BUILD-ALGORITHM version besides the
     # data fingerprint: a semantic change to assignment/refinement
     # (e.g. the round-4 tie-break change) must invalidate old indexes,
     # or the stage-replay oracles would compare against stale layout
-    index_path = f"{base}/ivf_v{IVF_BUILD_VERSION}_{tag}_{fp}_c8_r{refine_iters}"
+    index_path = index_cache_path(
+        sf_dir,
+        "embeddings",
+        "ivf_v{v}_{tag}_{fp}_c8_r{r}",
+        v=IVF_BUILD_VERSION,
+        r=refine_iters,
+    )
     if not os.path.exists(index_path + "/centroids/_SUCCESS"):
         # build from eligibility-contract vectors only (v4): a zero-norm
         # or NaN vector in the index poisons assignment and every probe
@@ -1080,17 +1068,7 @@ def ann_topk_ivf_probe_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic pipeline as ann_topk_ivf, so the same stage-replay
     SQL applies); pruning + member correctness additionally asserted
     in tests/test_scale_ops.py."""
-    from ..operators.similarity import ann_topk_ivf_probe
-
-    emb = _load_emb(spark, sf_dir)
-    index_path = _ivf_index(spark, sf_dir)
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    ]
-    return ann_topk_ivf_probe(
-        spark, index_path, qvec, k=10, nprobe=4, exclude_id=7
-    )
+    return _ivf_probe_top10(spark, sf_dir)
 
 
 def _ivf_batch_oracle(
@@ -1101,7 +1079,8 @@ def _ivf_batch_oracle(
     per-query top-k over the union of probed cells — the same
     determinism argument as ``_ivf_oracle``, vectorized over the
     query set."""
-    dot = _duck_dot64
+    from .llm import _duck_dot as dot
+
     return f"""
     WITH {_ivf_base_ctes(n_centroids)},
     q AS (
@@ -1151,10 +1130,7 @@ def ann_batch_topk_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _load_emb(spark, sf_dir)
     index_path = _ivf_index(spark, sf_dir)
-    qvecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5).collect()
-    }
+    qvecs = dict(_first_vectors(emb, 5))
     return ann_batch_topk_ivf_probe(
         spark, index_path, qvecs, k=10, nprobe=4
     )
@@ -1242,18 +1218,11 @@ def _ivfpq_serving_inputs(
 
     emb = _load_emb(spark, sf_dir)
     index_path = _ivf_index(spark, sf_dir)
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < similarity.PQ_K).collect()
-    ]
+    cents = _first_vectors(emb, similarity.PQ_K)
     pq_path = f"{index_path}/pq_v{similarity.PQ_STORE_VERSION}"
     if not os.path.exists(pq_path + "/_SUCCESS"):
         ivfpq_codes_persist(spark, index_path, cents)
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == qid).select("embedding").first()[0]
-    ]
-    return index_path, cents, qvec
+    return index_path, cents, _query_vector(emb, qid)
 
 
 def _lloyd_oracle(
@@ -1273,8 +1242,9 @@ def _lloyd_oracle(
     assignment CTE (argmax over the previous centroid CTE) plus one
     64-column fixed-point mean CTE with the empty-cell keep-old
     fallback replayed as a per-dimension COALESCE."""
+    from .llm import _duck_dot as dot
+
     dim = 64
-    dot = _duck_dot64
     scale = float(1 << 40)
 
     def mean_cols() -> str:
@@ -1387,17 +1357,7 @@ def ann_topk_ivf_kmeans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2 k-means iterations included) replays stage-for-stage in SQL
     (``_lloyd_oracle``); recall additionally asserted in
     tests/test_scale_ops.py."""
-    from ..operators.similarity import ann_topk_ivf_probe
-
-    emb = _load_emb(spark, sf_dir)
-    index_path = _ivf_index(spark, sf_dir, refine_iters=2)
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    ]
-    return ann_topk_ivf_probe(
-        spark, index_path, qvec, k=10, nprobe=4, exclude_id=7
-    )
+    return _ivf_probe_top10(spark, sf_dir, refine_iters=2)
 
 
 def _ivf_recall_oracle(n_queries: int = 5, k: int = 10, nprobe: int = 4) -> str:
@@ -1409,8 +1369,8 @@ def _ivf_recall_oracle(n_queries: int = 5, k: int = 10, nprobe: int = 4) -> str:
     approx arm so the nprobe-sweep query can replay one block per
     probe width."""
     from ..operators.similarity import eligible_emb_pred
+    from .llm import _duck_dot as dot
 
-    dot = _duck_dot64
     cos = (
         f"({dot('a.embedding', 'q.embedding')}) / "
         f"(sqrt({dot('a.embedding', 'a.embedding')})"
@@ -1472,10 +1432,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _load_emb(spark, sf_dir)
     index_path = _ivf_index(spark, sf_dir)
-    qvecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5).collect()
-    }
+    qvecs = dict(_first_vectors(emb, 5))
     approx = ann_batch_topk_ivf_probe(
         spark, index_path, qvecs, k=10, nprobe=4
     ).select(F.col("qid").alias("a_qid"), F.col("vec_id").alias("a_vec"))
@@ -1559,10 +1516,7 @@ def ann_recall_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _load_emb(spark, sf_dir)
     index_path = _ivf_index(spark, sf_dir)
-    qvecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5).collect()
-    }
+    qvecs = dict(_first_vectors(emb, 5))
     approx = None
     for np_ in _NPROBE_SWEEP:
         arm = ann_batch_topk_ivf_probe(

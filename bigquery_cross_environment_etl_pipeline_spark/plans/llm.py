@@ -21,7 +21,8 @@ from ..operators import bpe as bpe_ops
 from ..operators import dedup, similarity, sketches, text
 from ..operators.multimodal import extract_features, synthesize_assets
 from ..queries_catalog import register
-from ..sources.registry import load_table, table_path
+from ..sources.registry import index_cache_path, load_table, table_path
+from ._vectors import _first_vectors, _load_emb, _query_vector
 
 
 def _estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
@@ -180,19 +181,6 @@ def _duck_stop_filter(words_expr: str, stopwords: tuple[str, ...]) -> str:
 #: arm that does vector math filters its embeddings scans with this,
 #: exactly where the Spark side loads through ``_load_emb``.
 _emb_ok = similarity.eligible_emb_pred
-
-
-def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings corpus under the vector-eligibility contract
-    (similarity.embedding_eligible): NULL / non-finite / zero-norm
-    vectors are excluded at the LOAD of every vector-math query, so
-    candidate, verify, and serve stages all see the same corpus and no
-    undefined cosine can enter any plan. Queries that only touch ids
-    or row counts (e.g. contrastive_negative_samples) load unfiltered
-    on purpose."""
-    return similarity.eligible_embeddings(
-        load_table(spark, sf_dir, "embeddings")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1686,15 +1674,11 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> str:
     version-keyed exactly like the IVF/PQ caches, so a regenerated
     corpus or a tokenization change rebuilds instead of serving stale
     postings."""
-    import os
-
     from ..operators.retrieval import BM25_INDEX_VERSION, bm25_index_persist
-    from ..sources.registry import dataset_fingerprint
 
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/root/repo/.indexes")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = dataset_fingerprint(sf_dir, "documents")
-    index_path = f"{base}/bm25_v{BM25_INDEX_VERSION}_{tag}_{fp}"
+    index_path = index_cache_path(
+        sf_dir, "documents", "bm25_v{v}_{tag}_{fp}", v=BM25_INDEX_VERSION
+    )
     if not os.path.exists(index_path + "/stats/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents")
         bm25_index_persist(spark, docs, index_path)
@@ -1736,7 +1720,6 @@ def _bm25_incr_index(spark: SparkSession, sf_dir: str) -> str:
     atomically renamed into the fingerprint-keyed cache path (the
     stats-sidecar publish discipline), so a crash mid-append can never
     leave a half-built index that a later serve would read."""
-    import os
     import shutil
 
     from ..operators.retrieval import (
@@ -1744,12 +1727,10 @@ def _bm25_incr_index(spark: SparkSession, sf_dir: str) -> str:
         bm25_index_append,
         bm25_index_persist,
     )
-    from ..sources.registry import dataset_fingerprint
 
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/root/repo/.indexes")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = dataset_fingerprint(sf_dir, "documents")
-    index_path = f"{base}/bm25incr_v{BM25_INDEX_VERSION}_{tag}_{fp}"
+    index_path = index_cache_path(
+        sf_dir, "documents", "bm25incr_v{v}_{tag}_{fp}", v=BM25_INDEX_VERSION
+    )
     if not os.path.exists(index_path):
         docs = load_table(spark, sf_dir, "documents")
         tmp = f"{index_path}.tmp.{os.getpid()}"
@@ -4899,10 +4880,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. ADC recall against exact cosine is asserted in
     tests/test_llm_ops.py."""
     emb = _load_emb(spark, sf_dir)
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < similarity.PQ_K).collect()
-    ]
+    cents = _first_vectors(emb, similarity.PQ_K)
     return similarity.pq_encode(emb, cents)
 
 
@@ -4926,17 +4904,9 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing instead of 64 multiplies, and composing with the IVF
     partition pruning (ann_topk_ivf_probe) yields the canonical IVF-PQ
     serving stack."""
-    import math
-
     emb = _load_emb(spark, sf_dir)
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < similarity.PQ_K).collect()
-    ]
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    ]
+    cents = _first_vectors(emb, similarity.PQ_K)
+    qvec = _query_vector(emb, 7)
     sub_d = similarity.DIM // similarity.PQ_M
     # (M x K) ADC table: left-fold subspace squared-L2, driver-side
     table = []
@@ -5050,18 +5020,11 @@ def _sig_index(spark: SparkSession, sf_dir: str) -> str:
     (built on first use under $SPARK_GRAFT_INDEX_DIR) — the
     pay-once-per-corpus maintenance step every ingest's dedup check
     shares, mirroring the IVF index lifecycle."""
-    import os
-
-    from ..sources.registry import dataset_fingerprint
-
-    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/root/repo/.indexes")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # content fingerprint: a regenerated documents table rebuilds the
-    # index instead of serving stale signatures (the oracle recomputes
-    # from CURRENT data, so staleness here would hash-mismatch)
-    fp = dataset_fingerprint(sf_dir, "documents")
-    # build-algorithm version in the key, same reasoning as _ivf_index
-    index_path = f"{base}/sigs_v{dedup.SIG_INDEX_VERSION}_{tag}_{fp}"
+    # the content fingerprint in the key matters here: the oracle
+    # recomputes from CURRENT data, so stale signatures would mismatch
+    index_path = index_cache_path(
+        sf_dir, "documents", "sigs_v{v}_{tag}_{fp}", v=dedup.SIG_INDEX_VERSION
+    )
     if not os.path.exists(index_path + "/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents")
         dedup.signature_index_persist(

@@ -79,7 +79,6 @@ def dataset_fingerprint(sf_dir: str, table: str) -> str:
     REGENERATED dataset at the same path (or a different root whose
     leaf dir shares the name) can never serve a stale index."""
     import hashlib
-    import os
 
     p = os.path.join(sf_dir, f"{table}.parquet")
     # (name, size, mtime_ns): size alone misses a regenerated dataset
@@ -95,3 +94,25 @@ def dataset_fingerprint(sf_dir: str, table: str) -> str:
         st = os.stat(p)
         stats.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
     return hashlib.md5(repr(stats).encode()).hexdigest()[:10]
+
+
+#: where persisted indexes and sidecars live unless
+#: ``$SPARK_GRAFT_INDEX_DIR`` says otherwise: ``.indexes`` at the root of
+#: the checkout this package runs from
+_DEFAULT_INDEX_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".indexes",
+)
+
+
+def index_cache_path(sf_dir: str, table: str, name: str, **fields) -> str:
+    """Path of a persisted index or sidecar built from ``table`` of
+    ``sf_dir``. ``name`` is formatted with ``tag`` (the sf dir's leaf
+    name), ``table``, ``fp`` (``dataset_fingerprint``) and ``fields``
+    (the build version, index parameters), so a regenerated dataset or
+    a changed build algorithm gets a new path instead of a stale
+    cache."""
+    base = os.environ.get("SPARK_GRAFT_INDEX_DIR", _DEFAULT_INDEX_DIR)
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    fp = dataset_fingerprint(sf_dir, table)
+    return f"{base}/" + name.format(tag=tag, table=table, fp=fp, **fields)

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType, TimestampNTZType
 
+from ..operators.load import load_append
+
 
 def ensure_event_time(df: DataFrame) -> DataFrame:
     """Cast every TIMESTAMP_NTZ column to TIMESTAMP at the source
@@ -96,8 +98,11 @@ def stream_incremental_append(
     available_now: bool = True,
 ) -> StreamingQuery:
     """T4/T5: transactional append via foreachBatch — the write and the
-    status record commit per micro-batch with an idempotent batch id
-    (re-delivered batches overwrite, not duplicate).
+    status record commit per micro-batch with an idempotent batch id:
+    each epoch is loaded by ``load_append`` into its own ``_batch_id``
+    partition by dynamic overwrite, so a batch re-delivered after a
+    crash between the sink write and Spark's commit replaces its first
+    write instead of duplicating it.
 
     ``available_now=False`` runs the default continuous micro-batch
     trigger — required for sources that don't support
@@ -105,14 +110,11 @@ def stream_incremental_append(
     stops the query once the tail drains."""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        n = batch.count()
-        (
-            batch.withColumn("_batch_id", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(dest_path)
-        )
+        result = load_append(batch, dest_path, batch_id=str(epoch_id))
         if status_rows is not None:
-            status_rows.append({"epoch_id": epoch_id, "rows": n, "status": "SUCCESS"})
+            status_rows.append(
+                {"epoch_id": epoch_id, "rows": result.total_rows, "status": result.status}
+            )
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

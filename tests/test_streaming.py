@@ -4,6 +4,7 @@ watermark."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -47,6 +48,39 @@ def test_stream_incremental_append_exactly_once(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(dest).count() == 1000
+
+
+def test_stream_incremental_append_replayed_epoch_overwrites(spark, tmp_path):
+    """A crash after the sink wrote an epoch but before Spark committed it
+    re-delivers that epoch on restart; the replay must replace the first
+    write, not append a second copy of the batch."""
+    src = _events_source_dir(spark, tmp_path)
+    schema = spark.read.parquet(src).schema
+    dest = str(tmp_path / "dest")
+    ckpt = tmp_path / "ckpt"
+    statuses: list = []
+
+    q = stream_incremental_append(
+        read_stream(spark, src, schema), dest, str(ckpt), status_rows=statuses
+    )
+    q.awaitTermination(120)
+    assert spark.read.parquet(dest).count() == 1000
+
+    # simulate the crash: drop the newest commit, as if the process died
+    # between the foreachBatch write and Spark's commit of that epoch
+    last = max(int(f) for f in os.listdir(ckpt / "commits") if f.isdigit())
+    os.remove(ckpt / "commits" / str(last))
+    os.remove(ckpt / "commits" / f".{last}.crc")
+
+    q2 = stream_incremental_append(
+        read_stream(spark, src, schema), dest, str(ckpt), status_rows=statuses
+    )
+    q2.awaitTermination(120)
+    assert [s["epoch_id"] for s in statuses].count(last) == 2, "epoch replayed"
+    landed = spark.read.parquet(dest)
+    assert landed.count() == 1000
+    assert landed.select("event_id").distinct().count() == 1000
+    assert sum({s["epoch_id"]: s["rows"] for s in statuses}.values()) == 1000
 
 
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):
