@@ -8,20 +8,21 @@ Each query executes to completion through the noop sink (full plan runs,
 no driver-side result transfer skewing the numbers), twice; its time is
 the faster pass, since the first pays one-time codegen compilation.
 
-Measurement uses perfbench's /proc meters (perfbench/procstat.py):
+Measurement is perfbench's (perfbench/procstat.py, perfbench/tracer.py):
 
 - Load: a ``DisturbanceSampler`` runs across the whole query loop and
   reports hypervisor steal and the mean run-queue length. The run is
-  ``loaded`` when steal reached perfbench's ``STEAL_LIMIT_PCT``; no spin
-  loop and no per-host constant is involved.
-- CPU: every pass records the process-tree CPU (``ProcessTree``: total
-  and worker-python) and per-stage executorCpuTime. Co-tenant load
-  inflates wall clock but barely moves CPU, so these channels are the
-  regression signal, judged against BENCH_CPU_REF.json. That reference
-  is per host: ``--write-cpu-ref`` mints it stamped with
-  ``procstat.host_facts()``. A reference that is absent or stamped for
-  another host turns the detector off, and BENCH_DETAIL.json records
-  why as ``cpu_ref_skipped``.
+  ``loaded`` when steal reached perfbench's ``STEAL_LIMIT_PCT``.
+- Layers: every pass runs under a ``Tracer`` span ``query`` with two
+  children, ``plans.construct`` (the builder call) and ``exec`` (the
+  noop write). Each span sets its own Spark job group, so once the loop
+  ends every Spark job is attributed to the span that fired it and its
+  stage metrics are read from the AppStatusStore. BENCH_DETAIL.json
+  gets one ``layers`` row per query, for its reported pass, in
+  perfbench's metric names (``LAYER_KEYS``); ``cpu_s`` is the pass's
+  process-tree CPU (``ProcessTree``) and ``unattributed_s`` is the
+  wall time outside construction and Spark jobs (Catalyst planning and
+  driver work).
 """
 
 from __future__ import annotations
@@ -30,14 +31,15 @@ import json
 import os
 import re
 import sys
-import time
+import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 sys.path.insert(0, os.path.join(HERE, "perfbench"))
 
 import procstat  # noqa: E402
-from workloads import STEAL_LIMIT_PCT  # noqa: E402
+from tracer import Tracer  # noqa: E402
+from workloads import STEAL_LIMIT_PCT, _jvm_totals  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -223,28 +225,19 @@ BENCH_QUERIES = [
 ]
 
 
-# ---------------------------------------------------------------------------
-# CPU-time channel (VERDICT r10 item 1): co-tenant load inflates wall
-# clock but barely moves CPU, so CPU is the channel the round-over-round
-# regression comparison trusts. Two meters:
-#   - cpu_sec / py_cpu_sec: ``procstat.ProcessTree`` — CPU of the WHOLE
-#     PROCESS TREE rooted at this driver (JVM + pyspark daemon/workers +
-#     driver python) and its worker-python share, read from /proc —
-#     covers the Python codec stages executorCpuTime cannot see.
-#     Linux-only; degrades to absent elsewhere.
-#   - jvm_cpu_sec: per-stage executorCpuTime from the AppStatusStore,
-#     summed over the stages each pass submitted (stage-id floor per
-#     pass, so retained-stage eviction of OLD stages can never make a
-#     delta negative). JVM task CPU only — the whole-stage-codegen
-#     view of the same pass.
-# ---------------------------------------------------------------------------
-
-#: CPU ratio above which a query is flagged against the CPU reference.
-#: CPU needs no load headroom — 1.5x the reference CPU is a real
-#: plan/code change, not a busy box (frequency scaling + SMT contention
-#: stay well under it).
-CPU_REGRESSION_RATIO = 1.5
-CPU_REF_PATH = os.path.join(HERE, "BENCH_CPU_REF.json")
+#: one ``layers`` row per query, in perfbench's per-layer metric names
+LAYER_KEYS = (
+    "plans.construct_s",
+    "plans.construct_jobs",
+    "jvm.exec_s",
+    "jvm.executor_cpu_s",
+    "jvm.gc_s",
+    "jvm.shuffle_bytes",
+    "jvm.spill_bytes",
+    "worker.python_cpu_s",
+    "cpu_s",
+    "unattributed_s",
+)
 
 
 def _probe(fn):
@@ -270,176 +263,96 @@ def load_block(sample: dict[str, float] | None) -> dict | None:
     }
 
 
-class JvmCpuMeter:
-    """Per-pass executor CPU from Spark's AppStatusStore, read over
-    py4j (local mode: same JVM). ``mark()`` records the current max
-    stage id; ``read()`` sums executorCpuTime over stages submitted
-    since the mark, draining the listener bus first so asynchronous
-    metric aggregation cannot undercount a just-finished pass. Any
-    py4j surface change degrades the meter to None results — the
-    bench must never die on a metrics probe."""
-
-    def __init__(self, spark) -> None:
-        try:
-            sc = spark.sparkContext
-            self._store = sc._jsc.sc().statusStore()
-            self._bus = sc._jsc.sc().listenerBus()
-            self._jvm = sc._jvm
-            self._gw = sc._gateway
-            self._stages()  # probe the 5-arg stageList signature now
-            self._ok = True
-        except Exception:  # noqa: BLE001 — probe, not control flow
-            self._ok = False
-        self._floor = -1
-
-    def _stages(self):
-        empty = self._jvm.java.util.ArrayList()
-        quantiles = self._gw.new_array(self._jvm.double, 0)
-        return self._store.stageList(
-            empty, False, False, quantiles, self._jvm.java.util.ArrayList()
-        )
-
-    def mark(self) -> None:
-        if not self._ok:
-            return
-        try:
-            self._bus.waitUntilEmpty()
-            stages = self._stages()
-            self._floor = max(
-                [stages.apply(i).stageId() for i in range(stages.size())],
-                default=-1,
-            )
-        except Exception:  # noqa: BLE001
-            self._ok = False
-
-    def read(self) -> float | None:
-        """CPU seconds of all stages with id > the last mark()."""
-        if not self._ok:
-            return None
-        try:
-            self._bus.waitUntilEmpty()
-            stages = self._stages()
-            ns = sum(
-                stages.apply(i).executorCpuTime()
-                for i in range(stages.size())
-                if stages.apply(i).stageId() > self._floor
-            )
-            return ns / 1e9
-        except Exception:  # noqa: BLE001
-            self._ok = False
-            return None
+def run_pass(spark, tracer: Tracer, tree, name: str, fn, sf_dir: str) -> dict:
+    """One traced pass of one query: its ``query`` span record, with
+    its wall time (``wall``) and the process-tree CPU it spent
+    (``cpu``, when /proc can be read) attached."""
+    c0 = _probe(tree.cpu)
+    with tracer.span("query", query=name) as rec:
+        with tracer.span("plans.construct"):
+            df = fn(spark, sf_dir)
+        with tracer.span("exec"):
+            df.write.format("noop").mode("overwrite").save()
+    c1 = _probe(tree.cpu)
+    rec["wall"] = rec["end"] - rec["start"]
+    if c0 is not None and c1 is not None:
+        # clamp at 0: process churn between snapshots can produce a
+        # slightly negative delta
+        rec["cpu"] = {k: max(0.0, c1[k] - c0[k]) for k in ("total", "worker")}
+    return rec
 
 
-#: per-channel floors for arming the regression detector. Below them a
-#: channel is scheduler/GC-noise-dominated — measured round 11: between
-#: two back-to-back clean passes, sub-0.5s executorCpuTime references
-#: moved ~1.5x and the WHOLE-TREE CPU of sub-2s pure-JVM queries moved
-#: +/-1.5s (non-task GC/JIT attribution depends on what ran before),
-#: while worker-python CPU and >=0.5s executor CPU stayed flat.
-CPU_JVM_REF_FLOOR = 0.5
-CPU_WORKER_REF_FLOOR = 0.5
+def busy_s(intervals: list[tuple[float, float]]) -> float:
+    """Seconds during which at least one interval was open. AQE runs
+    independent shuffle and broadcast stages as concurrent jobs, so a
+    plain sum of job walls would count the overlap twice."""
+    total, reach = 0.0, float("-inf")
+    for start, end in sorted(intervals):
+        if end > reach:
+            total += end - max(start, reach)
+            reach = end
+    return total
 
 
-def load_cpu_reference(
-    host: dict | None, path: str = CPU_REF_PATH
-) -> tuple[dict[str, float], dict[str, float], str | None]:
-    """Per-query (JVM executor CPU, worker-python CPU) from the
-    reference ``--write-cpu-ref`` minted, and why it was skipped (None
-    when it applies). A reference judges only the sf dir and the host
-    it was minted on — CPU seconds from another machine are not
-    comparable — so one whose ``host`` stamp differs from ``host`` is
-    ignored. It CAN be minted on a loaded box: load-robustness is the
-    whole point of the channel."""
-    try:
-        with open(path) as fh:
-            d = json.load(fh)
-    except OSError:
-        return {}, {}, "no reference"
-    except ValueError:
-        return {}, {}, "unreadable"
-    if d.get("sf_dir") != SF_DIR:
-        return {}, {}, "other sf"
-    if host is None or d.get("host") != host:
-        return {}, {}, "host mismatch"
+def layer_rows(spark, tracer: Tracer, passes: dict[str, dict]) -> dict[str, dict]:
+    """The ``layers`` row of each query's reported pass (``passes``:
+    query -> its ``query`` span record from ``run_pass``). Jobs a
+    builder fires while it is built count as construction; ``jvm.exec_s``
+    is the wall time the ``exec`` span's jobs were running. Executor
+    CPU, GC, shuffle and spill cover every job of the pass."""
+    jobs = tracer.spark_jobs()
+    store = spark.sparkContext._jsc.sc().statusStore()
 
-    def clean(key: str) -> dict[str, float]:
-        return {
-            k: float(v)
-            for k, v in d.get(key, {}).items()
-            if isinstance(v, (int, float)) and v > 0
+    def interval(job_id: int) -> tuple[float, float]:
+        j = store.job(job_id)
+        return j.submissionTime().get().getTime() / 1e3, j.completionTime().get().getTime() / 1e3
+
+    rows = {}
+    for name, rec in passes.items():
+        kids = {s["name"]: s for s in tracer.spans if s["parent"] == rec["id"]}
+        construct, exec_ = kids["plans.construct"], kids["exec"]
+        mine = [j for j in jobs if j["span"] in (construct["id"], exec_["id"])]
+        row = {f"jvm.{k}": v for k, v in _jvm_totals(mine).items()}
+        row["plans.construct_s"] = construct["end"] - construct["start"]
+        row["plans.construct_jobs"] = sum(j["span"] == construct["id"] for j in mine)
+        row["jvm.exec_s"] = busy_s([interval(j["job"]) for j in mine if j["span"] == exec_["id"]])
+        cpu = rec.get("cpu", {})
+        row["worker.python_cpu_s"] = cpu.get("worker")
+        row["cpu_s"] = cpu.get("total")
+        row["unattributed_s"] = rec["wall"] - row["plans.construct_s"] - row["jvm.exec_s"]
+        rows[name] = {
+            k: round(row[k], 4) if isinstance(row[k], float) else row[k] for k in LAYER_KEYS
         }
-
-    return clean("jvm_cpu_queries"), clean("py_cpu_queries"), None
-
-
-def cpu_regressions(
-    jvm_cpu_timings: dict[str, float],
-    jvm_cpu_ref: dict[str, float],
-    py_cpu_timings: dict[str, float],
-    py_cpu_ref: dict[str, float],
-) -> dict[str, float]:
-    """Queries whose measured CPU exceeds CPU_REGRESSION_RATIO x the
-    reference on a channel that is STABLE for that query — never
-    relabeled as load (task/worker CPU barely moves with load), so
-    these are regression candidates unconditionally.
-
-    Two direct channels (round-11 refinement — a single process-tree
-    ratio false-flagged small queries whose non-task GC/JIT share
-    wobbled between clean passes):
-      - JVM channel: per-stage executorCpuTime (task work only);
-      - Python channel: worker-python CPU measured directly from the
-        process tree (pyspark daemons/workers) — actual Python work,
-        never the JVM's own remainder.
-    Each arms above its noise floor."""
-    out = {}
-    for name in set(jvm_cpu_ref) | set(py_cpu_ref):
-        ratios = []
-        jvm_got, jvm_ref = jvm_cpu_timings.get(name), jvm_cpu_ref.get(name)
-        if (
-            isinstance(jvm_got, (int, float))
-            and isinstance(jvm_ref, (int, float))
-            and jvm_ref >= CPU_JVM_REF_FLOOR
-            and jvm_got > CPU_REGRESSION_RATIO * jvm_ref
-        ):
-            ratios.append(jvm_got / jvm_ref)
-        py_got, py_ref = py_cpu_timings.get(name), py_cpu_ref.get(name)
-        if (
-            isinstance(py_got, (int, float))
-            and isinstance(py_ref, (int, float))
-            and py_ref >= CPU_WORKER_REF_FLOOR
-            and py_got > CPU_REGRESSION_RATIO * py_ref
-        ):
-            ratios.append(py_got / py_ref)
-        if ratios:
-            out[name] = round(max(ratios), 2)
-    return out
+    return rows
 
 
 def main() -> None:
+    from py4j.protocol import Py4JError
+
     from bigquery_cross_environment_etl_pipeline_spark import queries_catalog
     from bigquery_cross_environment_etl_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="bench")
+    # every job of the run is read back from the status store after the
+    # loop (perfbench/run.py builds its session the same way)
+    spark = get_spark(
+        app_name="bench",
+        extra_conf={"spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000"},
+    )
     sc = spark.sparkContext
     queries = queries_catalog.spark_queries()
 
     # JVM/codegen warmup on a tiny table
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
 
-    host = _probe(procstat.host_facts)
-    jvm_cpu_ref, py_cpu_ref, cpu_ref_skipped = load_cpu_reference(host)
+    tracer = Tracer(spark)
+    tracer.enabled = True
     tree = procstat.ProcessTree()
-    jvm_meter = JvmCpuMeter(spark)
-    timings: dict[str, object] = {}
-    cpu_timings: dict[str, float] = {}
-    jvm_cpu_timings: dict[str, float] = {}
-    py_cpu_timings: dict[str, float] = {}
+    best: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    # two passes per query, report the min: the first pass pays one-time
-    # whole-stage-codegen compilation that a long-running cluster
-    # amortizes away; the min reflects steady-state throughput.
-    # fault-isolated: one broken query must never zero the whole round's
-    # bench signal — record its error and keep timing the rest.
+    # two passes per query, report the faster: the first pass pays
+    # one-time whole-stage-codegen compilation that a long-running
+    # cluster amortizes away. Fault-isolated: one broken query must
+    # never zero the whole bench signal — record its error and go on.
     sampler = procstat.DisturbanceSampler()
     _probe(sampler.start)
     for name in BENCH_QUERIES:
@@ -447,90 +360,31 @@ def main() -> None:
         if fn is None:
             errors[name] = "not registered"
             continue
-
-        cpu_passes: list[float] = []
-        jvm_cpu_passes: list[float] = []
-        py_cpu_passes: list[float] = []
-
-        def run_once(
-            fn=fn, cpu=cpu_passes, jvm_cpu=jvm_cpu_passes, py_cpu=py_cpu_passes
-        ) -> float:
-            jvm_meter.mark()
-            c0 = _probe(tree.cpu)
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            c1 = _probe(tree.cpu)
-            if c0 is not None and c1 is not None:
-                # clamp at 0: process churn between snapshots can
-                # still produce a slightly negative delta (ADVICE
-                # r11), and a negative "min of passes" would poison
-                # the reference
-                cpu.append(max(0.0, c1["total"] - c0["total"]))
-                py_cpu.append(max(0.0, c1["worker"] - c0["worker"]))
-            j = jvm_meter.read()
-            if j is not None:
-                jvm_cpu.append(j)
-            return wall
-
         try:
-            timings[name] = round(min(run_once(), run_once()), 4)
-            # min across passes, like wall: the first pass carries
-            # one-time codegen-compile CPU a cluster amortizes away
-            if cpu_passes:
-                cpu_timings[name] = round(min(cpu_passes), 4)
-            if jvm_cpu_passes:
-                jvm_cpu_timings[name] = round(min(jvm_cpu_passes), 4)
-            if py_cpu_passes:
-                py_cpu_timings[name] = round(min(py_cpu_passes), 4)
+            passes = [run_pass(spark, tracer, tree, name, fn, SF_DIR) for _ in range(2)]
+            best[name] = min(passes, key=lambda rec: rec["wall"])
         except Exception as exc:  # noqa: BLE001 — isolate per query
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+    load = load_block(_probe(sampler.stop))
 
+    timings = {name: round(rec["wall"], 4) for name, rec in best.items()}
+    try:
+        layers = layer_rows(spark, tracer, best)
+    except Py4JError:  # the status store could not be read: no layers
+        traceback.print_exc()
+        layers = None
     run_facts = {
         "cpus": sc.defaultParallelism,
         "master": sc.master,
-        "host": host,
-        "load": load_block(_probe(sampler.stop)),
+        "host": _probe(procstat.host_facts),
+        "load": load,
     }
-    line, detail = compose_output(
-        timings,
-        errors,
-        SF_DIR,
-        run_facts,
-        cpu_timings=cpu_timings,
-        jvm_cpu_timings=jvm_cpu_timings,
-        py_cpu_timings=py_cpu_timings,
-        cpu_regression_candidates=cpu_regressions(
-            jvm_cpu_timings, jvm_cpu_ref, py_cpu_timings, py_cpu_ref
-        ),
-        cpu_ref_skipped=cpu_ref_skipped,
-    )
+    line, detail = compose_output(timings, errors, SF_DIR, run_facts, layers)
     try:
         with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass
-    if "--write-cpu-ref" in sys.argv:
-        # the CPU reference may be minted on a LOADED box — that is
-        # the channel's point — but never from a pass with errors,
-        # so a broken query can't freeze a hole into the baseline
-        if errors:
-            print(
-                f"refusing --write-cpu-ref: {len(errors)} queries errored",
-                file=sys.stderr,
-            )
-        else:
-            with open(CPU_REF_PATH, "w") as fh:
-                json.dump(
-                    {
-                        "sf_dir": SF_DIR,
-                        "host": host,
-                        "jvm_cpu_queries": jvm_cpu_timings,
-                        "py_cpu_queries": py_cpu_timings,
-                    },
-                    fh,
-                    indent=1,
-                )
     print(json.dumps(detail), file=sys.stderr)
     print(line)
     spark.stop()
@@ -548,21 +402,24 @@ def compose_output(
     errors: dict,
     sf_dir: str,
     run_facts: dict | None = None,
-    cpu_timings: dict | None = None,
-    jvm_cpu_timings: dict | None = None,
-    py_cpu_timings: dict | None = None,
-    cpu_regression_candidates: dict | None = None,
-    cpu_ref_skipped: str | None = None,
+    layers: dict[str, dict] | None = None,
 ) -> tuple[str, dict]:
     """(compact stdout line, full detail dict). The line carries
-    totals + the 10 slowest queries (2 dp); the full per-query map
-    goes to the detail sidecar/stderr. ``run_facts`` (cpus, master,
-    host, load) rides both. If the line would exceed LINE_BUDGET the
-    query maps are dropped entirely rather than ever overflowing the
-    driver's capture window."""
+    totals + the 10 slowest queries (2 dp); the full per-query map and
+    the per-query ``layers`` rows go to the detail sidecar/stderr.
+    ``run_facts`` (cpus, master, host, load) rides both, and so do the
+    CPU totals summed over ``layers`` (``cpu_sec`` from ``cpu_s``,
+    ``jvm_cpu_sec`` from ``jvm.executor_cpu_s``). If the line would
+    exceed LINE_BUDGET the query map is dropped entirely rather than
+    ever overflowing the driver's capture window."""
     total = round(sum(t for t in timings.values() if isinstance(t, (int, float))), 4)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
+    totals = {}
+    for out_key, layer_key in (("cpu_sec", "cpu_s"), ("jvm_cpu_sec", "jvm.executor_cpu_s")):
+        vals = [row[layer_key] for row in (layers or {}).values() if row[layer_key] is not None]
+        if vals:
+            totals[out_key] = round(sum(vals), 2)
     detail = {
         "metric": "headline_query_suite_total",
         "value": total,
@@ -570,27 +427,12 @@ def compose_output(
         "queries": timings,
         "sf": sf,
         **(run_facts or {}),
+        **totals,
     }
     if errors:
         detail["errors"] = errors
-    if cpu_timings:
-        # the load-robust channel the round-over-round comparison
-        # trusts: whole-process-tree CPU (covers Python codec stages)
-        # and its JVM-only executorCpuTime companion
-        detail["cpu_queries"] = cpu_timings
-        detail["cpu_sec"] = round(sum(cpu_timings.values()), 2)
-    if jvm_cpu_timings:
-        detail["jvm_cpu_queries"] = jvm_cpu_timings
-        detail["jvm_cpu_sec"] = round(sum(jvm_cpu_timings.values()), 2)
-    if py_cpu_timings:
-        # worker-python CPU measured per process class — the detector's
-        # Python channel (actual Python work, never JVM GC/JIT noise)
-        detail["py_cpu_queries"] = py_cpu_timings
-        detail["py_cpu_sec"] = round(sum(py_cpu_timings.values()), 2)
-    if cpu_ref_skipped:
-        detail["cpu_ref_skipped"] = cpu_ref_skipped
-    if cpu_regression_candidates:
-        detail["cpu_regression_candidates"] = cpu_regression_candidates
+    if layers:
+        detail["layers"] = layers
     slowest = dict(
         sorted(
             ((k, round(v, 2)) for k, v in timings.items() if isinstance(v, (int, float))),
@@ -607,20 +449,11 @@ def compose_output(
         "n_errors": len(errors),
         "detail": "BENCH_DETAIL.json",
         **(run_facts or {}),
+        **totals,
     }
-    if cpu_timings:
-        payload["cpu_sec"] = round(sum(cpu_timings.values()), 2)
-    if jvm_cpu_timings:
-        payload["jvm_cpu_sec"] = round(sum(jvm_cpu_timings.values()), 2)
-    if cpu_regression_candidates:
-        payload["cpu_regression_candidates"] = dict(
-            sorted(cpu_regression_candidates.items(), key=lambda kv: -kv[1])[:5]
-        )
-        payload["n_cpu_regression_candidates"] = len(cpu_regression_candidates)
     line = json.dumps(payload)
-    if len(line) > LINE_BUDGET:  # drop the maps rather than overflow
+    if len(line) > LINE_BUDGET:  # drop the map rather than overflow
         payload["queries"] = {}
-        payload.pop("cpu_regression_candidates", None)
         line = json.dumps(payload)
     return line, detail
 

@@ -26,6 +26,16 @@ Layout
 
 __version__ = "0.1.0"
 
+import os as _os
+import sys as _sys
+
+from . import workerenv as _workerenv
+
+#: the checkout this package runs from: the default home of the
+#: persisted indexes (``.indexes``) and the SQL warehouse
+#: (``.spark-warehouse``)
+CHECKOUT_DIR = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+
 # Applied at import — but ONLY in Spark Python worker/daemon processes
 # (ADVICE r11: an unconditional package-import side effect would also
 # monkeypatch the DRIVER, tests, and any embedding host, where a zip
@@ -33,15 +43,19 @@ __version__ = "0.1.0"
 # Worker detection: a pyspark worker imports ``pyspark.worker`` before
 # it unpickles any UDF, and the preload daemon (daemonprefork) imports
 # it explicitly pre-fork; neither module is loaded in a normal driver
-# or test process. daemonprefork also calls the installer directly, so
+# or test process. A worker started without the daemon (``python -m
+# pyspark.worker``: ``spark.python.use.daemon=false``, or Windows) is
+# registered only as ``__main__``, so the spec name of ``__main__`` is
+# checked too. daemonprefork also calls the installer directly, so
 # the fix never depends on this import-order heuristic on the path
 # that matters (see workerenv.py and OPTIMIZATION_r11.md for the
 # measured ~0.17 s/task cost it kills).
-import sys as _sys
-
-from . import workerenv as _workerenv
-
-if "pyspark.worker" in _sys.modules or "pyspark.daemon" in _sys.modules:
+_WORKER_MODULES = ("pyspark.worker", "pyspark.daemon")
+_main_spec = getattr(_sys.modules.get("__main__"), "__spec__", None)
+if (
+    any(m in _sys.modules for m in _WORKER_MODULES)
+    or getattr(_main_spec, "name", None) in _WORKER_MODULES
+):
     _workerenv.ensure_fast_zip_invalidation()
 
 TABLES = (

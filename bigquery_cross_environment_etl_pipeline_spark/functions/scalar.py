@@ -88,6 +88,15 @@ def org_table_name(org_id: str | Column) -> Column:
     )
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as one Spark SQL identifier: backtick-quoted, with every
+    embedded backtick doubled. A caller-supplied column or table name
+    (``doc id``, ``emb-v``, ``a`b``) written into ``selectExpr`` /
+    ``F.expr`` / ``spark.sql`` text then parses as that one name and
+    can never break out of the quoting."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def to_json_payload(*cols: str | Column) -> Column:
     """F8: record -> JSON string (timestamps rendered ISO-8601 by Spark's
     writer, matching the reference's custom encoder semantics)."""

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import quote_ident
 from .iterative import iter_checkpoint
 from .text import hash48, tokens
 
@@ -149,12 +150,13 @@ def minhash_signatures(
     # of the dedup family's ~0.5-1.0 s per-query construction time.
     # The parsed expressions resolve to the same analyzed plan; the
     # md5-exact oracles pin value equality.
+    id_sql = quote_ident(id_col)
     sh = df.select(F.col(id_col), F.explode(shingles(text_col)).alias("_s"))
     hashed = sh.selectExpr(
-        id_col,
+        id_sql,
         "CAST(conv(substring(md5(_s), 1, 12), 16, 10) AS BIGINT) AS _h0",
     ).selectExpr(
-        id_col,
+        id_sql,
         *[
             f"(({a}L * _h0) + {b}L) % {MINHASH_MOD}L AS h{j}"
             for j, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
@@ -165,7 +167,7 @@ def minhash_signatures(
     )
     # re-attach empty-shingle docs with the sentinel signature
     return df.select(id_col).join(sig, id_col, "left").selectExpr(
-        id_col,
+        id_sql,
         *[
             f"coalesce(h{j}, {MINHASH_MOD}L) AS h{j}"
             for j in range(n_hashes)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.scalar import epoch_seconds, finite_metric
+from ..functions.scalar import epoch_seconds, finite_metric, quote_ident
 from ..queries_catalog import TS_FMT_DUCK, TS_FMT_SPARK, register
 from ..sources.registry import load_table
 from ..localrel import local_df
@@ -1392,16 +1392,15 @@ def _gc_dead_pid_tables(spark: SparkSession, db: str) -> None:
         try:
             _os.kill(int(pid_part), 0)
         except ProcessLookupError:
-            # backtick-quoted WITH embedded backticks doubled: a foreign
+            # quote_ident (backticks, embedded ones doubled): a foreign
             # dir whose name isn't a valid unquoted identifier must not
             # parse-error the reap, and a name containing a backtick
             # must not break OUT of the quoting (an unescaped
             # 'x` --_<deadpid>' would comment the tail off and DROP a
             # live pid's table); one bad entry must never fail the
             # caller's query (ADVICE r6) — the rmtree still runs
-            db_q, entry_q = db.replace("`", "``"), entry.replace("`", "``")
             try:
-                spark.sql(f"DROP TABLE IF EXISTS `{db_q}`.`{entry_q}`")
+                spark.sql(f"DROP TABLE IF EXISTS {quote_ident(db)}.{quote_ident(entry)}")
             except Exception:  # noqa: BLE001 — reap is best-effort
                 pass
             _shutil.rmtree(_os.path.join(db_dir, entry), ignore_errors=True)

@@ -90,6 +90,20 @@ _FORCE_WINDOW: list[str] = [
     "etl_checkpoint_roundtrip",
     "etl_protocol_edge_cases",
     "etl_retry_envelope",
+    # caller-supplied column names are now backtick-quoted where they
+    # are written into generated SQL (minhash_signatures' id column,
+    # jl_project's and lsh_bucket_expr's vector column): the driver
+    # hash re-attests every query built on those expressions
+    "dedup_minhash_lsh_pairs",
+    "dedup_minhash_clusters",
+    "dedup_cluster_keep_best",
+    "dedup_lsh_jaccard_verified",
+    "dedup_band_sweep",
+    "leakage_safe_split_assignment",
+    "embedding_projection_distortion",
+    "dedup_incremental_new_batch",
+    "dedup_levenshtein_verified",
+    "ann_topk_lsh",
 ]
 
 _STABLE_ORDER = [

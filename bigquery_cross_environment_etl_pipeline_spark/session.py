@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import CHECKOUT_DIR
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -68,7 +70,7 @@ def build_conf(
             "bigquery_cross_environment_etl_pipeline_spark.daemonprefork"
         ),
         "spark.executorEnv.PYTHONPATH": os.pathsep.join(
-            [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
+            [CHECKOUT_DIR]
             + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
         ),
         "spark.sql.parquet.filterPushdown": "true",
@@ -78,7 +80,7 @@ def build_conf(
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.sql.warehouse.dir": os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE", "/root/repo/.spark-warehouse"
+            "SPARK_GRAFT_WAREHOUSE", os.path.join(CHECKOUT_DIR, ".spark-warehouse")
         ),
     }
     conf.update(extra_conf or {})

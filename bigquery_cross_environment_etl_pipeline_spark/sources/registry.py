@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import CHECKOUT_DIR
+
 TABLES = (
     "region",
     "nation",
@@ -99,10 +101,7 @@ def dataset_fingerprint(sf_dir: str, table: str) -> str:
 #: where persisted indexes and sidecars live unless
 #: ``$SPARK_GRAFT_INDEX_DIR`` says otherwise: ``.indexes`` at the root of
 #: the checkout this package runs from
-_DEFAULT_INDEX_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".indexes",
-)
+_DEFAULT_INDEX_DIR = os.path.join(CHECKOUT_DIR, ".indexes")
 
 
 def index_cache_path(sf_dir: str, table: str, name: str, **fields) -> str:

@@ -72,16 +72,18 @@ _FACTS = {
 }
 
 
+def _layers(names, cpu_s=0.9, executor_cpu_s=0.5):
+    row = dict.fromkeys(bench.LAYER_KEYS, 0.1)
+    return {n: dict(row, **{"cpu_s": cpu_s, "jvm.executor_cpu_s": executor_cpu_s})
+            for n in names}
+
+
 def test_run_facts_ride_line_and_detail_within_budget():
     """cpus/master/host/load must reach BOTH the line and the detail
     and survive the budget's map-dropping path at 1000 queries."""
     timings, errors = _mk(1000, n_errors=5)
-    regress = {k: 9.99 for k in list(timings)[:50]}
     line, detail = bench.compose_output(
-        timings, errors, "data/sf0.1", _FACTS,
-        cpu_timings={k: 0.9 for k in timings},
-        jvm_cpu_timings={k: 0.5 for k in timings},
-        cpu_regression_candidates=regress,
+        timings, errors, "data/sf0.1", _FACTS, _layers(timings)
     )
     assert len(line) <= bench.LINE_BUDGET
     d = json.loads(line)
@@ -105,41 +107,51 @@ def test_loaded_follows_steal_limit():
 
 
 # ---------------------------------------------------------------------------
-# round-11 CPU-time channel
+# per-query layers from perfbench's Tracer
 # ---------------------------------------------------------------------------
+
+
+def test_busy_s_counts_overlapping_jobs_once():
+    assert bench.busy_s([]) == 0.0
+    # two concurrent jobs and one after a gap: 0..3 and 5..6
+    assert bench.busy_s([(1.0, 3.0), (0.0, 2.0), (5.0, 6.0)]) == 4.0
+    assert bench.busy_s([(0.0, 4.0), (1.0, 2.0)]) == 4.0  # nested
+
+
+def test_layers_schema_and_budget_at_1000_queries():
+    """The ``layers`` row uses perfbench's per-layer metric names, and
+    1000 rows ride the detail while the line stays within budget."""
+    assert bench.LAYER_KEYS == (
+        "plans.construct_s", "plans.construct_jobs", "jvm.exec_s",
+        "jvm.executor_cpu_s", "jvm.gc_s", "jvm.shuffle_bytes",
+        "jvm.spill_bytes", "worker.python_cpu_s", "cpu_s", "unattributed_s",
+    )
+    timings, errors = _mk(1000)
+    layers = _layers(timings)
+    line, detail = bench.compose_output(timings, errors, "data/sf0.1", _FACTS, layers)
+    assert bench.LINE_BUDGET == 1500
+    assert len(line) <= bench.LINE_BUDGET
+    assert "layers" not in json.loads(line)
+    assert detail["layers"] == layers
+    assert all(tuple(row) == bench.LAYER_KEYS for row in detail["layers"].values())
 
 
 def test_cpu_channel_rides_detail_and_line_within_budget():
     timings, errors = _mk(200)
-    cpu = {k: 0.9 for k in timings}
-    jvm = {k: 0.5 for k in timings}
-    regress = {k: 2.1 for k in list(timings)[:40]}
+    layers = _layers(timings)
     line, detail = bench.compose_output(
-        timings, errors, "/root/testdata/sf0.1",
-        cpu_timings=cpu, jvm_cpu_timings=jvm,
-        cpu_regression_candidates=regress,
+        timings, errors, "data/sf0.1", layers=layers
     )
     assert len(line) <= bench.LINE_BUDGET
     payload = json.loads(line)
-    assert payload["cpu_sec"] == round(sum(cpu.values()), 2)
-    assert payload["jvm_cpu_sec"] == round(sum(jvm.values()), 2)
-    assert detail["cpu_queries"] == cpu
-    assert detail["jvm_cpu_queries"] == jvm
-    assert detail["cpu_regression_candidates"] == regress
-    # the line carries at most 5 candidates + the full count
-    if "cpu_regression_candidates" in payload:
-        assert len(payload["cpu_regression_candidates"]) <= 5
-        assert payload["n_cpu_regression_candidates"] == 40
-
-
-def test_cpu_regressions_flags_only_real_ratios():
-    # one case per channel for each rule: a: 1.75x > 1.5 -> flagged;
-    # b: 1.2x -> clean; tiny: below the 0.5s channel floor -> never
-    # arms; gone: unmeasured -> skipped
-    ref = {"a": 2.0, "b": 1.0, "tiny": 0.05, "gone": 3.0}
-    got = {"a": 3.5, "b": 1.2, "tiny": 5.0}
-    assert bench.cpu_regressions(got, ref, {}, {}) == {"a": 1.75}
-    assert bench.cpu_regressions({}, {}, got, ref) == {"a": 1.75}
+    assert payload["cpu_sec"] == round(0.9 * 200, 2) == detail["cpu_sec"]
+    assert payload["jvm_cpu_sec"] == round(0.5 * 200, 2) == detail["jvm_cpu_sec"]
+    for old in ("cpu_queries", "jvm_cpu_queries", "py_cpu_queries",
+                "cpu_regression_candidates", "cpu_ref_skipped"):
+        assert old not in detail and old not in payload, old
+    # no layers (the status store could not be read): no CPU totals
+    line, detail = bench.compose_output(timings, errors, "data/sf0.1")
+    assert "cpu_sec" not in json.loads(line) and "layers" not in detail
 
 
 def test_proc_tree_cpu_monotonic_and_positive():
@@ -156,74 +168,30 @@ def test_proc_tree_cpu_monotonic_and_positive():
     assert c1["worker"] >= c0["worker"] >= 0
 
 
-def _write_ref(path, sf_dir, host):
-    path.write_text(json.dumps({"sf_dir": sf_dir, "host": host,
-                                "jvm_cpu_queries": {"a": 2.0, "bad": "x"},
-                                "py_cpu_queries": {"a": 0.5}}))
+def test_traced_pass_attributes_jobs_to_layers(spark):
+    """bench's pass function and the Tracer split a real pass into
+    layers: a lazy builder fires no job while it is built and its
+    execution reads executor CPU; a builder that collects while it is
+    built counts that job as construction."""
 
+    def lazy(s, _sf_dir):
+        return s.range(2_000_000).selectExpr("sum(id % 97) AS s")
 
-def test_cpu_reference_ignores_other_scale(tmp_path):
-    p = tmp_path / "ref.json"
-    host = _FACTS["host"]
-    _write_ref(p, bench.SF_DIR + "7", host)
-    assert bench.load_cpu_reference(host, str(p)) == ({}, {}, "other sf")
-    _write_ref(p, bench.SF_DIR, host)
-    assert bench.load_cpu_reference(host, str(p)) == (
-        {"a": 2.0}, {"a": 0.5}, None
-    )
-    assert bench.load_cpu_reference(host, str(tmp_path / "missing.json")) == (
-        {}, {}, "no reference"
-    )
+    def eager(s, _sf_dir):
+        n = s.range(1000).selectExpr("count(*) AS n").collect()[0]["n"]
+        return s.range(n).selectExpr("sum(id) AS s")
 
-
-def test_cpu_reference_is_host_scoped(tmp_path):
-    """CPU seconds from another machine are not comparable: a reference
-    stamped for another host turns the detector off and says why; the
-    same reference on its own host flags a 1.75x channel."""
-    p = tmp_path / "ref.json"
-    here = _FACTS["host"]
-    other = dict(here, nproc=4, cpu_model="AMD EPYC 7B13")
-    got = {"a": 3.5}
-    _write_ref(p, bench.SF_DIR, other)
-    jvm_ref, py_ref, skipped = bench.load_cpu_reference(here, str(p))
-    assert (jvm_ref, py_ref, skipped) == ({}, {}, "host mismatch")
-    assert bench.cpu_regressions(got, jvm_ref, {}, py_ref) == {}
-    _, detail = bench.compose_output({"a": 1.0}, {}, bench.SF_DIR,
-                                     cpu_ref_skipped=skipped)
-    assert detail["cpu_ref_skipped"] == "host mismatch"
-    # an unstamped reference (no host facts) never matches either
-    assert bench.load_cpu_reference(None, str(p))[2] == "host mismatch"
-
-    _write_ref(p, bench.SF_DIR, here)
-    jvm_ref, py_ref, skipped = bench.load_cpu_reference(here, str(p))
-    assert skipped is None
-    assert bench.cpu_regressions(got, jvm_ref, {}, py_ref) == {"a": 1.75}
-
-
-def test_cpu_regressions_two_channel_detector():
-    # JVM channel: armed at >=0.5s ref; Python channel: worker CPU
-    # measured directly
-    jvm_ref = {"jq": 2.0, "tiny_jvm": 0.2, "both": 1.0}
-    jvm_got = {"jq": 3.5, "tiny_jvm": 2.0, "both": 1.1}
-    py_ref = {"pq": 4.0, "tiny_py": 0.3, "both": 3.0}
-    py_got = {"pq": 7.0, "tiny_py": 3.0, "both": 5.1}
-    out = bench.cpu_regressions(jvm_got, jvm_ref, py_got, py_ref)
-    # jq: jvm 1.75x flags; pq: py 1.75x flags; both: py 1.7x flags;
-    # tiny_*: below channel floors never arm
-    assert out == {"jq": 1.75, "pq": 1.75, "both": 1.7}
-
-
-def test_jvm_cpu_meter_measures_real_stages(spark):
-    """The AppStatusStore probe must survive this Spark version's py4j
-    surface and attribute nonzero CPU to a real job (or degrade to
-    None cleanly, never raise)."""
-    meter = bench.JvmCpuMeter(spark)
-    meter.mark()
-    spark.range(2_000_000).selectExpr("sum(id % 97) as s").collect()
-    got = meter.read()
-    assert got is None or got > 0
-    # a mark() directly followed by read() sees (approximately) no new
-    # stages — the floor logic isolates per-pass attribution
-    meter.mark()
-    idle = meter.read()
-    assert idle is None or idle == 0.0
+    tracer = bench.Tracer(spark)
+    tracer.enabled = True
+    tree = bench.procstat.ProcessTree()
+    recs = {name: bench.run_pass(spark, tracer, tree, name, fn, "unused")
+            for name, fn in (("lazy", lazy), ("eager", eager))}
+    tracer.enabled = False
+    rows = bench.layer_rows(spark, tracer, recs)
+    for name, row in rows.items():
+        assert tuple(row) == bench.LAYER_KEYS, name
+        # the parts never exceed the wall time: no job counted twice
+        assert row["unattributed_s"] >= -0.05 * recs[name]["wall"], (name, row)
+    assert rows["lazy"]["plans.construct_jobs"] == 0
+    assert rows["lazy"]["jvm.executor_cpu_s"] > 0
+    assert rows["eager"]["plans.construct_jobs"] >= 1
