@@ -57,16 +57,3 @@ if (
     or getattr(_main_spec, "name", None) in _WORKER_MODULES
 ):
     _workerenv.ensure_fast_zip_invalidation()
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -19,6 +19,7 @@ import dataclasses
 
 from pyspark.sql import SparkSession
 
+from ..functions.scalar import quote_ident
 from ..schemas import BILLING_EXPORT_SCHEMA
 from .config import ConfigStore, StepStatusStore
 
@@ -38,7 +39,7 @@ def org_table_name(org_id: int) -> str:
 def create_database(spark: SparkSession, name: str) -> None:
     """D1: CREATE DATABASE IF NOT EXISTS (BigQuery dataset equivalent,
     reference core/bigquery/client.py:42-46)."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{name}`")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(name)}")
 
 
 def database_exists(spark: SparkSession, name: str) -> bool:
@@ -48,7 +49,7 @@ def database_exists(spark: SparkSession, name: str) -> bool:
 
 def table_exists(spark: SparkSession, database: str, table: str) -> bool:
     """D6 (reference dataset_utils.py:236-247)."""
-    return spark.catalog.tableExists(f"`{database}`.`{table}`")
+    return spark.catalog.tableExists(f"{quote_ident(database)}.{quote_ident(table)}")
 
 
 def create_billing_table(spark: SparkSession, database: str, table: str) -> None:
@@ -57,13 +58,15 @@ def create_billing_table(spark: SparkSession, database: str, table: str) -> None
     if table_exists(spark, database, table):
         return
     ddl = BILLING_EXPORT_SCHEMA.toDDL()
-    spark.sql(f"CREATE TABLE `{database}`.`{table}` ({ddl}) USING parquet")
+    spark.sql(
+        f"CREATE TABLE {quote_ident(database)}.{quote_ident(table)} ({ddl}) USING parquet"
+    )
 
 
 def drop_database_cascade(spark: SparkSession, name: str) -> None:
     """D4: DROP DATASET delete_contents=True, not_found_ok=True
     (reference core/bigquery/client.py:48-58)."""
-    spark.sql(f"DROP DATABASE IF EXISTS `{name}` CASCADE")
+    spark.sql(f"DROP DATABASE IF EXISTS {quote_ident(name)} CASCADE")
 
 
 def list_databases(spark: SparkSession) -> list[str]:

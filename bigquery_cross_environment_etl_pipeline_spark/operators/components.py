@@ -30,8 +30,6 @@ round.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,7 +44,7 @@ from .iterative import iter_checkpoint
 #: than the O(log diameter) propagation rounds. Above the bound the
 #: distributed path runs unchanged (tested separately by forcing
 #: ``driver_threshold=0``).
-DRIVER_UF_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "2000000"))
+DRIVER_UF_MAX_EDGES = 2_000_000
 
 
 def _driver_union_find(edge_rows) -> dict:

@@ -100,35 +100,6 @@ def shingles(text_col: str | Column, n: int = SHINGLE_N) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, n_hashes: int = N_MINHASH) -> list[Column]:
-    """MinHash signature columns (pure-array form; prefer
-    ``minhash_signatures`` in hot paths — this variant recomputes the
-    base hashes once per seed because a higher-order-function argument
-    is re-evaluated per enclosing transform). Same affine family and
-    same values as ``minhash_signatures``. Empty shingle sets get NULL
-    mins -> coalesced to a sentinel so empty docs never collide with
-    real signatures."""
-    sentinel = F.lit(MINHASH_MOD)
-
-    def seeded_hash(j: int):
-        a, b = MINHASH_COEFFS[j]
-        # NOTE: single-parameter lambda — a 2-arg lambda would make
-        # PySpark pass (element, index) and silently corrupt the seed.
-        return lambda s: (
-            F.lit(a)
-            * F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("bigint")
-            + F.lit(b)
-        ) % F.lit(MINHASH_MOD)
-
-    return [
-        F.coalesce(
-            F.array_min(F.transform(shingle_col, seeded_hash(j))),
-            sentinel,
-        ).alias(f"h{j}")
-        for j in range(n_hashes)
-    ]
-
-
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hashes: int = N_MINHASH
 ) -> DataFrame:
@@ -151,7 +122,7 @@ def minhash_signatures(
     # The parsed expressions resolve to the same analyzed plan; the
     # md5-exact oracles pin value equality.
     id_sql = quote_ident(id_col)
-    sh = df.select(F.col(id_col), F.explode(shingles(text_col)).alias("_s"))
+    sh = df.select(F.col(id_sql), F.explode(shingles(text_col)).alias("_s"))
     hashed = sh.selectExpr(
         id_sql,
         "CAST(conv(substring(md5(_s), 1, 12), 16, 10) AS BIGINT) AS _h0",
@@ -162,11 +133,11 @@ def minhash_signatures(
             for j, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
         ],
     )
-    sig = hashed.groupBy(id_col).agg(
+    sig = hashed.groupBy(F.col(id_sql)).agg(
         *[F.expr(f"min(h{j}) AS h{j}") for j in range(n_hashes)]
     )
     # re-attach empty-shingle docs with the sentinel signature
-    return df.select(id_col).join(sig, id_col, "left").selectExpr(
+    return df.select(F.col(id_sql)).join(sig, id_col, "left").selectExpr(
         id_sql,
         *[
             f"coalesce(h{j}, {MINHASH_MOD}L) AS h{j}"

@@ -20,7 +20,6 @@ closure. Each round ``localCheckpoint``s to keep plan depth constant
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,9 +33,7 @@ from .iterative import iter_checkpoint
 #: wrong: 1M links × a 32-hop horizon is up to 32M Python tuples —
 #: several GB — so the gate must bound what gets BUILT, not what gets
 #: collected. 10M pairs ≈ 160 MB of tuples: comfortably driver-sized.
-DRIVER_CLOSURE_MAX_PAIRS = int(
-    os.environ.get("SPARK_GRAFT_CLOSURE_DRIVER_PAIRS", "10000000")
-)
+DRIVER_CLOSURE_MAX_PAIRS = 10_000_000
 
 
 def ancestor_closure(

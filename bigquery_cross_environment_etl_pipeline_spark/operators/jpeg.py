@@ -1426,8 +1426,7 @@ def decode_jpeg_lossless(payload: bytes) -> "object":
                 raise NotImplementedError(
                     "multi-component lossless JPEG not supported"
                 )
-            if w == 0 or h == 0:
-                raise ValueError("JPEG dimensions must be positive")
+            _check_frame(w, h)
             sof = {"w": w, "h": h}
         elif marker == 0xDD:
             if len(body) < 2:
@@ -1537,6 +1536,27 @@ def _first_sof_marker(data: bytes) -> int | None:
 # ---------------------------------------------------------------------------
 # decoder
 # ---------------------------------------------------------------------------
+
+#: Largest frame the decoders accept, in pixels (8192 x 8192). Both
+#: decoders build their sample or coefficient grid for the DECLARED
+#: frame before reading any entropy-coded data, and the data length
+#: cannot bound the frame (a few bytes of arithmetic-coded or EOB-run
+#: data can cover a huge one). Without this bound a hostile header
+#: claiming 65535 x 65535 makes a worker fill tens of GB of Python
+#: lists: on an overcommitting host that ends in the OOM killer, not in
+#: a per-asset MemoryError.
+MAX_FRAME_PIXELS = 1 << 26
+
+
+def _check_frame(w: int, h: int) -> None:
+    """Reject a declared frame that is empty or over MAX_FRAME_PIXELS."""
+    if w == 0 or h == 0:
+        raise ValueError("JPEG dimensions must be positive")
+    if w * h > MAX_FRAME_PIXELS:
+        raise ValueError(
+            f"JPEG frame {w}x{h} exceeds the {MAX_FRAME_PIXELS}-pixel decode bound"
+        )
+
 
 #: SOF markers this decoder rejects, with the reason (each is a
 #: genuinely different coding process, not a parsing gap). SOF0/SOF1
@@ -2057,8 +2077,7 @@ def decode_jpeg_coefficients(payload: bytes):
                 )
             if ncomp not in (1, 3):
                 raise ValueError(f"JPEG with {ncomp} components unsupported")
-            if w == 0 or h == 0:
-                raise ValueError("JPEG dimensions must be positive")
+            _check_frame(w, h)
             comps_meta = []
             for i in range(ncomp):
                 cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]

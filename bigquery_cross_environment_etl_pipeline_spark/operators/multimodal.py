@@ -34,7 +34,7 @@ column ops and never deserialize the payload.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -54,6 +54,20 @@ def synthesize_assets(documents: DataFrame) -> DataFrame:
         F.encode("text", "utf-8").alias("payload"),
         F.lit("application/octet-stream").alias("mime_type"),
     )
+
+
+def formula_image(doc_id: int, channels: int = 3) -> "object":
+    """The synthetic image the PPM, PNG and resize codec fixtures
+    encode: pixel(x, y, c) = (doc_id + 3x + 7y + 11c) mod 256 at width
+    8 + doc_id % 5 and height 6 + doc_id % 7, as an HxWxC uint8 array.
+    Those queries' oracles restate the same formula in SQL."""
+    import numpy as np
+
+    w, h = 8 + doc_id % 5, 6 + doc_id % 7
+    x = np.arange(w).reshape(1, w, 1)
+    y = np.arange(h).reshape(h, 1, 1)
+    c = np.arange(channels).reshape(1, 1, channels)
+    return ((doc_id + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
 
 
 #: extension -> (modality, mime) for file-based asset ingest
@@ -737,6 +751,64 @@ DECODE_SCHEMA = (
 
 COEFF_SCHEMA = "asset_id bigint, n_blocks int, coef_checksum bigint"
 
+#: Spark type of a decode stage's fact column -> its pandas dtype; the
+#: integer facts are NULLABLE (a bad asset's facts are NULL)
+_FACT_DTYPES = {"int": "Int32", "bigint": "Int64", "binary": object}
+
+
+def _decode_stage(
+    assets: DataFrame,
+    schema: str,
+    decode: Callable[[bytes], object],
+    make_facts: Callable[[], Callable[[object], tuple]],
+    consts: dict | None = None,
+) -> DataFrame:
+    """The one Arrow-batched decode stage every codec family shares:
+    ``decode(raw: bytes)`` parses each ``payload``; ``make_facts()``
+    runs once per partition (per-partition setup such as weight tables
+    or index caches) and returns ``facts(parsed) -> tuple``, one value
+    per ``schema`` column after ``asset_id`` that is not in ``consts``
+    (columns with one value for every row). NULL and UNDECODABLE
+    payloads (malformed bytes, gated codecs) produce NULL facts rather
+    than killing the Arrow batch: one bad asset must not take the
+    other thousands in its batch down with it (the extract_features
+    contract); a curation filter on a NULL fact isolates them
+    downstream. Payloads never shuffle: each batch decodes where it
+    was read."""
+    consts = consts or {}
+    columns = [c.split() for c in schema.split(",")[1:]]
+    fact_names = [n for n, _ in columns if n not in consts]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        facts = make_facts()
+        null_facts = (None,) * len(fact_names)
+        for pdf in batches:
+            rows = []
+            for b in pdf["payload"]:
+                parsed = None
+                if b is not None:
+                    try:
+                        parsed = decode(bytes(b))
+                    except (ValueError, NotImplementedError, IndexError, MemoryError):
+                        # MemoryError: an allocation sized from a hostile
+                        # header fails per-asset, not per-batch. The
+                        # decoders refuse a declared 65535x65535 frame
+                        # before allocating (jpeg.MAX_FRAME_PIXELS, the
+                        # GIF/PNG/WAV data-length checks), because on an
+                        # overcommitting host a huge allocation ends in
+                        # the OOM killer, not here
+                        parsed = None
+                rows.append(null_facts if parsed is None else facts(parsed))
+            values = dict(zip(fact_names, zip(*rows))) if rows else {}
+            out = {"asset_id": pdf["asset_id"]}
+            for n, t in columns:
+                out[n] = consts[n] if n in consts else pd.array(
+                    list(values.get(n, ())), dtype=_FACT_DTYPES[t]
+                )
+            yield pd.DataFrame(out)
+
+    return assets.mapInPandas(run, schema)
+
 
 def decode_jpeg_coefficient_features(assets: DataFrame) -> DataFrame:
     """Arrow decode stage over the JPEG ENTROPY LAYER specifically:
@@ -749,38 +821,26 @@ def decode_jpeg_coefficient_features(assets: DataFrame) -> DataFrame:
     coefficient multiset is right. Same one-bad-asset NULL-facts and
     zero-shuffle contract as ``decode_image_features``."""
     import numpy as np
-    import pandas as pd
 
     from . import jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(raw: bytes):
+        return jpeg.decode_jpeg_coefficients(raw)[1]
+
+    def make_facts():
         weights = np.zeros((8, 8), dtype=np.int64)
         for i, (r, c) in enumerate(jpeg.ZIGZAG):
             weights[r, c] = i + 1
-        for pdf in batches:
-            nblocks, checks = [], []
-            for b in pdf["payload"]:
-                try:
-                    if b is None:
-                        raise ValueError("null payload")
-                    _, comps = jpeg.decode_jpeg_coefficients(bytes(b))
-                except (ValueError, NotImplementedError, IndexError, MemoryError):
-                    nblocks.append(None)
-                    checks.append(None)
-                    continue
-                nb = sum(int(a.shape[0] * a.shape[1]) for a in comps)
-                ck = sum(int((a * weights).sum()) for a in comps)
-                nblocks.append(nb)
-                checks.append(ck)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_blocks": pd.array(nblocks, dtype="Int32"),
-                    "coef_checksum": pd.array(checks, dtype="Int64"),
-                }
+
+        def facts(comps):
+            return (
+                sum(int(a.shape[0] * a.shape[1]) for a in comps),
+                sum(int((a * weights).sum()) for a in comps),
             )
 
-    return assets.mapInPandas(run, COEFF_SCHEMA)
+        return facts
+
+    return _decode_stage(assets, COEFF_SCHEMA, decode, make_facts)
 
 
 def decode_image_features(assets: DataFrame) -> DataFrame:
@@ -789,50 +849,18 @@ def decode_image_features(assets: DataFrame) -> DataFrame:
     and reduced to exact-integer facts — dimensions, channel count,
     and the uint8 pixel sum (order-independent, so it hash-compares
     bitwise against an arithmetic oracle). Input contract: columns
-    ``asset_id`` and ``payload``. NULL and UNDECODABLE payloads
-    (malformed bytes, gated codecs) produce NULL facts rather than
-    killing the Arrow batch — one bad asset must not take the other
-    thousands in its batch down with it (the extract_features
-    contract); a curation filter on ``width IS NULL`` isolates them
-    downstream. The decode is embarrassingly parallel: payloads never
-    shuffle, each batch decodes where it was read."""
-    import pandas as pd
+    ``asset_id`` and ``payload``. NULL and undecodable payloads get
+    NULL facts (the ``_decode_stage`` contract); a curation filter on
+    ``width IS NULL`` isolates them downstream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            width, height, nch, psum = [], [], [], []
-            for b in pdf["payload"]:
-                arr = None
-                if b is not None:
-                    try:
-                        arr = decode_image(bytes(b))
-                    except (ValueError, NotImplementedError, IndexError, MemoryError):
-                        # MemoryError: a hostile payload whose DECLARED
-                        # dimensions are a memory bomb (e.g. a GIF header
-                        # claiming 65535x65535) fails per-asset, not
-                        # per-batch — the one-bad-asset NULL-facts contract
-                        arr = None  # undecodable -> NULL facts
-                if arr is None:
-                    width.append(None); height.append(None)
-                    nch.append(None); psum.append(None)
-                    continue
-                h, w = arr.shape[:2]
-                ch = 1 if arr.ndim == 2 else arr.shape[2]
-                width.append(w); height.append(h); nch.append(ch)
-                # sum with an int64 accumulator, no 8x int64 copy of
-                # the pixel buffer
-                psum.append(int(arr.sum(dtype="int64")))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pd.array(width, dtype="Int32"),
-                    "height": pd.array(height, dtype="Int32"),
-                    "n_channels": pd.array(nch, dtype="Int32"),
-                    "pixel_sum": pd.array(psum, dtype="Int64"),
-                }
-            )
+    def facts(arr):
+        h, w = arr.shape[:2]
+        ch = 1 if arr.ndim == 2 else arr.shape[2]
+        # sum with an int64 accumulator, no 8x int64 copy of the pixel
+        # buffer
+        return w, h, ch, int(arr.sum(dtype="int64"))
 
-    return assets.mapInPandas(run, DECODE_SCHEMA)
+    return _decode_stage(assets, DECODE_SCHEMA, decode_image, lambda: facts)
 
 
 FEATURE_SCHEMA = (
@@ -1440,55 +1468,26 @@ def decode_audio_features(assets: DataFrame) -> DataFrame:
     ``decode_wav`` and reduced to exact-integer facts (sample rate,
     channel count, frame count, and the signed amplitude sum — order-
     independent, so it hash-compares bitwise against an arithmetic
-    oracle). NULL and UNDECODABLE payloads produce NULL facts rather
-    than killing the Arrow batch — the shared one-bad-asset contract.
-    Embarrassingly parallel: payloads never shuffle."""
-    import pandas as pd
-
+    oracle). NULL and undecodable payloads get NULL facts (the
+    ``_decode_stage`` contract). Embarrassingly parallel: payloads
+    never shuffle."""
     from . import flac
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rate, nch, nfr, amp = [], [], [], []
-            for b in pdf["payload"]:
-                parsed = None
-                if b is not None:
-                    try:
-                        raw = bytes(b)
-                        # container dispatch on the stream magic:
-                        # RIFF/WAVE -> PCM chunk walker, fLaC -> the
-                        # rice/LPC decoder (operators/flac.py, round 11)
-                        parsed = (
-                            flac.decode_flac(raw)
-                            if raw[:4] == b"fLaC"
-                            else decode_wav(raw)
-                        )
-                    except (ValueError, NotImplementedError, IndexError, MemoryError):
-                        # MemoryError: a hostile payload whose DECLARED
-                        # dimensions are a memory bomb (e.g. a GIF header
-                        # claiming 65535x65535) fails per-asset, not
-                        # per-batch — the one-bad-asset NULL-facts contract
-                        parsed = None
-                if parsed is None:
-                    rate.append(None); nch.append(None)
-                    nfr.append(None); amp.append(None)
-                    continue
-                r, samples = parsed
-                rate.append(r)
-                nch.append(samples.shape[1])
-                nfr.append(samples.shape[0])
-                amp.append(int(samples.sum(dtype="int64")))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "sample_rate": pd.array(rate, dtype="Int32"),
-                    "n_channels": pd.array(nch, dtype="Int32"),
-                    "n_frames": pd.array(nfr, dtype="Int64"),
-                    "amp_sum": pd.array(amp, dtype="Int64"),
-                }
-            )
+    def decode(raw: bytes):
+        # container dispatch on the stream magic: RIFF/WAVE -> PCM
+        # chunk walker, fLaC -> the rice/LPC decoder (operators/flac.py)
+        return flac.decode_flac(raw) if raw[:4] == b"fLaC" else decode_wav(raw)
 
-    return assets.mapInPandas(run, AUDIO_DECODE_SCHEMA)
+    def facts(parsed):
+        rate, samples = parsed
+        return (
+            rate,
+            samples.shape[1],
+            samples.shape[0],
+            int(samples.sum(dtype="int64")),
+        )
+
+    return _decode_stage(assets, AUDIO_DECODE_SCHEMA, decode, lambda: facts)
 
 
 def resize_images_real(
@@ -1502,58 +1501,35 @@ def resize_images_real(
     arithmetic, so the result is bitwise-deterministic and an
     arithmetic oracle can recompute it — and RE-ENCODED as
     non-interlaced PNG. Undecodable/NULL payloads produce a NULL
-    output payload (one-bad-asset contract). ``resize_images`` keeps
-    the byte-truncation stub only for its legacy plumbing oracle.
+    output payload (the ``_decode_stage`` contract). ``resize_images``
+    keeps the byte-truncation stub only for its legacy plumbing oracle.
 
     Scale: decode→resample→encode is one fused Arrow stage — pixels
     never leave the task that read them, the only shape that works
     when the corpus is 100 TB of images."""
     import numpy as np
-    import pandas as pd
 
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_facts():
         yi_cache: dict[tuple[int, int], "object"] = {}
 
-        for pdf in batches:
-            outs = []
-            for b in pdf["payload"]:
-                arr = None
-                if b is not None:
-                    try:
-                        arr = decode_image(bytes(b))
-                    except (ValueError, NotImplementedError, IndexError, MemoryError):
-                        # MemoryError: a hostile payload whose DECLARED
-                        # dimensions are a memory bomb (e.g. a GIF header
-                        # claiming 65535x65535) fails per-asset, not
-                        # per-batch — the one-bad-asset NULL-facts contract
-                        arr = None
-                if arr is None:
-                    outs.append(None)
-                    continue
-                h, w = arr.shape[:2]
-                yi = yi_cache.setdefault(
-                    (h, target_h), (np.arange(target_h) * h) // target_h
-                )
-                xi = yi_cache.setdefault(
-                    (w, target_w), (np.arange(target_w) * w) // target_w
-                )
-                outs.append(encode_png(arr[yi][:, xi], "none"))
-            out_series = pd.Series(outs, dtype=object)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "target_w": target_w,
-                    "target_h": target_h,
-                    "payload": out_series,
-                    "n_bytes_out": pd.array(
-                        [None if o is None else len(o) for o in outs],
-                        dtype="Int64",
-                    ),
-                }
+        def facts(arr):
+            h, w = arr.shape[:2]
+            yi = yi_cache.setdefault(
+                (h, target_h), (np.arange(target_h) * h) // target_h
             )
+            xi = yi_cache.setdefault(
+                (w, target_w), (np.arange(target_w) * w) // target_w
+            )
+            png = encode_png(arr[yi][:, xi], "none")
+            return png, len(png)
 
-    return assets.select("asset_id", "payload").mapInPandas(
-        do_resize,
+        return facts
+
+    return _decode_stage(
+        assets.select("asset_id", "payload"),
         "asset_id bigint, target_w int, target_h int, payload binary, "
         "n_bytes_out bigint",
+        decode_image,
+        make_facts,
+        consts={"target_w": target_w, "target_h": target_h},
     )

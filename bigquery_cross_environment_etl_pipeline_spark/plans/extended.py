@@ -3411,7 +3411,11 @@ def streaming_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
     import uuid
 
-    from ..streaming.incremental import read_stream, stream_cdc_upsert
+    from ..streaming.incremental import (
+        read_stream,
+        snapshot_versions,
+        stream_cdc_upsert,
+    )
 
     events = load_table(spark, sf_dir, "events")
     changes = events.withColumn(
@@ -3435,14 +3439,7 @@ def streaming_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("CDC stream drain did not finish within 300s")
-        import glob
-        import os
-        import re
-
-        done = [
-            os.path.dirname(s) for s in glob.glob(f"{tmp}/snapshot/v*/_SUCCESS")
-        ]
-        last = max(done, key=lambda p: int(re.search(r"v(\d+)$", p).group(1)))
+        last = snapshot_versions(f"{tmp}/snapshot")[-1][1]
         final = spark.read.parquet(last).filter(F.col("op") != "D")
         out = final.select(
             "user_id",

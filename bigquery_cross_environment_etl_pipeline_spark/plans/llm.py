@@ -12,6 +12,7 @@ checked rows-only.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,28 +101,50 @@ def _gate_repartition(
     return df.repartition(parallelism)
 
 
-def _doc_ids_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id input for the synthetic-asset codec queries. The
-    synthetic corpus arrives as ONE parquet file, which would
+def _encoded_assets(
+    spark: SparkSession, sf_dir: str, payload_of: Callable[[int], bytes]
+) -> DataFrame:
+    """(asset_id, payload) input for the synthetic-asset codec queries:
+    one Arrow map stage calls ``payload_of(doc_id)`` to encode each
+    document's fixture. Every codec query builds its assets here, so
+    the fixture plumbing and the partitioning policy have one home.
+
+    ``payload_of`` runs on the workers, so it must be a closure nested
+    in its query function (pickled by value): a function defined at
+    module level here is pickled by reference and makes every worker
+    import this module. Shared fixture code belongs in an operator module the
+    Python daemon preloads (``multimodal.formula_image``).
+
+    The synthetic corpus arrives as ONE parquet file, which would
     serialize each query's fused Arrow encode+decode chain onto a
     single task; a doc_id-only repartition (8 bytes/row of shuffle)
     restores the parallelism real asset ingest gets for free from
-    many files (ingest_binary_assets: one task per file group).
-    Shared by all nine codec queries so the partitioning policy has
-    exactly one home (round-10 review finding). Gated on the scan's
-    actual partition count like ``_docs_repartitioned`` (round 12):
+    many files (ingest_binary_assets: one task per file group). Gated
+    on the scan's actual partition count like ``_docs_repartitioned``:
     a many-file ingest already >= parallelism takes no exchange."""
-    ids = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _gate_repartition(
-        ids,
+    ids = _gate_repartition(
+        load_table(spark, sf_dir, "documents").select("doc_id"),
         spark.sparkContext.defaultParallelism,
         _estimated_scan_partitions(spark, table_path(sf_dir, "documents")),
     )
 
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["doc_id"],
+                    "payload": [payload_of(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    return ids.mapInPandas(encode, "asset_id bigint, payload binary")
+
 
 def _docs_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, text) spread across defaultParallelism partitions —
-    the ``_doc_ids_repartitioned`` lesson applied to the HASHING-heavy
+    the ``_encoded_assets`` lesson applied to the HASHING-heavy
     dedup/quality queries (round 11): the one-file synthetic corpus
     serializes each CPU-dense shingle/minhash/simhash map stage onto
     the single scan task, and a self-join or multi-arm query holds
@@ -2554,29 +2577,12 @@ def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must never move the bytes)."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
+    def payload_of(d: int) -> bytes:
+        px = multimodal.formula_image(d)
+        h, w = px.shape[:2]
+        return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 8 + d % 5, 6 + d % 7
-                x = np.arange(w).reshape(1, w, 1)
-                y = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(3).reshape(1, 1, 3)
-                px = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                payloads.append(
-                    b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -2629,32 +2635,13 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     they are produced."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
+    def payload_of(d: int) -> bytes:
+        px = multimodal.formula_image(d, {0: 1, 1: 3, 2: 4}[d % 3])
+        if px.shape[2] == 1:
+            px = px[:, :, 0]  # grayscale encodes as color type 0
+        return multimodal.encode_png(px, "cycle", interlace=bool(d % 2))
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 8 + d % 5, 6 + d % 7
-                ch = {0: 1, 1: 3, 2: 4}[d % 3]
-                x = np.arange(w).reshape(1, w, 1)
-                y = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(ch).reshape(1, 1, ch)
-                px = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                if ch == 1:
-                    px = px[:, :, 0]  # grayscale encodes as color type 0
-                payloads.append(
-                    multimodal.encode_png(px, "cycle", interlace=bool(d % 2))
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -2698,31 +2685,19 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode queries."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h, p = 8 + d % 5, 6 + d % 7, 4 + d % 13
-                x = np.arange(w).reshape(1, w)
-                y = np.arange(h).reshape(h, 1)
-                idx = ((d + 3 * x + 7 * y) % p).astype(np.uint8)
-                k = np.arange(p).reshape(p, 1)
-                c = np.arange(3).reshape(1, 3)
-                pal = ((5 * d + 7 * k + 13 * c) % 256).astype(np.uint8)
-                payloads.append(
-                    multimodal.encode_gif(idx, pal, interlace=bool(d % 2))
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        w, h, p = 8 + d % 5, 6 + d % 7, 4 + d % 13
+        x = np.arange(w).reshape(1, w)
+        y = np.arange(h).reshape(h, 1)
+        idx = ((d + 3 * x + 7 * y) % p).astype(np.uint8)
+        k = np.arange(p).reshape(p, 1)
+        c = np.arange(3).reshape(1, 3)
+        pal = ((5 * d + 7 * k + 13 * c) % 256).astype(np.uint8)
+        return multimodal.encode_gif(idx, pal, interlace=bool(d % 2))
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -2759,28 +2734,16 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     image decode queries — the contract a 100 TB audio pipeline needs."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n, ch = 50 + d % 40, 1 + d % 2
-                i = np.arange(n).reshape(n, 1)
-                c = np.arange(ch).reshape(1, ch)
-                samples = ((7 * d + 3 * i + 11 * c) % 65536) - 32768
-                payloads.append(
-                    multimodal.encode_wav(samples, 8000 + d % 100)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        n, ch = 50 + d % 40, 1 + d % 2
+        i = np.arange(n).reshape(n, 1)
+        c = np.arange(ch).reshape(1, ch)
+        samples = ((7 * d + 3 * i + 11 * c) % 65536) - 32768
+        return multimodal.encode_wav(samples, 8000 + d % 100)
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_audio_features(assets)
 
 
@@ -2827,40 +2790,19 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every codec query."""
     from ..operators import flac, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n, ch = 60 + d % 50, 1 + d % 2
-                i = np.arange(n).reshape(n, 1)
-                c = np.arange(ch).reshape(1, ch)
-                samples = (
-                    (11 * d + 5 * i + 7 * c + (i * i) % 13) % 65536
-                ) - 32768
-                mode = (
-                    ("auto", "indep", "left", "right")[d % 4]
-                    if ch == 2
-                    else "auto"
-                )
-                payloads.append(
-                    flac.encode_flac(
-                        samples,
-                        8000 + d % 90,
-                        blocksize=16 + (d % 4) * 16,
-                        stereo_mode=mode,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        n, ch = 60 + d % 50, 1 + d % 2
+        i = np.arange(n).reshape(n, 1)
+        c = np.arange(ch).reshape(1, ch)
+        samples = ((11 * d + 5 * i + 7 * c + (i * i) % 13) % 65536) - 32768
+        mode = ("auto", "indep", "left", "right")[d % 4] if ch == 2 else "auto"
+        return flac.encode_flac(
+            samples, 8000 + d % 90, blocksize=16 + (d % 4) * 16, stereo_mode=mode
+        )
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_audio_features(assets)
 
 
@@ -2941,30 +2883,16 @@ def multimodal_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every codec query."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n, ch = 80 + d % 60, 1 + d % 2
-                i = np.arange(n).reshape(n, 1)
-                c = np.arange(ch).reshape(1, ch)
-                codes = (d + 3 * i + 5 * c) % 256
-                payloads.append(
-                    multimodal.encode_wav_g711(
-                        codes, 8000, "mu" if d % 2 == 0 else "a"
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        n, ch = 80 + d % 60, 1 + d % 2
+        i = np.arange(n).reshape(n, 1)
+        c = np.arange(ch).reshape(1, ch)
+        codes = (d + 3 * i + 5 * c) % 256
+        return multimodal.encode_wav_g711(codes, 8000, "mu" if d % 2 == 0 else "a")
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_audio_features(assets)
 
 
@@ -3002,27 +2930,10 @@ def multimodal_resize_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave the task that synthesized them."""
     from ..operators import multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
+    def payload_of(d: int) -> bytes:
+        return multimodal.encode_png(multimodal.formula_image(d), "none")
 
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 8 + d % 5, 6 + d % 7
-                x = np.arange(w).reshape(1, w, 1)
-                y = np.arange(h).reshape(h, 1, 1)
-                c = np.arange(3).reshape(1, 1, 3)
-                px = ((d + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
-                payloads.append(multimodal.encode_png(px, "none"))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     resized = multimodal.resize_images_real(assets, target_w=10, target_h=12)
     return multimodal.decode_image_features(resized)
 
@@ -3124,47 +3035,32 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     they are produced."""
     from ..operators import jpeg, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 16 + d % 17, 16 + d % 13
-                mode = d % 3
-                bs = 16 if mode == 2 else 8
-                bx = np.arange(w) // bs
-                by = np.arange(h) // bs
-                rst = 2 if d % 2 else 0
-                if mode == 0:
-                    px = (
-                        (3 * d + 5 * bx[None, :] + 11 * by[:, None]) % 256
-                    ).astype(np.uint8)
-                    payloads.append(jpeg.encode_jpeg(px, restart_interval=rst))
-                else:
-                    c = np.arange(3)
-                    px = (
-                        (
-                            3 * d
-                            + 5 * bx[None, :, None]
-                            + 11 * by[:, None, None]
-                            + 17 * c[None, None, :]
-                        )
-                        % 256
-                    ).astype(np.uint8)
-                    sub = "4:4:4" if mode == 1 else "4:2:0"
-                    payloads.append(
-                        jpeg.encode_jpeg(px, subsampling=sub, restart_interval=rst)
-                    )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
+        w, h = 16 + d % 17, 16 + d % 13
+        mode = d % 3
+        bs = 16 if mode == 2 else 8
+        bx = np.arange(w) // bs
+        by = np.arange(h) // bs
+        rst = 2 if d % 2 else 0
+        if mode == 0:
+            px = ((3 * d + 5 * bx[None, :] + 11 * by[:, None]) % 256).astype(np.uint8)
+            return jpeg.encode_jpeg(px, restart_interval=rst)
+        c = np.arange(3)
+        px = (
+            (
+                3 * d
+                + 5 * bx[None, :, None]
+                + 11 * by[:, None, None]
+                + 17 * c[None, None, :]
             )
+            % 256
+        ).astype(np.uint8)
+        sub = "4:4:4" if mode == 1 else "4:2:0"
+        return jpeg.encode_jpeg(px, subsampling=sub, restart_interval=rst)
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -3209,38 +3105,21 @@ def multimodal_jpeg_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two zero-shuffle Arrow map stages, as all codec queries."""
     from ..operators import jpeg, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                nbx, nby = 1 + d % 5, 1 + d % 4
-                blocks = np.zeros((nby, nbx, 8, 8), dtype=np.int64)
-                for b in range(nbx * nby):
-                    for i in range(64):
-                        if (7 * i + b + d) % 29 == 0:
-                            r, c = jpeg.ZIGZAG[i]
-                            blocks[b // nbx, b % nbx, r, c] = (
-                                (d + b + i) % 19
-                            ) - 9
-                payloads.append(
-                    jpeg.encode_jpeg_from_coeffs(
-                        [blocks],
-                        8 * nbx,
-                        8 * nby,
-                        restart_interval=3 if d % 2 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        nbx, nby = 1 + d % 5, 1 + d % 4
+        blocks = np.zeros((nby, nbx, 8, 8), dtype=np.int64)
+        for b in range(nbx * nby):
+            for i in range(64):
+                if (7 * i + b + d) % 29 == 0:
+                    r, c = jpeg.ZIGZAG[i]
+                    blocks[b // nbx, b % nbx, r, c] = ((d + b + i) % 19) - 9
+        return jpeg.encode_jpeg_from_coeffs(
+            [blocks], 8 * nbx, 8 * nby, restart_interval=3 if d % 2 else 0
+        )
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_jpeg_coefficient_features(assets)
 
 
@@ -3332,51 +3211,32 @@ def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two zero-shuffle Arrow map stages, as all codec queries."""
     from ..operators import jpeg, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 17 + d % 15, 15 + d % 11
-                mode = d % 3
-                bs = 16 if mode == 2 else 8
-                bx = np.arange(w) // bs
-                by = np.arange(h) // bs
-                rst = 3 if d % 2 == 0 else 0
-                if mode == 0:
-                    px = (
-                        (5 * d + 7 * bx[None, :] + 13 * by[:, None]) % 256
-                    ).astype(np.uint8)
-                    payloads.append(
-                        jpeg.encode_jpeg_progressive(px, restart_interval=rst)
-                    )
-                else:
-                    c = np.arange(3)
-                    px = (
-                        (
-                            5 * d
-                            + 7 * bx[None, :, None]
-                            + 13 * by[:, None, None]
-                            + 19 * c[None, None, :]
-                        )
-                        % 256
-                    ).astype(np.uint8)
-                    sub = "4:4:4" if mode == 1 else "4:2:0"
-                    payloads.append(
-                        jpeg.encode_jpeg_progressive(
-                            px, subsampling=sub, restart_interval=rst
-                        )
-                    )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
+        w, h = 17 + d % 15, 15 + d % 11
+        mode = d % 3
+        bs = 16 if mode == 2 else 8
+        bx = np.arange(w) // bs
+        by = np.arange(h) // bs
+        rst = 3 if d % 2 == 0 else 0
+        if mode == 0:
+            px = ((5 * d + 7 * bx[None, :] + 13 * by[:, None]) % 256).astype(np.uint8)
+            return jpeg.encode_jpeg_progressive(px, restart_interval=rst)
+        c = np.arange(3)
+        px = (
+            (
+                5 * d
+                + 7 * bx[None, :, None]
+                + 13 * by[:, None, None]
+                + 19 * c[None, None, :]
             )
+            % 256
+        ).astype(np.uint8)
+        sub = "4:4:4" if mode == 1 else "4:2:0"
+        return jpeg.encode_jpeg_progressive(px, subsampling=sub, restart_interval=rst)
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -3421,32 +3281,17 @@ def multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id input, as all codec queries."""
     from ..operators import jpeg, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 15 + d % 13, 14 + d % 9
-                bx = np.arange(w) // 8
-                by = np.arange(h) // 8
-                px = (
-                    (17 * d + 5 * bx[None, :] + 11 * by[:, None]) % 4096
-                ).astype(np.uint16)
-                rst = 2 if d % 3 == 0 else 0
-                enc = (
-                    jpeg.encode_jpeg if d % 2 == 0 else jpeg.encode_jpeg_progressive
-                )
-                payloads.append(enc(px, restart_interval=rst))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        w, h = 15 + d % 13, 14 + d % 9
+        bx = np.arange(w) // 8
+        by = np.arange(h) // 8
+        px = ((17 * d + 5 * bx[None, :] + 11 * by[:, None]) % 4096).astype(np.uint16)
+        enc = jpeg.encode_jpeg if d % 2 == 0 else jpeg.encode_jpeg_progressive
+        return enc(px, restart_interval=2 if d % 3 == 0 else 0)
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -3485,32 +3330,18 @@ def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
     doc_id input, as all codec queries."""
     from ..operators import jpeg, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 9 + d % 14, 8 + d % 11
-                x = np.arange(w).reshape(1, w)
-                y = np.arange(h).reshape(h, 1)
-                px = ((d + 3 * x + 7 * y) % 256).astype(np.uint8)
-                payloads.append(
-                    jpeg.encode_jpeg_lossless(
-                        px,
-                        predictor=1 + d % 7,
-                        restart_interval=7 if d % 2 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+        w, h = 9 + d % 14, 8 + d % 11
+        x = np.arange(w).reshape(1, w)
+        y = np.arange(h).reshape(h, 1)
+        px = ((d + 3 * x + 7 * y) % 256).astype(np.uint8)
+        return jpeg.encode_jpeg_lossless(
+            px, predictor=1 + d % 7, restart_interval=7 if d % 2 else 0
+        )
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -3599,64 +3430,43 @@ def multimodal_jpeg_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to every codec query — two Arrow map stages over
     the repartitioned doc_id input, zero shuffles."""
-    from ..operators import jpeg_arith, multimodal
+    from ..operators import jpeg, jpeg_arith, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 16 + d % 19, 16 + d % 11
-                mode = d % 3
-                bs = 16 if mode == 2 else 8
-                bx = np.arange(w) // bs
-                by = np.arange(h) // bs
-                rst = 2 if d % 2 else 0
-                if mode == 0:
-                    px = (
-                        (5 * d + 7 * bx[None, :] + 13 * by[:, None]) % 256
-                    ).astype(np.uint8)
-                    sub = None
-                else:
-                    c = np.arange(3)
-                    px = (
-                        (
-                            5 * d
-                            + 7 * bx[None, :, None]
-                            + 13 * by[:, None, None]
-                            + 19 * c[None, None, :]
-                        )
-                        % 256
-                    ).astype(np.uint8)
-                    sub = "4:4:4" if mode == 1 else "4:2:0"
-                kw = {} if sub is None else {"subsampling": sub}
-                if d % 5 == 0:
-                    from ..operators.jpeg import _pixels_to_coeffs
-
-                    comps, ww, hh, sampling, qts, _ = _pixels_to_coeffs(
-                        px, None, None, sub or "4:4:4"
-                    )
-                    payloads.append(
-                        jpeg_arith.encode_jpeg_arithmetic_progressive_from_coeffs(
-                            comps, ww, hh, sampling, qts, restart_interval=rst
-                        )
-                    )
-                else:
-                    payloads.append(
-                        jpeg_arith.encode_jpeg_arithmetic(
-                            px, restart_interval=rst, **kw
-                        )
-                    )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
+        w, h = 16 + d % 19, 16 + d % 11
+        mode = d % 3
+        bs = 16 if mode == 2 else 8
+        bx = np.arange(w) // bs
+        by = np.arange(h) // bs
+        rst = 2 if d % 2 else 0
+        if mode == 0:
+            px = ((5 * d + 7 * bx[None, :] + 13 * by[:, None]) % 256).astype(np.uint8)
+            sub = None
+        else:
+            c = np.arange(3)
+            px = (
+                (
+                    5 * d
+                    + 7 * bx[None, :, None]
+                    + 13 * by[:, None, None]
+                    + 19 * c[None, None, :]
+                )
+                % 256
+            ).astype(np.uint8)
+            sub = "4:4:4" if mode == 1 else "4:2:0"
+        if d % 5 == 0:
+            comps, ww, hh, sampling, qts, _ = jpeg._pixels_to_coeffs(
+                px, None, None, sub or "4:4:4"
             )
+            return jpeg_arith.encode_jpeg_arithmetic_progressive_from_coeffs(
+                comps, ww, hh, sampling, qts, restart_interval=rst
+            )
+        kw = {} if sub is None else {"subsampling": sub}
+        return jpeg_arith.encode_jpeg_arithmetic(px, restart_interval=rst, **kw)
 
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_image_features(assets)
 
 
@@ -3699,49 +3509,26 @@ def multimodal_jpeg_arithmetic_coefficients(
     color + framing) the pair covers every stage of the arithmetic
     pipeline with exact external oracles — the same two-query split
     the Huffman codec earned in round 10."""
-    from ..operators import jpeg_arith, multimodal
+    from ..operators import jpeg, jpeg_arith, multimodal
 
-    docs = _doc_ids_repartitioned(spark, sf_dir)
-
-    def encode(batches):
+    def payload_of(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                by, bx = 1 + d % 4, 1 + d % 3
-                blocks = np.zeros((by, bx, 8, 8), dtype=np.int64)
-                flat = blocks.reshape(by * bx, 64)
-                from ..operators.jpeg import ZIGZAG
+        by, bx = 1 + d % 4, 1 + d % 3
+        blocks = np.zeros((by, bx, 8, 8), dtype=np.int64)
+        for b in range(by * bx):
+            for i in range(64):
+                if (5 * i + 2 * b + d) % 31 == 0:
+                    r, c = jpeg.ZIGZAG[i]
+                    blocks[b // bx, b % bx, r, c] = ((d + 3 * b + 2 * i) % 23) - 11
+        enc = (
+            jpeg_arith.encode_jpeg_arithmetic_progressive_from_coeffs
+            if d % 2
+            else jpeg_arith.encode_jpeg_arithmetic_from_coeffs
+        )
+        return enc([blocks], bx * 8, by * 8, restart_interval=3 if d % 3 == 0 else 0)
 
-                for b in range(by * bx):
-                    for i in range(64):
-                        if (5 * i + 2 * b + d) % 31 == 0:
-                            r, c = ZIGZAG[i]
-                            blocks.reshape(by * bx, 8, 8)[b, r, c] = (
-                                (d + 3 * b + 2 * i) % 23
-                            ) - 11
-                del flat
-                rst = 3 if d % 3 == 0 else 0
-                if d % 2:
-                    payloads.append(
-                        jpeg_arith.encode_jpeg_arithmetic_progressive_from_coeffs(
-                            [blocks], bx * 8, by * 8, restart_interval=rst
-                        )
-                    )
-                else:
-                    payloads.append(
-                        jpeg_arith.encode_jpeg_arithmetic_from_coeffs(
-                            [blocks], bx * 8, by * 8, restart_interval=rst
-                        )
-                    )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    assets = docs.mapInPandas(encode, "asset_id bigint, payload binary")
+    assets = _encoded_assets(spark, sf_dir, payload_of)
     return multimodal.decode_jpeg_coefficient_features(assets)
 
 

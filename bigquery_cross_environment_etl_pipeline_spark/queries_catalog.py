@@ -14,7 +14,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources.registry import load_table
 
@@ -25,10 +24,6 @@ WINDOW_END = "2024-01-20 00:00:00"
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
-
-
-def _fmt_ts(col: str, alias: str) -> F.Column:
-    return F.date_format(col, TS_FMT_SPARK).alias(alias)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,6 +99,24 @@ _FORCE_WINDOW: list[str] = [
     "dedup_incremental_new_batch",
     "dedup_levenshtein_verified",
     "ann_topk_lsh",
+    # the codec queries' Python stages now run through one shared
+    # fixture-encode stage (plans/llm._encoded_assets) and one shared
+    # decode stage (operators/multimodal._decode_stage): the window's
+    # hash check re-attests every fixture and decoder on that plumbing
+    "multimodal_image_decode",
+    "multimodal_png_decode",
+    "multimodal_gif_decode",
+    "multimodal_wav_decode",
+    "multimodal_flac_decode",
+    "multimodal_g711_decode",
+    "multimodal_resize_decode",
+    "multimodal_jpeg_decode",
+    "multimodal_jpeg_coefficients",
+    "multimodal_jpeg_progressive",
+    "multimodal_jpeg12_decode",
+    "multimodal_jpeg_lossless_decode",
+    "multimodal_jpeg_arithmetic",
+    "multimodal_jpeg_arithmetic_coefficients",
 ]
 
 _STABLE_ORDER = [

@@ -190,6 +190,18 @@ def stream_windowed_counts(
     )
 
 
+def snapshot_versions(snapshot_dir: str) -> list[tuple[int, str]]:
+    """The complete versions ``stream_cdc_upsert`` wrote under
+    ``snapshot_dir``: ``(version, path)`` for every ``v<N>`` directory
+    holding a ``_SUCCESS`` marker, oldest first."""
+    import glob
+    import os
+    import re
+
+    done = [os.path.dirname(s) for s in glob.glob(f"{snapshot_dir}/v*/_SUCCESS")]
+    return sorted((int(re.search(r"v(\d+)$", p).group(1)), p) for p in done)
+
+
 def stream_cdc_upsert(
     stream: DataFrame,
     snapshot_dir: str,
@@ -223,20 +235,7 @@ def stream_cdc_upsert(
     """
     from ..operators.upsert import collapse_changes
 
-    import glob
-    import os
-    import re
-
-    def _versions() -> list[tuple[int, str]]:
-        done = [
-            os.path.dirname(s)
-            for s in glob.glob(f"{snapshot_dir}/v*/_SUCCESS")
-        ]
-        return sorted(
-            (int(re.search(r"v(\d+)$", p).group(1)), p) for p in done
-        )
-
-    existing = _versions()
+    existing = snapshot_versions(snapshot_dir)
     state = {
         "last": existing[-1][1] if existing else None,
         "next": existing[-1][0] + 1 if existing else 0,
