@@ -136,8 +136,9 @@ def analyze_table(spark: SparkSession, database: str, table: str) -> dict:
     guesses — on a 100 TB warehouse, stats are what keep a 10-way join
     from picking the wrong build side. Returns the recorded stats."""
     fq = f"{database}.{table}"
-    spark.sql(f"ANALYZE TABLE {fq} COMPUTE STATISTICS")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fq}").collect()
+    quoted = f"{quote_ident(database)}.{quote_ident(table)}"
+    spark.sql(f"ANALYZE TABLE {quoted} COMPUTE STATISTICS")
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {quoted}").collect()
     stats = next(
         (r["data_type"] for r in rows if r["col_name"] == "Statistics"), None
     )

@@ -19,6 +19,18 @@ from ..operators.joins import asof_join, range_join
 from ..operators.text import tokens
 from ..queries_catalog import TS_FMT_DUCK, TS_FMT_SPARK, register
 from ..sources.registry import index_cache_path, load_table
+from ..streaming.incremental import (
+    await_drain,
+    drain_memory_sink,
+    file_feed,
+    snapshot_versions,
+    stream_cdc_upsert,
+    stream_session_counts,
+    stream_static_enrich_counts,
+    stream_stream_interval_join,
+    stream_windowed_counts,
+)
+from ..streaming.stateful import stream_user_totals_cents
 from ._vectors import _first_vectors, _load_emb, _query_vector
 
 
@@ -1886,50 +1898,21 @@ def streaming_windowed_counts_query(spark: SparkSession, sf_dir: str) -> DataFra
     return _drain_windowed_counts(spark, sf_dir)
 
 
-def _drain_memory_sink(
-    agg: DataFrame, name: str, mode: str = "append", timeout: int = 300
-) -> None:
-    """Shared publish contract for every streaming query that
-    materializes through a memory sink: Trigger.AvailableNow, drained
-    SYNCHRONOUSLY with the awaitTermination result CHECKED — a
-    timed-out drain would leave a partially-filled sink and silently
-    publish wrong results downstream."""
-    q = (
-        agg.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"stream drain {name!r} did not finish within {timeout}s"
-        )
-
-
 def _drain_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared drain harness for every windowed-counts streaming query:
     events through a file stream -> watermark -> 1-day tumbling windows
-    -> append-mode memory sink (checked drain: _drain_memory_sink)."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream, stream_windowed_counts
-
+    -> append-mode memory sink (checked drain)."""
     events = load_table(spark, sf_dir, "events")
-    name = f"win_counts_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_src_") as tmp:
-        src = f"{tmp}/src"
-        events.write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        agg = stream_windowed_counts(
-            read_stream(spark, src, schema), window_size="1 day"
+    with file_feed(spark, events) as feed:
+        sink = drain_memory_sink(
+            stream_windowed_counts(feed.stream, window_size="1 day")
         )
-        _drain_memory_sink(agg, name)
-    return spark.sql(
-        f"SELECT window_start, event_type, n_events, total_value FROM {name}"
-    ).withColumn("window_start", F.date_format("window_start", TS_FMT_SPARK))
+    return sink.select(
+        F.date_format("window_start", TS_FMT_SPARK).alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
 
 
 @register(
@@ -1975,11 +1958,6 @@ def late_data_watermark_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append-mode emission contract proven by
     streaming_windowed_counts): the hash can only match if the stream
     dropped the late duplicates — a doubled early window breaks it."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream, write_microbatches
-
     events = load_table(spark, sf_dir, "events").filter(
         (F.col("user_id") < 30) & F.col("ts").isNotNull()
     )
@@ -1991,26 +1969,19 @@ def late_data_watermark_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch2 = events.filter(F.col("ts") >= jan20).unionByName(
         events.filter(F.col("ts") < jan5)  # the late redelivery
     )
-    name = f"late_replay_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="late_replay_") as tmp:
-        src = f"{tmp}/src"
-        write_microbatches([batch0, batch1, batch2], src)
-        schema = spark.read.parquet(src).schema
-        agg = (
-            read_stream(spark, src, schema, max_files_per_trigger=1)
-            .withWatermark("ts", "10 minutes")
+    with file_feed(
+        spark, [batch0, batch1, batch2], max_files_per_trigger=1
+    ) as feed:
+        sink = drain_memory_sink(
+            feed.stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 day"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("window.start").alias("window_start"),
-                "event_type",
-                "n_events",
-            )
         )
-        _drain_memory_sink(agg, name)
-    return spark.sql(
-        f"SELECT window_start, event_type, n_events FROM {name}"
-    ).withColumn("window_start", F.date_format("window_start", TS_FMT_SPARK))
+    return sink.select(
+        F.date_format("window.start", TS_FMT_SPARK).alias("window_start"),
+        "event_type",
+        "n_events",
+    )
 
 
 @register(
@@ -2041,31 +2012,23 @@ def streaming_enrich_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     core/services/billing_etl.py). The watermark sits downstream of
     the join, so the emission cutoff is max(MATCHED event time) -
     lateness, exactly what the oracle's feed CTE computes."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream, stream_static_enrich_counts
-
     events = load_table(spark, sf_dir, "events")
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_enrich_") as tmp:
-        src = f"{tmp}/src"
-        events.write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        agg = stream_static_enrich_counts(
-            read_stream(spark, src, schema),
-            dim,
-            join_key_stream="user_id",
-            join_key_dim="c_custkey",
-            group_col="c_mktsegment",
+    with file_feed(spark, events) as feed:
+        sink = drain_memory_sink(
+            stream_static_enrich_counts(
+                feed.stream,
+                dim,
+                join_key_stream="user_id",
+                join_key_dim="c_custkey",
+                group_col="c_mktsegment",
+            )
         )
-        _drain_memory_sink(agg, name)
-    return spark.sql(
-        f"SELECT window_start, c_mktsegment, n_events FROM {name}"
-    ).withColumn("window_start", F.date_format("window_start", TS_FMT_SPARK))
+    return sink.withColumn(
+        "window_start", F.date_format("window_start", TS_FMT_SPARK)
+    )
 
 
 @register(
@@ -2100,39 +2063,28 @@ def streaming_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     dropped on arrival by the join state machine, so it is excluded on
     both engines — a batch oracle without the exclusion would emit a
     pair the stream can never produce."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream, stream_stream_interval_join
-
     events = load_table(spark, sf_dir, "events").filter(
         F.col("ts") > F.lit("1970-01-01 00:00:00").cast("timestamp")
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_ssjoin_") as tmp:
-        lsrc, rsrc = f"{tmp}/clicks", f"{tmp}/purchases"
-        events.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id"
-        ).coalesce(1).write.parquet(lsrc)
-        events.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id"
-        ).coalesce(1).write.parquet(rsrc)
-        lschema = spark.read.parquet(lsrc).schema
-        rschema = spark.read.parquet(rsrc).schema
-        joined = stream_stream_interval_join(
-            read_stream(spark, lsrc, lschema),
-            read_stream(spark, rsrc, rschema),
-            key="user_id",
-            interval="1 hour",
-        ).select(
-            F.col("l.user_id").alias("user_id"),
-            F.col("l.event_id").alias("click_id"),
-            F.col("r.event_id").alias("purchase_id"),
+
+    def feed(event_type: str):
+        real = events.filter(F.col("event_type") == event_type)
+        return file_feed(spark, real.select("user_id", "ts", "event_id").coalesce(1))
+
+    with feed("click") as clicks, feed("purchase") as purchases:
+        sink = drain_memory_sink(
+            stream_stream_interval_join(
+                clicks.stream,
+                purchases.stream,
+                key="user_id",
+                interval="1 hour",
+            ).select(
+                F.col("l.user_id").alias("user_id"),
+                F.col("l.event_id").alias("click_id"),
+                F.col("r.event_id").alias("purchase_id"),
+            )
         )
-        _drain_memory_sink(joined, name)
-    return spark.sql(
-        f"SELECT user_id, click_id, purchase_id FROM {name}"
-    )
+    return sink
 
 
 def _outer_join_nulls_replay(
@@ -2157,24 +2109,12 @@ def _outer_join_nulls_replay(
     Python datetime in the HOST's OS timezone and shift the sentinels
     on a TZ-shifted driver."""
     import datetime as _dt
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import (
-        read_stream,
-        stream_stream_interval_join,
-        write_microbatches,
-    )
 
     events = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
         & (F.col("ts") > F.lit("1970-01-01 00:00:00").cast("timestamp"))
         & F.col("user_id").isNotNull()
     )
-    sides = {
-        "l": events.filter(F.col("event_type") == "click"),
-        "r": events.filter(F.col("event_type") == "purchase"),
-    }
     # adv1 alone must push the watermark (= max event ts - 2h lateness)
     # past every click's match horizon (ts + 1h): max + 3h + margin;
     # adv2's batch then runs the eviction pass that emits the nulls.
@@ -2195,36 +2135,40 @@ def _outer_join_nulls_replay(
         if how == "full_outer"
         else F.col("l.user_id")
     )
-    name = f"{how[0]}ojoin_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix=f"stream_{how[0]}ojoin_") as tmp:
-        for tag, df in sides.items():
-            sentinel = lambda ts: local_df(spark, 
-                [(-1, ts, -1)], "user_id long, ts string, event_id long"
-            ).withColumn("ts", F.col("ts").cast("timestamp"))
-            write_microbatches(
-                [
-                    df.select("user_id", "ts", "event_id"),
-                    sentinel(adv1.strftime("%Y-%m-%d %H:%M:%S")),
-                    sentinel(adv2.strftime("%Y-%m-%d %H:%M:%S")),
-                ],
-                f"{tmp}/{tag}",
-            )
-        schema = spark.read.parquet(f"{tmp}/l").schema
-        joined = stream_stream_interval_join(
-            read_stream(spark, f"{tmp}/l", schema, max_files_per_trigger=1),
-            read_stream(spark, f"{tmp}/r", schema, max_files_per_trigger=1),
-            key="user_id",
-            interval="1 hour",
-            how=how,
-        ).select(
-            user.alias("user_id"),
-            F.col("l.event_id").alias("click_id"),
-            F.col("r.event_id").alias("purchase_id"),
+    # the sentinels carry the real rows' ts type (timestamp_ntz on
+    # data written with isAdjustedToUTC=false): a feed has one schema
+    sentinels = [
+        local_df(
+            spark,
+            [(-1, adv.strftime("%Y-%m-%d %H:%M:%S"), -1)],
+            "user_id long, ts string, event_id long",
+        ).withColumn("ts", F.col("ts").cast(events.schema["ts"].dataType))
+        for adv in (adv1, adv2)
+    ]
+
+    def feed(event_type: str):
+        real = events.filter(F.col("event_type") == event_type)
+        return file_feed(
+            spark,
+            [real.select("user_id", "ts", "event_id"), *sentinels],
+            max_files_per_trigger=1,
         )
-        _drain_memory_sink(joined, name)
-    return spark.sql(
-        f"SELECT user_id, click_id, purchase_id FROM {name} WHERE user_id >= 0"
-    )
+
+    with feed("click") as clicks, feed("purchase") as purchases:
+        sink = drain_memory_sink(
+            stream_stream_interval_join(
+                clicks.stream,
+                purchases.stream,
+                key="user_id",
+                interval="1 hour",
+                how=how,
+            ).select(
+                user.alias("user_id"),
+                F.col("l.event_id").alias("click_id"),
+                F.col("r.event_id").alias("purchase_id"),
+            )
+        )
+    return sink.filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -2420,22 +2364,15 @@ def streaming_session_counts_query(spark: SparkSession, sf_dir: str) -> DataFram
     pair. The oracle also excludes NULL-ts events (edge-replay
     finding): the streaming watermark operator drops rows with NULL
     event time, so the replay must too."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream, stream_session_counts
-
     events = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    name = f"session_counts_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_sess_") as tmp:
-        src = f"{tmp}/src"
-        events.write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        agg = stream_session_counts(read_stream(spark, src, schema))
-        _drain_memory_sink(agg, name)
-    return spark.sql(
-        f"SELECT session_start, user_id, n_events, total_value FROM {name}"
-    ).withColumn("session_start", F.date_format("session_start", TS_FMT_SPARK))
+    with file_feed(spark, events) as feed:
+        sink = drain_memory_sink(stream_session_counts(feed.stream))
+    return sink.select(
+        F.date_format("session_start", TS_FMT_SPARK).alias("session_start"),
+        "user_id",
+        "n_events",
+        "total_value",
+    )
 
 
 # --- provisioning workflow (rows-only: DDL + stateful, not SQL-expressible) ---------------
@@ -2558,11 +2495,6 @@ def streaming_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     indistinguishable from the F3 missing-watermark default, it is a
     sentinel, not data. Excluded identically on both engines (NULL
     event times, which bypass the watermark, stay)."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream
-
     events = load_table(spark, sf_dir, "events").filter(
         (F.col("user_id") < 50)
         & (
@@ -2570,30 +2502,25 @@ def streaming_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame
             | (F.col("ts") > F.lit("1970-01-01 00:00:00").cast("timestamp"))
         )
     )
-    name = f"uniq_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_dedup_") as tmp:
-        src = f"{tmp}/src"
-        # Two deliveries of the same data -> redelivered at-least-once
-        # feed, written ORDERED BY EVENT TIME: the file source lists
-        # part files lexicographically (= range-sort order), so with
-        # maxFilesPerTrigger the watermark advances monotonically with
-        # the micro-batches and a first-ever occurrence can never
-        # arrive behind it. An unordered write could put early events
-        # in a late batch, where they'd be dropped as late and
-        # silently undercount (round-2 advice) — orderBy also
-        # co-locates each redelivered twin with its original, so dedup
-        # state only ever spans one watermark horizon.
-        events.union(events).orderBy("ts").write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        deduped = (
-            read_stream(spark, src, schema, max_files_per_trigger=4)
-            .withWatermark("ts", "10 minutes")
+    # Two deliveries of the same data -> redelivered at-least-once
+    # feed, written ORDERED BY EVENT TIME: the file source lists part
+    # files lexicographically (= range-sort order), so with
+    # maxFilesPerTrigger the watermark advances monotonically with the
+    # micro-batches and a first-ever occurrence can never arrive behind
+    # it. An unordered write could put early events in a late batch,
+    # where they'd be dropped as late and silently undercount (round-2
+    # advice) — orderBy also co-locates each redelivered twin with its
+    # original, so dedup state only ever spans one watermark horizon.
+    redelivered = events.union(events).orderBy("ts")
+    with file_feed(spark, redelivered, max_files_per_trigger=4) as feed:
+        sink = drain_memory_sink(
+            feed.stream.withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["event_id"])
             .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_unique"))
+            .agg(F.count(F.lit(1)).alias("n_unique")),
+            mode="complete",
         )
-        _drain_memory_sink(deduped, name, mode="complete")
-    return spark.sql(f"SELECT event_type, n_unique FROM {name}")
+    return sink
 
 
 # --- protocol round-trip (now oracle-checked) ---------------------------------------------
@@ -3408,38 +3335,26 @@ def streaming_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
     the batch CDC result EXACTLY — same oracle — regardless of how the
     feed splits into batches, which is the invariant that makes the
     operator deployable (batch/stream parity)."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import (
-        read_stream,
-        snapshot_versions,
-        stream_cdc_upsert,
-    )
-
     events = load_table(spark, sf_dir, "events")
     changes = events.withColumn(
         "op", F.when(F.col("event_type") == "error", "D").otherwise("U")
     )
-    with tempfile.TemporaryDirectory(prefix="stream_cdc_") as tmp:
-        src = f"{tmp}/src"
-        # ordered write -> the file stream replays changes in sequence
-        # order across micro-batches (same rationale as
-        # streaming_dedup_unique_counts)
-        changes.orderBy("ts").write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = read_stream(spark, src, schema, max_files_per_trigger=2)
-        q = stream_cdc_upsert(
-            stream,
-            f"{tmp}/snapshot",
-            f"{tmp}/ckpt",
-            keys=["user_id"],
-            sequence_cols=["ts", "event_id"],
+    # ordered write -> the file stream replays changes in sequence
+    # order across micro-batches (same rationale as
+    # streaming_dedup_unique_counts)
+    with file_feed(
+        spark, changes.orderBy("ts"), max_files_per_trigger=2
+    ) as feed:
+        await_drain(
+            stream_cdc_upsert(
+                feed.stream,
+                f"{feed.dir}/snapshot",
+                f"{feed.dir}/ckpt",
+                keys=["user_id"],
+                sequence_cols=["ts", "event_id"],
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("CDC stream drain did not finish within 300s")
-        last = snapshot_versions(f"{tmp}/snapshot")[-1][1]
+        last = snapshot_versions(f"{feed.dir}/snapshot")[-1][1]
         final = spark.read.parquet(last).filter(F.col("op") != "D")
         out = final.select(
             "user_id",
@@ -3447,7 +3362,7 @@ def streaming_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("event_type").alias("last_event_type"),
             F.col("value").alias("last_value"),
         )
-        # materialize before the TemporaryDirectory vanishes.
+        # materialize before the feed's temp space vanishes.
         # INVARIANT: O(result) only — one row per user in the demo
         # slice, the query's final output, not an intermediate
         rows = out.collect()
@@ -3672,26 +3587,15 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     bit-for-bit — a float running sum would depend on batch split
     order and be uncheckable. Update-mode memory sink: the LAST emitted
     row per key is the final state (argmax on an emission index)."""
-    import tempfile
-    import uuid
-
-    from ..streaming.incremental import read_stream
-    from ..streaming.stateful import stream_user_totals_cents
-
     events = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 40)
-    name = f"sutot_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix="stream_state_") as tmp:
-        src = f"{tmp}/src"
-        events.orderBy("ts").write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = read_stream(spark, src, schema, max_files_per_trigger=2)
-        _drain_memory_sink(stream_user_totals_cents(stream), name, mode="update")
+    with file_feed(spark, events.orderBy("ts"), max_files_per_trigger=2) as feed:
+        sink = drain_memory_sink(
+            stream_user_totals_cents(feed.stream), mode="update"
+        )
     # update mode appends one row per (key, micro-batch) to the memory
     # sink; monotonically_increasing_id orders emissions, the window
     # keeps each key's last
-    sink = spark.table(name).withColumn(
-        "_emit", F.monotonically_increasing_id()
-    )
+    sink = sink.withColumn("_emit", F.monotonically_increasing_id())
     w = W.partitionBy("user_id").orderBy(F.desc("_emit"))
     return (
         sink.withColumn("_rn", F.row_number().over(w))

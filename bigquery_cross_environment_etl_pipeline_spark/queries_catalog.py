@@ -117,6 +117,20 @@ _FORCE_WINDOW: list[str] = [
     "multimodal_jpeg_lossless_decode",
     "multimodal_jpeg_arithmetic",
     "multimodal_jpeg_arithmetic_coefficients",
+    # the streaming queries now read their feed through one file-stream
+    # fixture (the feed's own schema, no read-back) and drain through
+    # one checked wait (streaming/incremental.file_feed, drain_memory_sink)
+    "streaming_windowed_counts",
+    "streaming_topk_trending",
+    "late_data_watermark_replay",
+    "streaming_enrich_static_join",
+    "streaming_interval_join_pairs",
+    "streaming_left_outer_join_nulls",
+    "streaming_full_outer_join_nulls",
+    "streaming_session_counts",
+    "streaming_dedup_unique_counts",
+    "streaming_cdc_upsert_snapshot",
+    "streaming_stateful_user_totals",
 ]
 
 _STABLE_ORDER = [

@@ -23,6 +23,11 @@ O(windows-in-horizon) state regardless of total history.
 
 from __future__ import annotations
 
+import contextlib
+import tempfile
+import uuid
+from typing import Iterator, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -59,7 +64,7 @@ def read_stream(
 
 def write_microbatches(dfs, dest_dir: str) -> None:
     """Lay a list of DataFrames out as ONE parquet file per micro-batch
-    (``batch-0.parquet``, ``batch-1.parquet``, ...) with strictly
+    (``batch-0000.parquet``, ``batch-0001.parquet``, ...) with strictly
     increasing pinned mtimes.
 
     This encodes the determinism invariant every file-source
@@ -67,14 +72,20 @@ def write_microbatches(dfs, dest_dir: str) -> None:
     BOTH listing policies a file stream may use — modification time
     AND lexicographic path — so the batch index orders the files by
     name while ``os.utime`` pins matching 100-second-spaced mtimes.
-    One shared definition (used by the batch-replay queries in
-    plans/extended.py and the streaming tests) so a copy can't drop
-    the utime or the name ordering and turn the replay
-    nondeterministic."""
+    One shared definition (used by ``file_feed`` and the streaming
+    tests) so a copy can't drop the utime or the name ordering and
+    turn the replay nondeterministic. A stream has ONE schema, so the
+    frames must agree on column names and types (nullability aside);
+    the check compares driver-side schemas and runs no Spark job."""
     import os
     import shutil
-    import tempfile
 
+    shapes = [df.schema.simpleString() for df in dfs]
+    if len(set(shapes)) > 1:
+        raise ValueError(
+            "write_microbatches: every micro-batch needs the same column"
+            f" names and types, got {shapes}"
+        )
     os.makedirs(dest_dir, exist_ok=True)
     with tempfile.TemporaryDirectory(prefix="microbatch_stage_") as staging:
         for i, df in enumerate(dfs):
@@ -88,6 +99,63 @@ def write_microbatches(dfs, dest_dir: str) -> None:
             dest = f"{dest_dir}/batch-{i:04d}.parquet"
             shutil.move(f"{stage}/{part}", dest)
             os.utime(dest, (1_700_000_000 + 100 * i,) * 2)
+
+
+class FileFeed(NamedTuple):
+    """``stream`` reads the feed; ``dir`` is the temp space holding it,
+    where a caller may put the query's checkpoint and output too."""
+
+    stream: DataFrame
+    dir: str
+
+
+@contextlib.contextmanager
+def file_feed(
+    spark: SparkSession,
+    feed: DataFrame | list[DataFrame],
+    max_files_per_trigger: int | None = None,
+) -> Iterator[FileFeed]:
+    """Write ``feed`` into a temp space this context owns and stream it
+    back: one DataFrame with a plain write, or a list of them through
+    ``write_microbatches``. The stream takes the feed's own schema, so
+    no Spark job re-infers it from the files just written. A memory
+    sink drained inside the context outlives the temp space."""
+    with tempfile.TemporaryDirectory(prefix="stream_feed_") as tmp:
+        if isinstance(feed, list):
+            write_microbatches(feed, f"{tmp}/src")
+            schema = feed[0].schema
+        else:
+            feed.write.parquet(f"{tmp}/src")
+            schema = feed.schema
+        yield FileFeed(
+            read_stream(spark, f"{tmp}/src", schema, max_files_per_trigger), tmp
+        )
+
+
+def await_drain(q: StreamingQuery, timeout: int = 300) -> None:
+    """The one checked wait for an AvailableNow query: if it has not
+    drained within ``timeout`` seconds, stop it and raise, so no
+    caller reads a half-filled sink."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"stream {q.name or q.id} did not drain in {timeout}s")
+
+
+def drain_memory_sink(
+    agg: DataFrame, mode: str = "append", timeout: int = 300
+) -> DataFrame:
+    """Drain ``agg`` with Trigger.AvailableNow into a freshly named
+    memory sink (``await_drain``) and return the sink as a DataFrame."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    q = (
+        agg.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_drain(q, timeout)
+    return agg.sparkSession.table(name)
 
 
 def stream_incremental_append(
@@ -208,7 +276,6 @@ def stream_cdc_upsert(
     checkpoint_dir: str,
     keys: list[str],
     sequence_cols: list[str],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming CDC MERGE: each micro-batch of the keyed change feed is
     collapsed to its latest change per key and merged into a versioned
@@ -257,9 +324,7 @@ def stream_cdc_upsert(
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def stream_static_enrich_counts(

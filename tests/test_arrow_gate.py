@@ -18,9 +18,10 @@ canonicalization (columns sorted by name, rows sorted). It imports
 the REAL tool's ``canon`` so the gate and the full-catalog sweep can
 never drift apart.
 
-Cost stays bounded by the standing <=3-entry force-list policy
-(queries_catalog.py) at sf0.001; the full-catalog Arrow sweep remains
-tools/arrow_replay.py's job at round close.
+Cost is one sf0.001 replay per gated query, so it grows with the force
+list (queries_catalog.py), which has no size cap and is reset each
+round; the full-catalog Arrow sweep remains tools/arrow_replay.py's job
+at round close.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ def _gate_cases():
     oracle-bearing query with no green ledger row (brand-new — the
     rotation's never-green section sends these to the driver next, so
     their first exposure is exactly as imminent as the forced ones,
-    without consuming the <=3 force budget)."""
+    without taking a force-list entry)."""
     queries_catalog._load_all()
     ledger = queries_catalog._load_ledger().get("green", {})
     never_green = [

@@ -32,33 +32,21 @@ def test_session_window_matches_lag_cumsum(spark):
     assert got == expect
 
 
-def test_streaming_session_counts_match_batch_session_window(spark, tmp_path):
+def test_streaming_session_counts_match_batch_session_window(spark):
     """The streaming session_window pipeline (watermark + AvailableNow
     drain) must emit exactly the sessions the batch session_window
     computes — same (user, start, n_events) triples."""
     from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
-        read_stream,
+        drain_memory_sink,
+        file_feed,
         stream_session_counts,
     )
 
     events = load_table(spark, SF_SMOKE, "events").filter(F.col("user_id") < 10)
-    src = str(tmp_path / "src")
-    events.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    agg = stream_session_counts(read_stream(spark, src, schema))
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_eq")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    with file_feed(spark, events) as feed:
+        sink = drain_memory_sink(stream_session_counts(feed.stream))
     got = {
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.sql(
-            "SELECT user_id, session_start, n_events FROM sess_eq"
-        ).collect()
+        (r["user_id"], r["session_start"], r["n_events"]) for r in sink.collect()
     }
     batch = (
         events.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_table
-from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import read_stream
+from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
+    await_drain,
+    file_feed,
+)
 from bigquery_cross_environment_etl_pipeline_spark.streaming.stateful import (
     stream_user_totals_transform_with_state,
     stream_user_totals_with_state,
@@ -17,23 +20,19 @@ from bigquery_cross_environment_etl_pipeline_spark.streaming.stateful import (
 from .conftest import SF_SMOKE
 
 
-def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
+def test_stateful_totals_accumulate_across_batches(spark):
     events = load_table(spark, SF_SMOKE, "events")
     # 4 files -> maxFilesPerTrigger=1 forces 4 micro-batches through state
-    events.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = read_stream(spark, src, schema, max_files_per_trigger=1)
-    q = (
-        stream_user_totals_with_state(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    with file_feed(spark, events.repartition(4), max_files_per_trigger=1) as feed:
+        q = (
+            stream_user_totals_with_state(feed.stream)
+            .writeStream.outputMode("update")
+            .format("memory")
+            .queryName("user_totals")
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drain(q, 180)
     n_batches = len(q.recentProgress)
     assert n_batches >= 2, f"expected multiple micro-batches, got {n_batches}"
 
@@ -75,15 +74,12 @@ def _has_protobuf() -> bool:
         return False
 
 
-def test_transform_with_state_plan_builds(spark, tmp_path):
+def test_transform_with_state_plan_builds(spark):
     """Even without the protobuf runtime dep, the unresolved streaming
     plan (grouping, output schema, Update mode) must build."""
-    src = str(tmp_path / "src_tws_plan")
     events = load_table(spark, SF_SMOKE, "events")
-    events.limit(10).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = read_stream(spark, src, schema, max_files_per_trigger=1)
-    out = stream_user_totals_transform_with_state(stream)
+    with file_feed(spark, events.limit(10), max_files_per_trigger=1) as feed:
+        out = stream_user_totals_transform_with_state(feed.stream)
     assert out.isStreaming
     assert [f.name for f in out.schema.fields] == [
         "user_id",
@@ -97,15 +93,12 @@ def test_transform_with_state_plan_builds(spark, tmp_path):
     reason="transformWithStateInPandas runtime needs google.protobuf "
     "(absent in this container; operator exercised on real clusters)",
 )
-def test_transform_with_state_matches_batch_totals(spark, tmp_path):
+def test_transform_with_state_matches_batch_totals(spark):
     """transformWithStateInPandas (Spark 4 named-state API, RocksDB
     store) must accumulate across micro-batches to the same per-user
     totals as the batch aggregate — and as the applyInPandasWithState
     form above."""
-    src = str(tmp_path / "src_tws")
     events = load_table(spark, SF_SMOKE, "events")
-    events.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
@@ -113,16 +106,16 @@ def test_transform_with_state_matches_batch_totals(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        stream = read_stream(spark, src, schema, max_files_per_trigger=1)
-        q = (
-            stream_user_totals_transform_with_state(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("user_totals_tws")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+        with file_feed(spark, events.repartition(4), max_files_per_trigger=1) as feed:
+            q = (
+                stream_user_totals_transform_with_state(feed.stream)
+                .writeStream.outputMode("update")
+                .format("memory")
+                .queryName("user_totals_tws")
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_drain(q, 180)
         assert len(q.recentProgress) >= 2
     finally:
         if prev is None:

@@ -7,16 +7,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_table
-from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import read_stream
+from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
+    drain_memory_sink,
+    file_feed,
+    stream_stream_interval_join,
+)
 
 from .conftest import SF_SMOKE
 
 
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "src")
+def test_stream_stream_interval_join_matches_batch(spark):
     events = load_table(spark, SF_SMOKE, "events")
-    events.write.parquet(src)
-    schema = spark.read.parquet(src).schema
 
     def sides(df):
         purchases = df.filter(F.col("event_type") == "purchase").select(
@@ -32,27 +33,16 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
         return purchases, clicks
 
     # streaming: watermark both sides + time-interval join condition
-    stream = read_stream(spark, src, schema)
-    sp, sc = sides(stream)
-    joined = sp.withWatermark("p_ts", "1 hour").join(
-        sc.withWatermark("c_ts", "1 hour"),
-        F.expr(
-            "p_user = c_user AND c_ts >= p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"
-        ),
-    )
-    q = (
-        joined.select("purchase_id", "click_id")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "streaming drain timed out"
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM ss_join").collect()
-    }
+    with file_feed(spark, events) as feed:
+        sp, sc = sides(feed.stream)
+        joined = sp.withWatermark("p_ts", "1 hour").join(
+            sc.withWatermark("c_ts", "1 hour"),
+            F.expr(
+                "p_user = c_user AND c_ts >= p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"
+            ),
+        )
+        sink = drain_memory_sink(joined.select("purchase_id", "click_id"), timeout=180)
+    got = {(r["purchase_id"], r["click_id"]) for r in sink.collect()}
 
     bp, bc = sides(events)
     expect = {
@@ -70,18 +60,13 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert got == expect
 
 
-def test_full_outer_emits_nulls_on_both_sides(spark, tmp_path):
+def test_full_outer_emits_nulls_on_both_sides(spark):
     """FULL OUTER: an unmatched click flushes with NULL purchase AND an
     unmatched purchase flushes with NULL click once the watermark
     passes each horizon — the two state machines the round-8 catalog
     query composes, pinned here on a 4-row fixture where every
     expected row is known by construction."""
     import datetime as dt
-
-    from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
-        stream_stream_interval_join,
-        write_microbatches,
-    )
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     fmt = "%Y-%m-%d %H:%M:%S"
@@ -106,37 +91,28 @@ def test_full_outer_emits_nulls_on_both_sides(spark, tmp_path):
     adv1 = (t0 + dt.timedelta(hours=4)).strftime(fmt)
     adv2 = (t0 + dt.timedelta(hours=30)).strftime(fmt)
     sent = lambda ts: df([(-1, ts, -1)])
-    write_microbatches(
-        [clicks, sent(adv1), sent(adv2)], str(tmp_path / "l")
-    )
-    write_microbatches(
-        [purchases, sent(adv1), sent(adv2)], str(tmp_path / "r")
-    )
-    schema = spark.read.parquet(str(tmp_path / "l")).schema
-    joined = stream_stream_interval_join(
-        read_stream(spark, str(tmp_path / "l"), schema, max_files_per_trigger=1),
-        read_stream(spark, str(tmp_path / "r"), schema, max_files_per_trigger=1),
-        key="user_id",
-        interval="1 hour",
-        how="full_outer",
-    ).select(
-        F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
-        F.col("l.event_id").alias("click_id"),
-        F.col("r.event_id").alias("purchase_id"),
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("fo_join_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "streaming drain timed out"
+    with file_feed(
+        spark, [clicks, sent(adv1), sent(adv2)], max_files_per_trigger=1
+    ) as left, file_feed(
+        spark, [purchases, sent(adv1), sent(adv2)], max_files_per_trigger=1
+    ) as right:
+        sink = drain_memory_sink(
+            stream_stream_interval_join(
+                left.stream,
+                right.stream,
+                key="user_id",
+                interval="1 hour",
+                how="full_outer",
+            ).select(
+                F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
+                F.col("l.event_id").alias("click_id"),
+                F.col("r.event_id").alias("purchase_id"),
+            ),
+            timeout=180,
+        )
     got = {
         (r["user_id"], r["click_id"], r["purchase_id"])
-        for r in spark.sql(
-            "SELECT * FROM fo_join_test WHERE user_id >= 0"
-        ).collect()
+        for r in sink.filter(F.col("user_id") >= 0).collect()
     }
     assert got == {
         (1, 10, None),  # click-side null emission

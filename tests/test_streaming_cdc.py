@@ -19,7 +19,8 @@ import re
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
-    read_stream,
+    await_drain,
+    file_feed,
     stream_cdc_upsert,
 )
 
@@ -42,21 +43,16 @@ def test_tombstone_survives_late_lower_sequence(spark, tmp_path):
     #          resurrect it; keys 2 and 3 get ordinary updates
     a = [(1, 5, "D", 10.0), (2, 1, "U", 1.0)]
     b = [(1, 3, "U", 99.0), (2, 2, "U", 2.0), (3, 1, "U", 3.0)]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(a, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-
-    stream = read_stream(
-        spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
-    )
-    q = stream_cdc_upsert(
-        stream,
-        str(tmp_path / "snap"),
-        str(tmp_path / "ckpt"),
-        keys=["k"],
-        sequence_cols=["seq"],
-    )
-    q.awaitTermination(120)
+    feed = [spark.createDataFrame(rows, SCHEMA) for rows in (a, b)]
+    with file_feed(spark, feed, max_files_per_trigger=1) as ff:
+        q = stream_cdc_upsert(
+            ff.stream,
+            str(tmp_path / "snap"),
+            str(tmp_path / "ckpt"),
+            keys=["k"],
+            sequence_cols=["seq"],
+        )
+        await_drain(q, 120)
 
     assert _final_state(spark, str(tmp_path / "snap")) == {
         2: (2, 2.0),
@@ -82,23 +78,17 @@ def test_multi_batch_equals_single_batch(spark, tmp_path):
         for r in apply_changes(changes, ["k"], ["seq"]).collect()
     }
 
-    src = str(tmp_path / "src")
     # 4 separate files -> 4 micro-batches at maxFilesPerTrigger=1
-    for part in range(4):
-        changes.filter(F.col("seq") % 4 == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    stream = read_stream(
-        spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
-    )
-    q = stream_cdc_upsert(
-        stream,
-        str(tmp_path / "snap"),
-        str(tmp_path / "ckpt"),
-        keys=["k"],
-        sequence_cols=["seq"],
-    )
-    q.awaitTermination(180)
+    feed = [changes.filter(F.col("seq") % 4 == part) for part in range(4)]
+    with file_feed(spark, feed, max_files_per_trigger=1) as ff:
+        q = stream_cdc_upsert(
+            ff.stream,
+            str(tmp_path / "snap"),
+            str(tmp_path / "ckpt"),
+            keys=["k"],
+            sequence_cols=["seq"],
+        )
+        await_drain(q, 180)
 
     assert _final_state(spark, str(tmp_path / "snap")) == expected
 
@@ -108,24 +98,13 @@ def test_recovery_resumes_from_latest_version(spark, tmp_path):
     # regression case: a fresh-checkpoint successor restarts epoch ids
     # at 0, and naming versions by epoch would write its merge BELOW
     # the existing versions where max-version readers never see it
-    src1 = str(tmp_path / "src1")
-    spark.createDataFrame([(1, 1, "U", 1.0)], SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src1)
-    spark.createDataFrame([(3, 1, "U", 3.0)], SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src1)
+    feed1 = [spark.createDataFrame([r], SCHEMA) for r in [(1, 1, "U", 1.0), (3, 1, "U", 3.0)]]
     snap = str(tmp_path / "snap")
-    q = stream_cdc_upsert(
-        read_stream(
-            spark, src1, spark.read.parquet(src1).schema, max_files_per_trigger=1
-        ),
-        snap,
-        str(tmp_path / "ckpt1"),
-        keys=["k"],
-        sequence_cols=["seq"],
-    )
-    q.awaitTermination(120)
+    with file_feed(spark, feed1, max_files_per_trigger=1) as ff:
+        q = stream_cdc_upsert(
+            ff.stream, snap, str(tmp_path / "ckpt1"), keys=["k"], sequence_cols=["seq"]
+        )
+        await_drain(q, 120)
     assert _final_state(spark, snap) == {1: (1, 1.0), 3: (1, 3.0)}
     import glob
 
@@ -134,16 +113,11 @@ def test_recovery_resumes_from_latest_version(spark, tmp_path):
 
     # a NEW query (fresh checkpoint, new feed) over the same snapshot
     # dir must merge ON TOP of the newest version, not under it
-    src2 = str(tmp_path / "src2")
-    spark.createDataFrame([(2, 1, "U", 2.0)], SCHEMA).write.parquet(src2)
-    q2 = stream_cdc_upsert(
-        read_stream(spark, src2, spark.read.parquet(src2).schema),
-        snap,
-        str(tmp_path / "ckpt2"),
-        keys=["k"],
-        sequence_cols=["seq"],
-    )
-    q2.awaitTermination(120)
+    with file_feed(spark, spark.createDataFrame([(2, 1, "U", 2.0)], SCHEMA)) as ff:
+        q2 = stream_cdc_upsert(
+            ff.stream, snap, str(tmp_path / "ckpt2"), keys=["k"], sequence_cols=["seq"]
+        )
+        await_drain(q2, 120)
     assert _final_state(spark, snap) == {
         1: (1, 1.0),
         2: (1, 2.0),

@@ -6,7 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_table
-from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import read_stream
+from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
+    drain_memory_sink,
+    file_feed,
+)
 
 from .conftest import SF_SMOKE
 
@@ -40,54 +43,33 @@ def test_streaming_dedup_query_matches_batch_distinct(spark):
     assert got == want
 
 
-def test_streaming_drop_duplicates_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
+def test_streaming_drop_duplicates_across_batches(spark):
     events = load_table(spark, SF_SMOKE, "events").limit(200)
     # the same 200 events written twice -> two files -> two micro-batches
-    events.coalesce(1).write.mode("append").parquet(src)
-    events.coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-    assert spark.read.parquet(src).count() == 400
-
-    stream = read_stream(spark, src, schema, max_files_per_trigger=1)
-    deduped = stream.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("SELECT count(*) AS n FROM dedup_stream").first()["n"]
+    with file_feed(spark, [events, events], max_files_per_trigger=1) as feed:
+        assert spark.read.parquet(f"{feed.dir}/src").count() == 400
+        sink = drain_memory_sink(
+            feed.stream.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"]),
+            timeout=180,
+        )
+    got = sink.count()
     assert got == 200, f"expected 200 unique events, got {got}"
 
 
-def test_streaming_dedup_within_watermark_bounds_state(spark, tmp_path):
+def test_streaming_dedup_within_watermark_bounds_state(spark):
     """dropDuplicatesWithinWatermark: same dedup result, but state for
     a key is EVICTED once the watermark passes it — at 100 TB/day the
     plain dropDuplicates state grows without bound, this variant holds
     only the watermark horizon."""
-    src = str(tmp_path / "src")
     events = load_table(spark, SF_SMOKE, "events").limit(200)
-    events.coalesce(1).write.mode("append").parquet(src)
-    events.coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = read_stream(spark, src, schema, max_files_per_trigger=1)
-    deduped = stream.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_wm_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_wm_stream"
+    with file_feed(spark, [events, events], max_files_per_trigger=1) as feed:
+        sink = drain_memory_sink(
+            feed.stream.withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"]),
+            timeout=180,
+        )
+    got = sink.agg(
+        F.count(F.lit(1)).alias("n"), F.countDistinct("event_id").alias("d")
     ).first()
     assert got["d"] == 200
     assert got["n"] == 200, f"duplicates within the watermark horizon dropped, got {got['n']}"
