@@ -69,16 +69,6 @@ def drop_database_cascade(spark: SparkSession, name: str) -> None:
     spark.sql(f"DROP DATABASE IF EXISTS {quote_ident(name)} CASCADE")
 
 
-def list_databases(spark: SparkSession) -> list[str]:
-    """D5 (reference core/bigquery/client.py:33-40)."""
-    return [d.name for d in spark.catalog.listDatabases()]
-
-
-def list_tables(spark: SparkSession, database: str) -> list[str]:
-    """D5."""
-    return [t.name for t in spark.catalog.listTables(database)]
-
-
 @dataclasses.dataclass
 class ProvisionResult:
     org_id: int

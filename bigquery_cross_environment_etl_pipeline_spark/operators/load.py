@@ -114,20 +114,6 @@ def load_append(
     )
 
 
-def json_boundary(df: DataFrame) -> DataFrame:
-    """P6: render timestamp/date columns as ISO-8601 strings — applied
-    only at a JSON sink edge (reference serialize_row, billing_etl.py:35-40),
-    never inside the engine."""
-    out = df
-    for field in df.schema.fields:
-        t = field.dataType.typeName()
-        if t in ("timestamp", "date"):
-            out = out.withColumn(
-                field.name, F.date_format(field.name, "yyyy-MM-dd'T'HH:mm:ss")
-            )
-    return out
-
-
 def write_sorted_partitions(
     df: DataFrame,
     dest_path: str,
@@ -152,21 +138,28 @@ def write_sorted_partitions(
 
 
 @contextlib.contextmanager
-def micros_timestamps(spark):
-    """Write parquet timestamps as INT64 TIMESTAMP_MICROS inside the
-    block, restoring the session's previous setting afterwards so it
-    doesn't leak into whatever runs next. INT96, the default encoding,
-    carries NO row-group statistics, so a writer whose point is
-    prunable files must force the stats-bearing one, even on a vanilla
-    session. It has to be the session conf: the parquet writer ignores
-    ``outputTimestampType`` passed as a write option."""
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
+def session_conf(spark, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` inside the block and
+    restore the previous setting (or unset it) afterwards, so it
+    doesn't leak into whatever runs next."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         if prev is None:
-            spark.conf.unset(conf_key)
+            spark.conf.unset(key)
         else:
-            spark.conf.set(conf_key, prev)
+            spark.conf.set(key, prev)
+
+
+def micros_timestamps(spark):
+    """Write parquet timestamps as INT64 TIMESTAMP_MICROS inside the
+    block. INT96, the default encoding, carries NO row-group
+    statistics, so a writer whose point is prunable files must force
+    the stats-bearing one, even on a vanilla session. It has to be the
+    session conf: the parquet writer ignores ``outputTimestampType``
+    passed as a write option."""
+    return session_conf(
+        spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    )

@@ -30,7 +30,8 @@ def _estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
     """How many partitions Spark's file-source packing would give a
     parquet scan of ``path`` — computed from os.stat with the SAME
     split math as ``FilePartition.maxSplitBytes`` (bytes-per-core
-    floor, open-cost charge, maxPartitionBytes cap), so the gate below
+    floor over ``minPartitionNum`` or the default parallelism,
+    open-cost charge, maxPartitionBytes cap), so the gate below
     costs nothing. (The exact check — ``df.rdd.getNumPartitions()`` —
     measured ~0.25 s PER DATAFRAME of physical-planning machinery,
     which across the ~20 gated queries cost more than the repartition
@@ -51,13 +52,17 @@ def _estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
         if not sizes:
             return 1
         total = sum(sizes)
-        open_cost = int(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
+        # Spark's own typed getters: they parse byte suffixes ("1m")
+        # and apply the defaults exactly as the file scan does
+        conf = spark._jsparkSession.sessionState().conf()
+        open_cost = conf.filesOpenCostInBytes()
+        max_bytes = conf.filesMaxPartitionBytes()
+        min_parts = conf.filesMinPartitionNum()
+        parallelism = (
+            min_parts.get()
+            if min_parts.isDefined()
+            else spark.sparkContext.defaultParallelism
         )
-        max_bytes = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        parallelism = spark.sparkContext.defaultParallelism
         bytes_per_core = (total + open_cost * len(sizes)) // max(
             1, parallelism
         )
@@ -81,7 +86,7 @@ def _estimated_scan_partitions(spark: SparkSession, path: str) -> int | None:
         if cur > 0:
             parts += 1
         return max(1, parts)
-    except (OSError, ValueError):
+    except OSError:
         return None
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType, TimestampNTZType
 
-from ..operators.load import load_append
+from ..operators.load import load_append, session_conf
 
 
 def ensure_event_time(df: DataFrame) -> DataFrame:
@@ -119,8 +119,19 @@ def file_feed(
     back: one DataFrame with a plain write, or a list of them through
     ``write_microbatches``. The stream takes the feed's own schema, so
     no Spark job re-infers it from the files just written. A memory
-    sink drained inside the context outlives the temp space."""
-    with tempfile.TemporaryDirectory(prefix="stream_feed_") as tmp:
+    sink drained inside the context outlives the temp space.
+
+    Inside the context ``spark.sql.shuffle.partitions`` is capped at
+    the default parallelism: a stateful stream keeps one state store
+    per shuffle partition and runs every partition each micro-batch.
+    At a vanilla session's 200 the 11 streaming catalog builders took
+    377 s at sf0.01 on a 4-core local[4] session, against 35 s with
+    the cap."""
+    cap = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    with session_conf(
+        spark, key, str(min(int(spark.conf.get(key)), cap))
+    ), tempfile.TemporaryDirectory(prefix="stream_feed_") as tmp:
         if isinstance(feed, list):
             write_microbatches(feed, f"{tmp}/src")
             schema = feed[0].schema

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from _duck import BoundedOracle, replay  # tools/, on the path via conftest
+
 from bigquery_cross_environment_etl_pipeline_spark.operators.curation import (
     curate_corpus,
     global_running_sum,
@@ -131,38 +133,32 @@ def test_chunk_with_overlap_null_text_parity(spark):
     oracle (latent round-5 divergence: the oracle's one-sided
     COALESCE('') vs Spark's NULL chunk_text — no generated corpus has
     NULL text, so only this planted-row replay guards it)."""
-    import duckdb
-
+    from bigquery_cross_environment_etl_pipeline_spark import queries_catalog
     from bigquery_cross_environment_etl_pipeline_spark.operators.curation import (
         chunk_with_overlap,
     )
+    from bigquery_cross_environment_etl_pipeline_spark.plans import llm
 
     rows = [(1, None), (2, ""), (3, "   "), (4, "a b c")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted(
-        (r["doc_id"], r["chunk_id"], r["start_token"],
-         r["n_chunk_tokens"], r["chunk_text"])
-        for r in chunk_with_overlap(docs, chunk_len=4, stride=3).collect()
+    values = ", ".join(
+        "({}, {})".format(i, "NULL" if t is None else repr(t)) for i, t in rows
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents AS SELECT * FROM (VALUES "
-        + ", ".join(
-            "({}, {})".format(i, "NULL" if t is None else repr(t))
-            for i, t in rows
-        )
-        + ") t(doc_id, text)"
-    )
-    # the registered oracle, re-parameterized to chunk_len=4 / stride=3
-    from bigquery_cross_environment_etl_pipeline_spark import queries_catalog
-    from bigquery_cross_environment_etl_pipeline_spark.plans import llm
-
+    # the registered oracle, re-parameterized to chunk_len=4 / stride=3,
+    # over the planted rows
     oracle = queries_catalog._ORACLE["doc_chunk_overlap"]
     oracle = oracle.replace(str(llm._CHUNK_LEN), "4").replace(
         str(llm._CHUNK_STRIDE), "3"
     )
-    want = sorted(tuple(r) for r in con.execute(oracle).fetchall())
-    assert got == want
+    sql = (
+        f"WITH documents AS (SELECT * FROM (VALUES {values}) t(doc_id, text))"
+        f" SELECT * FROM ({oracle})"
+    )
+    with BoundedOracle() as ora:
+        out = replay(
+            lambda: chunk_with_overlap(docs, chunk_len=4, stride=3), sql, ora
+        )
+    assert out.ok, out
 
 
 def test_chunk_with_overlap_invariants(spark):

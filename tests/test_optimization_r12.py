@@ -74,16 +74,19 @@ def test_unstatable_path_adds_no_exchange(spark):
 def test_estimated_scan_partitions_matches_spark(spark, tmp_path):
     """The os-stat estimate must agree with the partition count
     Spark's file-source packing actually produces — checked on the
-    narrow local artifact (1) and on a many-file layout wide enough
-    to clear the gate."""
+    narrow local artifact (1), on a many-file layout wide enough to
+    clear the gate, and on that layout under a byte-suffixed
+    ``maxPartitionBytes`` and under ``minPartitionNum`` (the estimate
+    reads Spark's typed conf values, so both count exactly)."""
     import os
 
     from bigquery_cross_environment_etl_pipeline_spark.plans.llm import (
         _estimated_scan_partitions,
     )
 
-    sf = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
-    path = os.path.join(sf, "documents.parquet")
+    from .conftest import SF_SMOKE
+
+    path = os.path.join(SF_SMOKE, "documents.parquet")
     est = _estimated_scan_partitions(spark, path)
     real = spark.read.parquet(path).rdd.getNumPartitions()
     assert est == real == 1
@@ -96,6 +99,19 @@ def test_estimated_scan_partitions_matches_spark(spark, tmp_path):
     real_wide = spark.read.parquet(out).rdd.getNumPartitions()
     par = spark.sparkContext.defaultParallelism
     assert (est_wide >= par) == (real_wide >= par)
+
+    for key, value in (
+        ("spark.sql.files.maxPartitionBytes", "1m"),
+        ("spark.sql.files.minPartitionNum", "1"),
+    ):
+        spark.conf.set(key, value)
+        try:
+            for p in (path, out):
+                want = spark.read.parquet(p).rdd.getNumPartitions()
+                got = _estimated_scan_partitions(spark, p)
+                assert got == want, (key, value, p, got, want)
+        finally:
+            spark.conf.unset(key)
 
 
 # ---------------------------------------------------------------------------

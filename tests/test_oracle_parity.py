@@ -1,101 +1,38 @@
 """Mirror of the driver's correctness gate: every query with an oracle
-must match DuckDB exactly (row count + column names + order-insensitive
-values, floats compared bitwise).
+must match DuckDB exactly, in the Arrow canonical form of the one
+comparator (tools/_duck.py: column names, row count, every cell's
+repr — NULL vs NaN, int vs float vs Decimal kept apart).
 
-Runs at sf0.001 by default for speed; set PARITY_SF_DIR=/root/testdata/sf0.01
-to reproduce the driver's scale.
+Runs at sf0.001; ``python tools/arrow_replay.py --sf <dir>`` replays
+the catalog at any other scale, ``pytest -k`` picks queries here.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
+
+from _duck import BoundedOracle, replay  # tools/, on the path via conftest
 
 from bigquery_cross_environment_etl_pipeline_spark import queries_catalog
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import TABLES
 
-SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    # bound the oracle evaluator and let it SPILL instead of failing:
-    # DuckDB's default memory target is 80% of RAM, which a co-tenant-
-    # loaded box (plus the live 16g Spark driver JVM of this suite)
-    # cannot always satisfy — the heaviest replay oracle
-    # (ann_recall_nprobe_sweep) transiently died with a bad-allocation
-    # OutOfMemoryException in full-suite runs. A modest limit + temp
-    # directory keeps the comparison identical, just spillable.
-    con.sql("SET memory_limit='6GB'")
-    con.sql("SET temp_directory='/tmp/duckdb_parity_spill'")
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return con
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    return v
-
-
-def _key(row):
-    return tuple(repr(_norm(v)) for v in row)
-
+from .conftest import SF_SMOKE
 
 QUERIES = queries_catalog.spark_queries()
 ORACLES = queries_catalog.oracle_queries()
 WITH_ORACLE = sorted(ORACLES)
 
-ONLY = os.environ.get("PARITY_ONLY")
-if ONLY:
-    WITH_ORACLE = [q for q in WITH_ORACLE if q in ONLY.split(",")]
+
+@pytest.fixture(scope="module")
+def oracle():
+    with BoundedOracle(SF_SMOKE, TABLES) as ora:
+        yield ora
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    spark_cols = sorted(sdf.columns)
-    spark_rows = [tuple(r[c] for c in spark_cols) for r in sdf.collect()]
-
-    # retry ONCE on a transient allocation failure with a fresh
-    # connection (the tools/_duck.py round-8 policy): a co-tenant
-    # memory spike must read as a retried pass, not a red parity row
-    for attempt in (0, 1):
-        con = _duck()
-        try:
-            res = con.sql(ORACLES[name])
-            duck_cols_raw = list(res.columns)
-            assert sorted(duck_cols_raw) == spark_cols, (
-                f"{name}: column mismatch spark={spark_cols}"
-                f" duck={sorted(duck_cols_raw)}"
-            )
-            order = [duck_cols_raw.index(c) for c in spark_cols]
-            duck_rows = [tuple(r[i] for i in order) for r in res.fetchall()]
-            break
-        except duckdb.OutOfMemoryException:
-            con.close()
-            if attempt:
-                raise
-
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    s_sorted = sorted((_key(r) for r in spark_rows))
-    d_sorted = sorted((_key(r) for r in duck_rows))
-    mismatches = [
-        (a, b) for a, b in zip(s_sorted, d_sorted) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} value mismatches; first 3: {mismatches[:3]}"
-    )
+def test_query_matches_oracle(spark, oracle, name):
+    out = replay(lambda: QUERIES[name](spark, SF_SMOKE), ORACLES[name], oracle)
+    assert out.ok, f"{name}: {out}"
 
 
 def test_all_queries_have_entries():
@@ -111,26 +48,19 @@ def test_all_queries_have_entries():
 def test_rows_only_queries_execute(spark):
     rows_only = sorted(set(QUERIES) - set(ORACLES))
     for name in rows_only:
-        df = QUERIES[name](spark, SF_DIR)
+        df = QUERIES[name](spark, SF_SMOKE)
         assert df.count() > 0, f"{name} returned no rows"
 
 
-def test_timestamp_rendering_survives_shifted_session_tz(spark):
+def test_timestamp_rendering_survives_shifted_session_tz(spark, oracle):
     """The driver's session may start on a TZ-shifted host; load_table
     re-pins session UTC so rendered timestamps still match the TZ-naive
-    DuckDB oracle. Simulate the shift and check one rendered value."""
+    DuckDB oracle. Simulate the shift and replay a query that renders
+    timestamps."""
+    name = "incremental_window_scan"
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        sdf = QUERIES["incremental_window_scan"](spark, SF_DIR)
-        got = {r["event_id"]: r["ts_str"] for r in sdf.limit(50).collect()}
-        con = _duck()
-        ids = ",".join(str(i) for i in got)
-        want = dict(
-            con.sql(
-                "SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') "
-                f"FROM events WHERE event_id IN ({ids})"
-            ).fetchall()
-        )
-        assert got == want
+        out = replay(lambda: QUERIES[name](spark, SF_SMOKE), ORACLES[name], oracle)
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert out.ok, f"{name}: {out}"

@@ -68,10 +68,14 @@ def test_rows_only_sort_last():
 
 
 def test_force_window_entries_lead():
+    """Every _FORCE_WINDOW entry names a registered query (a stale or
+    misspelt entry would otherwise be dropped without a word) and the
+    entries lead the order, in list order."""
     names, oracle_names = _catalog()
+    unknown = [n for n in qc._FORCE_WINDOW if n not in names]
+    assert not unknown, f"_FORCE_WINDOW entries not registered: {unknown}"
     order = qc._window_order(names, oracle_names, qc._load_ledger())
-    forced = [n for n in qc._FORCE_WINDOW if n in names]
-    assert order[: len(forced)] == forced
+    assert order[: len(qc._FORCE_WINDOW)] == qc._FORCE_WINDOW
 
 
 def test_liveness_from_empty_ledger():

@@ -191,6 +191,21 @@ def test_file_feed_runs_only_the_feeds_write(spark, tmp_path):
     assert fixture_jobs == write_jobs
 
 
+def test_file_feed_caps_shuffle_partitions_at_the_core_count(spark):
+    """A stateful stream runs every shuffle partition each micro-batch:
+    inside the fixture a vanilla session's 200 reads the default
+    parallelism, and the old value is back on exit."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        with file_feed(spark, spark.range(3)):
+            assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_write_microbatches_rejects_frames_of_different_schemas(spark, tmp_path):
     a = spark.createDataFrame([(1, "x")], "k long, v string")
     with pytest.raises(ValueError, match="same column names and types"):

@@ -1,38 +1,18 @@
 #!/usr/bin/env python
-"""Replay the full oracle catalog through the ARROW consumer path.
+"""Replay the oracle catalog on a bare session through the one
+comparator (tools/_duck.py).
 
-The per-round external driver consumes both engines' results through
-Arrow — and Arrow surfaces types the repo's fetchall()-based parity
-harness (tests/test_oracle_parity.py, tools/edge_fixture.py) silently
-normalizes: DuckDB HUGEINT becomes decimal128 -> Python Decimal under
-Arrow but a plain int under fetchall(). That one difference made
-`corpus_sequence_packing` hash-green locally and hash-red externally
-for two consecutive rounds (r6/r7, root-caused r8). This tool closes
-the observability gap for the whole catalog: every registered query
-runs on Spark (`toPandas`, Arrow-enabled) and its oracle runs in
-DuckDB via `fetch_arrow_table()`, and rows are compared repr-exact
-after the driver's canonicalization (columns sorted by name, rows
-sorted) — i.e. the comparison happens in the SAME type domain the
-external gate hashes in.
+Every named query (default: every query with an oracle) runs on a
+driver-shaped ``SparkSession.builder.master("local[N]")`` session and
+its oracle in a bounded DuckDB session over ``--sf``; the two are
+compared in the Arrow canonical form the external driver hashes in.
+The session pins no time zone, so run it under both host zones:
 
-tests/test_oracle_types.py bans the known-fatal class (int128
-outputs) structurally and cheaply on every pytest run; this replay is
-the belt-and-braces sweep for anything the ban does not model
-(timestamp unit drift, decimal scale, list-column materialization).
-Run it per-round alongside the edge replay:
+    TZ=UTC python tools/arrow_replay.py --sf path/to/sf0.01
+    TZ=America/New_York python tools/arrow_replay.py --sf path/to/sf0.01
+    python tools/arrow_replay.py q1 q2          # a subset, sf0.001
 
-    python tools/arrow_replay.py                 # full catalog, sf0.001
-    python tools/arrow_replay.py --sf /root/testdata/sf0.01 q1 q2
-
-Round-8 baseline: full catalog green at sf0.001 (204/204 before the
-round's additions, 210/210 after) and every new/changed query green
-at sf0.01.
-
-Round 9 institutionalized the per-query gate: tests/test_arrow_gate.py
-replays every _FORCE_WINDOW entry (the round's new/changed queries)
-through this module's ``canon`` comparator on EVERY pytest run, so a
-query's first external exposure cannot precede its first Arrow-domain
-check even if this full sweep is forgotten.
+Exits 0 only when every replayed query matches.
 """
 
 from __future__ import annotations
@@ -43,25 +23,13 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))  # tools/ siblings
 
+from _duck import BoundedOracle, bare_session, replay_catalog  # noqa: E402
+
+from bigquery_cross_environment_etl_pipeline_spark import queries_catalog  # noqa: E402
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import (  # noqa: E402
     TABLES,
 )
-
-from _duck import BoundedOracle  # noqa: E402 — tools/ sibling module
-
-
-def canon(pdf):
-    """Driver-shape canonical form: columns sorted by name, every cell
-    repr()'d, rows sorted — a Decimal/int or Timestamp/datetime split
-    between the engines survives into the comparison instead of being
-    erased by value coercion."""
-    cols = sorted(pdf.columns)
-    return sorted(
-        tuple(repr(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    )
 
 
 def main() -> int:
@@ -70,67 +38,21 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as entry
-
-    qs, osql = entry.queries(), entry.oracle_sql()
-    names = args.names or list(qs)
-    unknown = [n for n in names if n not in qs]
+    oracles = queries_catalog.oracle_queries()
+    names = args.names or list(oracles)
+    unknown = [n for n in names if n not in oracles]
     if unknown:
-        ap.error(f"unknown queries: {unknown}")
+        ap.error(f"no oracle for: {unknown}")
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    fails: list[str] = []
-    errs: list[str] = []
-    # bounded-memory DuckDB with spill + OOM retry — the shared policy
-    # (tools/_duck.py) both replay tools use
-    with BoundedOracle(args.sf, TABLES) as ora:
-        for i, name in enumerate(names):
-            try:
-                pdf = qs[name](spark, args.sf).toPandas()
-                opdf = ora.run(
-                    lambda c, sql=osql[name]: c.sql(sql)
-                    .fetch_arrow_table()
-                    .to_pandas()
-                )
-                ok_schema = sorted(pdf.columns) == sorted(opdf.columns)
-                a, b = canon(pdf), canon(opdf)
-                if ok_schema and a == b:
-                    print(f"ok {i + 1}/{len(names)} {name}", flush=True)
-                else:
-                    fails.append(name)
-                    print(
-                        f"FAIL {name}: rows {len(a)}/{len(b)}"
-                        f" schema={ok_schema}",
-                        flush=True,
-                    )
-                    for x, y in zip(a, b):
-                        if x != y:
-                            print("  spark :", str(x)[:400])
-                            print("  oracle:", str(y)[:400])
-                            break
-            except Exception as ex:  # noqa: BLE001 — report and continue
-                errs.append(name)
-                print(
-                    f"ERR {name}: {type(ex).__name__}: {str(ex)[:300]}",
-                    flush=True,
-                )
-
-    print("FAILS:", fails)
-    print("ERRS:", errs)
-    spark.stop()
-    return 1 if (fails or errs) else 0
+    spark = bare_session()
+    try:
+        with BoundedOracle(args.sf, TABLES) as ora:
+            outcomes = replay_catalog(spark, args.sf, ora, names)
+    finally:
+        spark.stop()
+    bad = {n: o.kind for n, o in outcomes.items() if not o.ok}
+    print(f"arrow replay: {len(names) - len(bad)}/{len(names)} match; not matching: {bad}")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":

@@ -17,8 +17,9 @@ COALESCE were exactly this class). This tool makes the class visible:
    NULL props / inf value / malformed-JSON props, orders with NULL
    price/status/date/custkey, customers with every non-key column
    NULL, and lineitems with NULL join keys / prices / flags / dates;
-3. replays EVERY oracle-bearing query through the driver-style
-   comparator (vanilla-session Spark vs DuckDB, repr-exact).
+3. replays EVERY oracle-bearing query through the one comparator
+   (tools/_duck.py: bare-session Spark vs DuckDB, Arrow canonical
+   form).
 
 A mismatch means Spark and DuckDB disagree on the edge rows — a real
 latent bug in the query or its oracle, worth fixing before any driver
@@ -42,13 +43,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))  # tools/ siblings
 
+from bigquery_cross_environment_etl_pipeline_spark.sources.registry import (  # noqa: E402
+    TABLES,
+)
+
 SRC = "/root/testdata/sf0.001"
 DEST = os.path.join(REPO, ".edge_sf")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 #: appended rows per table: {table: [ {col: value} ]}; ids continue
 #: beyond the max of sf0.001 so nothing collides. Columns omitted in a
@@ -185,84 +185,27 @@ def build(dest: str = DEST) -> str:
 
 
 def replay(dest: str, only: list[str] | None = None) -> int:
-    from pyspark.sql import SparkSession
+    """Replay every oracle-bearing query (or ``only``) on the edge
+    data; return the number of silent divergences."""
+    from _duck import BOTH_ERROR, BoundedOracle, bare_session, replay_catalog
 
-    import __spark_entry__ as e
-    from _duck import BoundedOracle
+    from bigquery_cross_environment_etl_pipeline_spark import queries_catalog
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    q, o = e.queries(), e.oracle_sql()
-
-    # bounded-memory DuckDB with spill + OOM retry — the shared policy
-    # (tools/_duck.py) both replay tools use; a round-8 full replay
-    # without it saw ONE canary-oracle malloc failure cascade into 23
-    # consecutive one-sided 'errors'
-    # context manager (ADVICE r8): an exception escaping the query
-    # loop — KeyboardInterrupt, a Spark setup failure — must still
-    # remove the duck_spill_* temp directory, as arrow_replay.py does
-    with BoundedOracle(dest, TABLES) as ora:
-        return _replay_loop(spark, ora, q, o, only, dest)
-
-
-def _replay_loop(spark, ora, q, o, only, dest) -> int:
-    names = only or sorted(o)
-    fails, loud_both = 0, 0
-    for name in names:
-        if name not in o:
+    oracles = queries_catalog.oracle_queries()
+    for name in only or ():
+        if name not in oracles:
             print(f"SKIP {name} (no oracle)")
-            continue
-        s = s_err = d = d_err = None
-        try:
-            sdf = q[name](spark, dest)
-            cols = sorted(sdf.columns)
-            s = sorted(
-                tuple(repr(r[c]) for c in cols) for r in sdf.collect()
-            )
-        except Exception as ex:
-            s_err = str(ex)[:200]
-
-        def duck_rows(c, sql=o[name], have_spark=s is not None):
-            res = c.sql(sql)
-            dc = list(res.columns)
-            if have_spark:
-                idx = [dc.index(x) for x in cols]
-            else:
-                idx = list(range(len(dc)))
-            return sorted(
-                tuple(repr(r[i]) for i in idx) for r in res.fetchall()
-            )
-
-        try:
-            d = ora.run(duck_rows)
-        except Exception as ex:
-            d_err = str(ex)[:200]
-        if s_err and d_err:
-            # both engines refuse the edge rows LOUDLY — an acceptable
-            # (documented) contract: no silent wrong answer is possible
-            loud_both += 1
-            print(f"LOUD-BOTH {name}: spark[{s_err[:80]}] duck[{d_err[:80]}]")
-        elif s_err or d_err:
-            fails += 1
-            which = "spark" if s_err else "duck"
-            print(f"ONE-SIDED-ERROR {name} ({which}): {(s_err or d_err)}")
-        elif s != d:
-            fails += 1
-            print(f"MISMATCH {name}: spark={len(s)} duck={len(d)} rows")
-            for a, b in list(zip(s, d))[:3]:
-                if a != b:
-                    print("  spark:", a)
-                    print("  duck :", b)
-            if len(s) != len(d):
-                ss, dd = set(s), set(d)
-                for x in list(ss - dd)[:2]:
-                    print("  only-spark:", x)
-                for x in list(dd - ss)[:2]:
-                    print("  only-duck :", x)
+    names = [n for n in only or sorted(oracles) if n in oracles]
+    spark = bare_session()
+    try:
+        with BoundedOracle(dest, TABLES) as ora:
+            outcomes = replay_catalog(spark, dest, ora, names)
+    finally:
+        spark.stop()
+    # both engines refusing the edge rows LOUDLY is an acceptable
+    # (documented) contract: no silent wrong answer is possible
+    loud_both = sum(o.kind == BOTH_ERROR for o in outcomes.values())
+    fails = sum(not o.ok and o.kind != BOTH_ERROR for o in outcomes.values())
     print(
         f"edge replay: {len(names)} queries, {fails} silent divergences,"
         f" {loud_both} loud-on-both (acceptable)"
