@@ -91,7 +91,7 @@ def provision(
     (S11) -> mark stepper step 3 complete (S12); on any failure, drop
     everything created by THIS call (rollback at dataset_utils.py:199-227).
     """
-    cfg_row = config.read().filter(f"org_id = {int(org_id)}").first()
+    cfg_row = config.lookup(org_id)
     if cfg_row is None:
         return ProvisionResult(org_id, "", "", False, f"no config row for org_id={org_id}")
 

@@ -5,7 +5,11 @@ job (reference core/database/billing_etl_db.py:63-89), then point-UPDATEs
 them during provisioning (billing_etl_db.py:122-162, :91-120). Here the
 config is a small engine table:
 
-- ``lookup`` — S3 point lookup (projection + equality predicate).
+- ``rows_by_key`` — the store read on the driver with pyarrow, as
+  ``key -> [row, ...]``: the config is kilobytes, so routing a trigger
+  and a point lookup read it without a Spark job (the checkpoint log's
+  discipline, operators/checkpoint.py).
+- ``lookup`` — S3 point lookup on that driver read.
 - ``attach_config`` — J1: the multi-tenant fan-out as a real join. The
   config side is explicitly broadcast: at 100 TB of job messages the
   config relation is still KB-sized, so the join must never shuffle the
@@ -18,8 +22,10 @@ config is a small engine table:
 
 from __future__ import annotations
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..localrel import has_parquet, overwrite_local
 from ..schemas import CONFIG_SCHEMA, STEP_STATUS_SCHEMA
@@ -73,16 +79,30 @@ class ConfigStore:
             )
         overwrite_local(self.spark, rows, self.schema, self.path)
 
+    def rows_by_key(self) -> dict:
+        """The whole store on the driver as ``key -> [Row, ...]`` in file
+        order, read with ``pyarrow.dataset`` (no Spark job). The key is
+        the key column's value, or a tuple of them for a compound key.
+
+        Parquet nullability is advisory, so a foreign writer's NULL key
+        reads back as ``None``; such rows are dropped here, as an
+        equi-join on the key drops them."""
+        if not has_parquet(self.path):
+            return {}
+        table = ds.dataset(self.path, schema=to_arrow_schema(self.schema), format="parquet")
+        out: dict = {}
+        for rec in table.to_table().to_pylist():
+            key = tuple(rec[k] for k in self.key_cols)
+            if None not in key:
+                out.setdefault(key if len(key) > 1 else key[0], []).append(Row(**rec))
+        return out
+
     # -- S3 ------------------------------------------------------------
     def lookup(self, org_id: int) -> Row | None:
         """Point lookup of the 5 config columns for one org
-        (reference billing_etl_db.py:64-75)."""
-        return (
-            self.read()
-            .filter(F.col("org_id") == int(org_id))
-            .select(*CONFIG_COLUMNS)
-            .first()
-        )
+        (reference billing_etl_db.py:64-75); the first matching row."""
+        rows = self.rows_by_key().get(int(org_id))
+        return Row(**{c: rows[0][c] for c in CONFIG_COLUMNS}) if rows else None
 
     # -- S11 -----------------------------------------------------------
     def update_values(self, org_id: int, projectid: str, updated_values: dict[str, str]) -> int:

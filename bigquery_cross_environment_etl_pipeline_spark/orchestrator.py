@@ -1,17 +1,23 @@
 """Multi-tenant job orchestration (entry point 1 end-to-end, SURVEY.md §3.1).
 
 The reference handles ONE Pub/Sub message per invocation (main.py:11-52
--> process_etl_job); this orchestrator takes a *batch* of envelopes and
-fans out: decode+validate (S5/U2) -> broadcast-join tenant config (J1) ->
-provision missing destinations (D7) -> run the incremental job per
-tenant (T1-T7).
+-> process_etl_job) and point-reads its tenant's config before the job
+(billing_etl_db.py:63-89); this orchestrator takes a *batch* of
+envelopes and fans out: decode+validate (S5/U2) -> one collect of each
+envelope's ``(valid, org_id)`` -> route against the tenant config read
+on the driver (``ConfigStore.rows_by_key``) -> run the incremental job
+per tenant (T1-T7). Routing is one Spark job: the decode expressions
+stay the one definition of "valid", and the rejects, the distinct orgs
+and the config match are counted and looked up on the driver, where the
+few rows already are. J1 (``attach_config``, the broadcast join) is the
+same routing as a relational plan and stays for the catalog query.
 
 The driver loop iterates TENANTS (dozens), never rows — each job's data
 path is fully distributed; at 100 TB per tenant the loop body is the
 same partitioned scan/append as the single-tenant pipeline. Tenants
-could also run concurrently from a thread pool sharing the
-SparkSession's scheduler pools; kept sequential here for deterministic
-tests.
+run sequentially by default (deterministic tests) or, with
+``max_concurrency`` > 1, from a thread pool sharing the SparkSession's
+scheduler.
 """
 
 from __future__ import annotations
@@ -20,11 +26,12 @@ import dataclasses
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.checkpoint import CheckpointLog
-from .operators.config import ConfigStore, attach_config
+from .operators.config import ConfigStore
 from .pipeline import JobResult, identity_transform, process_etl_job
-from .sources.pubsub import decode_envelopes, rejected_messages, valid_messages
+from .sources.pubsub import decode_envelopes
 
 
 @dataclasses.dataclass
@@ -48,21 +55,30 @@ def run_jobs_for_messages(
 ) -> OrchestratorResult:
     """Decode a batch of Pub/Sub envelopes and run one incremental ETL
     job per distinct valid org (reference: one HTTP 400 per bad message,
-    main.py:33-38 — here bad messages are counted, good ones fan out)."""
+    main.py:33-38 — here bad messages are counted, good ones fan out).
+
+    Routing is the left join of the distinct valid orgs with the config
+    (``attach_config(..., "left")``) evaluated on the driver: an org
+    with no config row, or a row with a NULL ``projectid``, is unknown,
+    and an org with two config rows runs twice."""
     now = now or dt.datetime.now()
-    decoded = decode_envelopes(envelopes)
-    n_rejected = rejected_messages(decoded).count()
-    msgs = valid_messages(decoded).select("org_id").distinct()
-    routed = attach_config(msgs, config.read(), "left")
+    decoded = (
+        decode_envelopes(envelopes)
+        .select("valid", F.col("payload.org_id").alias("org_id"))
+        .collect()
+    )
+    n_rejected = sum(not r["valid"] for r in decoded)
+    config_rows = config.rows_by_key()
 
     jobs: list[JobResult] = []
     unknown: list[int] = []
     runnable = []
-    for row in sorted(routed.collect(), key=lambda r: r["org_id"]):
-        if row["projectid"] is None:
-            unknown.append(row["org_id"])  # reference returns 404-ish per org
-        else:
-            runnable.append(row)
+    for org in sorted({r["org_id"] for r in decoded if r["valid"]}):
+        for row in config_rows.get(org, [None]):
+            if row is None or row["projectid"] is None:
+                unknown.append(org)  # reference returns 404-ish per org
+            else:
+                runnable.append(row)
 
     def run_one(row) -> JobResult:
         return process_etl_job(

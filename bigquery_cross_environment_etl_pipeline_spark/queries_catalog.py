@@ -131,6 +131,12 @@ _FORCE_WINDOW: list[str] = [
     "streaming_dedup_unique_counts",
     "streaming_cdc_upsert_snapshot",
     "streaming_stateful_user_totals",
+    # ConfigStore.lookup (and provisioning's config read) now reads the
+    # store on the driver with pyarrow instead of a Spark filter+first:
+    # the two builders that look tenants up while they are built.
+    # etl_protocol_edge_cases, whose null_org_lookup_no_match case pins
+    # the NULL-key row matching nothing, is already listed above.
+    "etl_provision_rollback",
 ]
 
 _STABLE_ORDER = [

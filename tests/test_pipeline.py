@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.operators.checkpoint import CheckpointLog
 from bigquery_cross_environment_etl_pipeline_spark.operators.config import (
+    CONFIG_COLUMNS,
     ConfigStore,
     StepStatusStore,
     attach_config,
@@ -205,6 +206,9 @@ def test_config_lookup_update_and_broadcast_join(spark, tmp_path):
     store = _config_store(spark, tmp_path)
     row = store.lookup(1)
     assert row["projectid"] == "proj-1"
+    # the driver read returns the Row the Spark point query returns
+    spark_row = store.read().filter("org_id = 1").select(*CONFIG_COLUMNS).first()
+    assert row == spark_row and row.asDict() == spark_row.asDict()
     assert store.lookup(99) is None
 
     with pytest.raises(ValueError):
