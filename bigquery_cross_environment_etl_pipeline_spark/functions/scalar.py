@@ -55,12 +55,6 @@ def iso_format(col: str | Column, fmt: str = ISO_FMT) -> Column:
     return F.date_format(col, fmt)
 
 
-def epoch_default(col: str | Column) -> Column:
-    """F3: COALESCE(watermark, epoch)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(EPOCH_LIT).cast("timestamp"))
-
-
 def fully_qualified_table_id(project: str | Column, dataset: str | Column, table: str | Column) -> Column:
     """F6: ``project.dataset.table``."""
     to_col = lambda x: F.lit(x) if isinstance(x, str) else x  # noqa: E731
@@ -95,9 +89,3 @@ def quote_ident(name: str) -> str:
     ``F.expr`` / ``spark.sql`` text then parses as that one name and
     can never break out of the quoting."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def to_json_payload(*cols: str | Column) -> Column:
-    """F8: record -> JSON string (timestamps rendered ISO-8601 by Spark's
-    writer, matching the reference's custom encoder semantics)."""
-    return F.to_json(F.struct(*cols))

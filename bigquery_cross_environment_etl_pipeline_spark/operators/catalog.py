@@ -117,19 +117,3 @@ def provision(
         if created_dataset:
             drop_database_cascade(spark, dataset)
         return ProvisionResult(org_id, dataset, table, False, f"rolled back: {exc}")
-
-
-def analyze_table(spark: SparkSession, database: str, table: str) -> dict:
-    """ANALYZE TABLE COMPUTE STATISTICS: row count + size recorded in
-    the catalog so the cost-based optimizer can pick join sides and
-    broadcast candidates from real numbers instead of file-size
-    guesses — on a 100 TB warehouse, stats are what keep a 10-way join
-    from picking the wrong build side. Returns the recorded stats."""
-    fq = f"{database}.{table}"
-    quoted = f"{quote_ident(database)}.{quote_ident(table)}"
-    spark.sql(f"ANALYZE TABLE {quoted} COMPUTE STATISTICS")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {quoted}").collect()
-    stats = next(
-        (r["data_type"] for r in rows if r["col_name"] == "Statistics"), None
-    )
-    return {"table": fq, "statistics": stats}

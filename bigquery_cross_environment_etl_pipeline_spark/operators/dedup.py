@@ -764,19 +764,6 @@ def signature_index_persist(
     ).parquet(index_path)
 
 
-def signature_index_append(
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_MINHASH,
-) -> None:
-    """O(batch) index maintenance: sign the new batch and append."""
-    minhash_signatures(new_docs, text_col, id_col, n_hashes).write.mode(
-        "append"
-    ).parquet(index_path)
-
-
 def incremental_lsh_pairs_from_index(
     spark,
     index_path: str,

@@ -1,27 +1,19 @@
-"""Multi-dimensional data layout: Z-order (Morton-curve) writes.
+"""Data layout: the Z-order (Morton-curve) key, compaction and bucketing.
 
-``write_sorted_partitions`` (load.py) gives tight per-file statistics on
-ONE sort key; a second predicate column gets no pruning at all. Z-order
-interleaves the bits of several columns' bucket ranks into one Morton
-key, so sorting by that key keeps files clustered in EVERY participating
-dimension at once — each file's footer min/max forms a small bounding
-box per column, and a predicate on ANY of the columns skips most files.
-This is the layout trick behind Delta/Iceberg ``OPTIMIZE ZORDER BY``,
-implemented here as pure column expressions over the open parquet
-format (no table-format dependency).
-
-Scale notes (100 TB): the cost is one ``repartitionByRange`` shuffle on
-the Morton key, paid once at write time; bucket boundaries come from one
-min/max aggregation pass (two scalars per column on the driver —
-bounded, never O(rows)). Reads need nothing special: Spark's normal
-parquet footer pruning does the skipping. Expect ~N^(1-1/k) of N files
-touched for a point-ish predicate on one of k interleaved columns,
-versus all N under a single-key sort when filtering a non-sort column.
+``zorder_key`` interleaves the bits of several columns' bucket ranks
+into one Morton key, the clustering key behind Delta/Iceberg
+``OPTIMIZE ZORDER BY``: rows close on the key are close in EVERY
+participating column at once. It is pure column expressions over the
+open parquet format (no table-format dependency); bucket boundaries
+come from one min/max aggregation pass (two scalars per column on the
+driver — bounded, never O(rows)). ``compact`` rewrites a fragmented
+dataset into fewer range-clustered files, and ``write_bucketed``
+persists a pre-paid join layout.
 
 Reference basis: the reference's only layout decision is BigQuery-side
 partitioning by export day (implicit in its half-open window queries,
-core/services/billing_etl.py:270-298); this operator is the engine-side
-generalization for multi-predicate workloads.
+core/services/billing_etl.py:270-298); these operators are the
+engine-side generalization for multi-predicate workloads.
 """
 
 from __future__ import annotations
@@ -31,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from ..functions.scalar import epoch_seconds
-from .load import micros_timestamps
 
 
 def _numeric(col_name: str, df: DataFrame) -> Column:
@@ -80,30 +71,6 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
                 F.shiftright(rank, bit).bitwiseAND(F.lit(1)), bit * k + j
             )
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    dest_path: str,
-    cols: list[str],
-    bits: int = 8,
-    num_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order curve of
-    ``cols``: range-partition by the Morton key (one shuffle — globally
-    disjoint file ranges), sort within each file (tight row-group
-    stats), drop the key before writing."""
-    # stats-bearing timestamp encoding: tight row-group stats per file
-    with micros_timestamps(df.sparkSession):
-        z = zorder_key(df, cols, bits)
-        (
-            df.withColumn("_zkey", z)
-            .repartitionByRange(num_files, "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-            .write.mode("overwrite")
-            .parquet(dest_path)
-        )
 
 
 def file_bounding_boxes(

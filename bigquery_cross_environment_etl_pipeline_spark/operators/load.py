@@ -114,29 +114,6 @@ def load_append(
     )
 
 
-def write_sorted_partitions(
-    df: DataFrame,
-    dest_path: str,
-    sort_cols: list[str],
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write with rows SORTED WITHIN each output file: gives parquet
-    row-group min/max statistics that are tight and disjoint on the
-    sort key, so later range predicates (the incremental window scan)
-    skip whole row groups instead of scanning them — the layout behind
-    SCALE.md's "sorted row-groups prune ~11/12 of files" claim.
-    ``sortWithinPartitions`` is a per-partition local sort: NO shuffle,
-    unlike ``orderBy`` (for globally disjoint file ranges, repartition
-    by range on the sort key first — one shuffle, paid once at write
-    time). ``max_records_per_file`` caps file size for downstream
-    parallelism without a repartition."""
-    with micros_timestamps(df.sparkSession):
-        writer = df.sortWithinPartitions(*sort_cols).write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(dest_path)
-
-
 @contextlib.contextmanager
 def session_conf(spark, key: str, value: str):
     """Set the session conf ``key`` to ``value`` inside the block and
@@ -151,15 +128,3 @@ def session_conf(spark, key: str, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def micros_timestamps(spark):
-    """Write parquet timestamps as INT64 TIMESTAMP_MICROS inside the
-    block. INT96, the default encoding, carries NO row-group
-    statistics, so a writer whose point is prunable files must force
-    the stats-bearing one, even on a vanilla session. It has to be the
-    session conf: the parquet writer ignores ``outputTimestampType``
-    passed as a write option."""
-    return session_conf(
-        spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )

@@ -70,58 +70,6 @@ def formula_image(doc_id: int, channels: int = 3) -> "object":
     return ((doc_id + 3 * x + 7 * y + 11 * c) % 256).astype(np.uint8)
 
 
-#: extension -> (modality, mime) for file-based asset ingest
-_EXT_MODALITY = {
-    "jpg": ("image", "image/jpeg"),
-    "jpeg": ("image", "image/jpeg"),
-    "png": ("image", "image/png"),
-    "gif": ("image", "image/gif"),
-    "bmp": ("image", "image/bmp"),
-    "ppm": ("image", "image/x-portable-pixmap"),
-    "pgm": ("image", "image/x-portable-graymap"),
-    "wav": ("audio", "audio/wav"),
-    "mp3": ("audio", "audio/mpeg"),
-    "mp4": ("video", "video/mp4"),
-    "mkv": ("video", "video/x-matroska"),
-}
-
-
-def ingest_binary_assets(spark, path: str, glob: str = "*") -> DataFrame:
-    """Ingest media files as opaque binary assets via Spark's built-in
-    ``binaryFile`` source — the real-world on-ramp for image/audio/video
-    at scale: each file becomes one row (path, modificationTime, length,
-    content) with NO decode, read in parallel across executors, one
-    task per file group. Modality/mime derive from the extension;
-    ``asset_id`` is the 48-bit path hash (stable across re-runs, so
-    downstream dedup/joins key on it deterministically).
-
-    The ``length`` metadata column comes from the file system, so
-    size-based filtering (e.g. skip >100 MB payloads) can prune BEFORE
-    content is materialized — push such filters on ``n_bytes`` here,
-    not after a decode stage."""
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    modality = F.lit(None).cast("string")
-    mime = F.lit("application/octet-stream")
-    for e, (m, mt) in sorted(_EXT_MODALITY.items()):
-        modality = F.when(ext == e, m).otherwise(modality)
-        mime = F.when(ext == e, mt).otherwise(mime)
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select(
-            F.conv(F.substring(F.md5(F.col("path")), 1, 12), 16, 10)
-            .cast("bigint")
-            .alias("asset_id"),
-            modality.alias("modality"),
-            F.col("content").alias("payload"),
-            mime.alias("mime_type"),
-            F.col("path").alias("source_path"),
-            F.col("length").cast("bigint").alias("n_bytes"),
-        )
-    )
-
-
 def _ppm_header(payload: bytes, ch: int) -> tuple[int, int, int, int]:
     """Parse a binary netpbm header: (width, height, maxval, raster
     offset). Tokens are decimal runs separated by whitespace and/or

@@ -105,25 +105,25 @@ def bm25_index_append(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Incremental inverted-index maintenance — the sparse analog of
-    ``similarity.ivf_index_append``: tokenize ONLY the delta, append
-    its postings (same ``_tb`` hash-bucket partitioning, so pruning is
-    unchanged) and its doclen rows, then refold the stats relation
-    from the merged doclen. Cost is one pass over the delta plus a
-    single-column fold — the existing corpus is never re-tokenized.
+    """Incremental inverted-index maintenance: tokenize ONLY the
+    delta, append its postings (same ``_tb`` hash-bucket partitioning,
+    so pruning is unchanged) and its doclen rows, then refold the stats
+    relation from the merged doclen. Cost is one pass over the delta
+    plus a single-column fold — the existing corpus is never
+    re-tokenized.
 
-    Contract (same as ``ivf_index_append``): delta ``doc_id``s must be
-    NEW — re-ingesting an existing id would double its postings.
+    Contract: delta ``doc_id``s must be NEW — re-ingesting an existing
+    id would double its postings.
     Postings for one (token, doc_id) stay unique across files because
     the id sets are disjoint, so the serving path's ``df = COUNT(*)``
     stays exact. Nightly ingest therefore adds O(delta) work
     regardless of index size; rebuild on a cadence only if tokenizer
     semantics change (BM25_INDEX_VERSION).
 
-    Crash-safety (invalidate-first, the ``ivf_index_append``
-    discipline): the three on-disk steps (postings append, doclen
-    append, stats refold) are not atomic, so the staleness marker
-    callers check (``stats/_SUCCESS`` — plans/llm.py::_bm25_index) is
+    Crash-safety (invalidate-first): the three on-disk steps (postings
+    append, doclen append, stats refold) are not atomic, so the
+    staleness marker callers check (``stats/_SUCCESS`` —
+    plans/llm.py::_bm25_index) is
     REMOVED before the first write and only reappears when the final
     ``_write_stats`` overwrite commits. A crash mid-append therefore
     leaves the index marked stale (next reader rebuilds) instead of

@@ -203,51 +203,6 @@ def cosine_topk(
     )
 
 
-def cosine_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DIM,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within blocking buckets —
-    an exact-verify UTILITY for provably-bounded blocks, not the scale
-    path.
-
-    Blocking on a data attribute has fixed cardinality: at 100 TB each
-    block holds billions of vectors and within-block all-pairs is
-    quadratic (the repo's own scaling probe measured 5.6x wall-time at
-    10x data). Use ``cosine_neardup_pairs_lsh`` for candidate
-    generation whose bucket count is a tunable parameter instead.
-    """
-    # Norms once per vector BEFORE the pair join (repartition on the
-    # block key doubles as the exchange that materializes them and
-    # co-partitions pair generation).
-    e = embeddings.select(
-        F.col(id_col), F.col(block_col), F.col(vec_col),
-        norm_expr(vec_col, dim).alias("_nrm"),
-    ).repartition(F.col(block_col))
-    a = e.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(block_col).alias("block"),
-        F.col(vec_col).alias("va"),
-        F.col("_nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(block_col).alias("block"),
-        F.col(vec_col).alias("vb"),
-        F.col("_nrm").alias("nb"),
-    )
-    cos = dot_expr("va", "vb", dim) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(b, (a.block == b.block) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-        .filter(F.col("cosine") > threshold)
-    )
-
-
 # --- IVF ANN (inverted-file index: the other scale path) --------------------
 
 
@@ -547,71 +502,6 @@ def ann_topk_ivf_probe(
     )
 
 
-def ivf_index_append(
-    spark,
-    new_embeddings: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DIM,
-) -> None:
-    """Incremental index maintenance: assign ONLY the new vectors
-    against the EXISTING centroids and append them to the partitioned
-    assignment store — no full-corpus rebuild. Cost is one pass over
-    the delta (broadcast centroids, max_by argmax), so nightly ingest
-    adds O(delta) work regardless of index size. Centroids drift as the
-    distribution shifts; rebuild (``ivf_index_persist``) on a cadence,
-    exactly like any IVF serving system.
-
-    Any PQ-codes sidecar (``ivfpq_codes_persist``) is INVALIDATED by
-    the append — its ``_SUCCESS`` marker is removed BEFORE the append
-    writes — because the sidecar encodes only the vectors present at
-    its build time; a stale sidecar would silently exclude every
-    appended vector from IVF-PQ probes. Invalidate-first ordering
-    (round-5 review finding): a crash after the append but before the
-    invalidation would leave a valid-looking stale sidecar, while a
-    crash after invalidating but before appending merely forces one
-    redundant rebuild. The next ``ann_topk_ivfpq`` serve re-encodes
-    (mode("overwrite"), so the stale files are replaced atomically at
-    the Spark-commit level).
-
-    The index's OWN staleness marker (``centroids/_SUCCESS`` — the
-    existence check plans/extended._ivf_index uses) follows the same
-    invalidate-first discipline (round-6, mirroring the
-    ``bm25_index_append`` fix): it is removed before the append and
-    restored only after the append commits, so a crash mid-append
-    leaves the index marked stale — the next reader rebuilds instead
-    of serving a partially-ingested delta (whose re-ingest would
-    violate the NEW-ids contract and double the replayed vectors).
-    An append likewise REFUSES a stale/torn index (marker already
-    absent): appending on top of a torn assignment store would
-    restore the marker without restoring the lost vectors — rebuild
-    with ``ivf_index_persist`` first."""
-    import glob as _glob
-    import os as _os
-
-    stale_marker = f"{index_path}/centroids/_SUCCESS"
-    if not _os.path.exists(stale_marker):
-        raise ValueError(
-            f"IVF index at {index_path} is stale or torn "
-            "(centroids/_SUCCESS missing) — rebuild with "
-            "ivf_index_persist before appending"
-        )
-    for marker in _glob.glob(f"{index_path}/pq_v*/_SUCCESS"):
-        _os.remove(marker)
-    _os.remove(stale_marker)
-    centroids = spark.read.parquet(index_path + "/centroids")
-    assigned = _assign_to_centroids(new_embeddings, centroids, id_col, vec_col, dim)
-    (
-        new_embeddings.join(assigned, id_col)
-        .write.mode("append")
-        .partitionBy("_cid")
-        .parquet(index_path + "/assigned")
-    )
-    with open(stale_marker, "wb"):
-        pass
-
-
 def ann_batch_topk_ivf_probe(
     spark,
     index_path: str,
@@ -850,8 +740,8 @@ def cosine_neardup_pairs_lsh(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs: banded-LSH candidate generation + exact
-    cosine VERIFY — the scale-safe replacement for fixed-cardinality
-    label blocking (``cosine_neardup_pairs``).
+    cosine VERIFY — scale-safe where fixed-cardinality label blocking
+    is quadratic within each block.
 
     Two stages, mirroring ``dedup.verified_jaccard_pairs``:
     (1) ``embedding_lsh_candidates`` emits only same-band-key pairs —

@@ -20,9 +20,8 @@ parquet statistics-backed pages only; every later call is a file
 read, no Spark job.
 
 Scale note: on a cluster this sidecar would live next to the table as
-a stats partition (or come from the catalog's ANALYZE TABLE numbers —
-``operators/catalog.analyze_table``); the JSON file is the
-single-node stand-in with the same contract.
+a stats partition (or come from the catalog's table statistics); the
+JSON file is the single-node stand-in with the same contract.
 """
 
 from __future__ import annotations

@@ -1573,20 +1573,16 @@ def _zorder_oracle() -> str:
 def zorder_locality_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton-curve (Z-order) locality, hash-verified: assign every
     eligible event to a 16x16 Z-cell over (user_id, value) using the
-    SAME pure-codegen expression ``operators/layout.zorder_key`` that
-    ``write_zordered`` clusters files by, then account how many
-    distinct cells a one-dimensional predicate (lowest quarter of the
-    user_id range) touches versus the total. The oracle replays every
-    stage — bounds, rank arithmetic, clamp, bit interleave — so the
-    layout math that file pruning depends on is engine-reproducible,
-    not just test-asserted (the physical write/prune path is covered
-    by tests/test_layout.py; file counts are partitioner-dependent and
-    would not hash across sessions, so the accounting is over LOGICAL
-    cells). Locality is the payoff at 100 TB: a predicate on either
-    interleaved column maps to ~1/4 of the curve's cells here, which
-    is exactly the fraction of files a z-clustered layout lets the
-    reader skip to. NULL/non-finite rows are excluded from the
-    accounting on both engines (write_zordered itself ranks them 0)."""
+    pure-codegen expression ``operators/layout.zorder_key``, then
+    account how many distinct cells a one-dimensional predicate (lowest
+    quarter of the user_id range) touches versus the total. The oracle
+    replays every stage — bounds, rank arithmetic, clamp, bit
+    interleave — so the Morton-key math is engine-reproducible, not
+    just test-asserted (file counts are partitioner-dependent and would
+    not hash across sessions, so the accounting is over LOGICAL cells).
+    A predicate on either interleaved column maps to ~1/4 of the
+    curve's cells here. NULL/non-finite rows are excluded from the
+    accounting on both engines (``zorder_key`` itself ranks them 0)."""
     from ..operators.layout import zorder_key
 
     n = 1 << _Z_BITS

@@ -124,8 +124,8 @@ def _encoded_assets(
     serialize each query's fused Arrow encode+decode chain onto a
     single task; a doc_id-only repartition (8 bytes/row of shuffle)
     restores the parallelism real asset ingest gets for free from
-    many files (ingest_binary_assets: one task per file group). Gated
-    on the scan's actual partition count like ``_docs_repartitioned``:
+    many files (one task per file group). Gated on the scan's actual
+    partition count like ``_docs_repartitioned``:
     a many-file ingest already >= parallelism takes no exchange."""
     ids = _gate_repartition(
         load_table(spark, sf_dir, "documents").select("doc_id"),
@@ -1778,9 +1778,9 @@ def _bm25_incr_index(spark: SparkSession, sf_dir: str) -> str:
 )
 def bm25_incremental_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from an index maintained INCREMENTALLY
-    (operators/retrieval.py::bm25_index_append — the sparse analog of
-    ivf_index_append): 80% of the corpus indexed up front, the rest
-    appended as a delta with postings co-bucketed, doclen extended,
+    (operators/retrieval.py::bm25_index_append): 80% of the corpus
+    indexed up front, the rest appended as a delta with postings
+    co-bucketed, doclen extended,
     and the stats relation refolded from the merged doc lengths. The
     oracle scores the FULL corpus from raw text, so the hash matches
     only if the merged index is exactly equivalent to a from-scratch
@@ -4834,9 +4834,7 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither re-scanned nor re-signed at ingest time, so per-batch
     dedup cost is O(batch): sign the batch, band it, broadcast its
     bands against the on-disk signatures
-    (`incremental_lsh_pairs_from_index`). Appending the checked
-    batch's signatures afterwards is `signature_index_append` — the
-    dedup analog of the IVF index lifecycle."""
+    (`incremental_lsh_pairs_from_index`)."""
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     return dedup.incremental_lsh_pairs_from_index(

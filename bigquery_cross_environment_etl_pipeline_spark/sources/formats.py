@@ -1,95 +1,19 @@
-"""Source/sink format connectors.
+"""Source-edge readers that carry engine policy.
 
 The reference's endpoints are BigQuery (columnar service) and MySQL
-(JDBC): here parquet is the primary columnar store and this module adds
-the interchange formats a pipeline meets at its edges — CSV / JSON /
-ORC with explicit schemas (schema inference is disabled by design: at
-100 TB an inference pass is a full extra scan, and inferred types
-drift between runs), plus the JDBC reader shape for real MySQL parity.
+(JDBC): here parquet is the primary columnar store, and Spark's own
+data sources serve the interchange formats. This module holds the
+schema-evolving parquet read, the JDBC reader shape for real MySQL
+parity, and the embedded-Derby shutdown that JDBC queries and tests
+need.
 
-Scale notes: CSV/JSON are row-oriented text — fine as ingestion edges,
-never as the analytical store; the write helpers exist mostly to feed
-external consumers. ORC/parquet carry column pruning + predicate
-pushdown. JDBC reads are partitioned on a numeric column so one table
-read fans out across executors instead of one connection.
+Scale notes: JDBC reads are partitioned on a numeric column so one
+table read fans out across executors instead of one connection.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-TEXT_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("header", "true")
-        .option("timestampFormat", TEXT_TS_FMT)
-        .option("timestampNTZFormat", TEXT_TS_FMT)
-        .csv(path)
-    )
-
-
-def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("timestampFormat", TEXT_TS_FMT)
-        .option("timestampNTZFormat", TEXT_TS_FMT)
-        .csv(path)
-    )
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("timestampFormat", TEXT_TS_FMT)
-        .option("timestampNTZFormat", TEXT_TS_FMT)
-        .json(path)
-    )
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return (
-        spark.read.schema(schema).option("timestampFormat", TEXT_TS_FMT)
-        .option("timestampNTZFormat", TEXT_TS_FMT).json(path)
-    )
-
-
-def read_json_tolerant(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """PERMISSIVE JSON read: malformed lines survive as rows whose
-    typed columns are NULL and whose raw text lands in
-    ``_corrupt_record`` — at 100 TB one bad producer must not kill a
-    million-file read, and the corrupt rows stay queryable for
-    quarantine/reprocessing (the batch analog of the decode path's
-    ``valid=false`` lane). FAILFAST remains the right mode for curated
-    inner-pipeline datasets — use ``read_json`` there."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    # fresh StructType: .add() mutates the receiver in place
-    with_corrupt = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    return (
-        spark.read.schema(with_corrupt)
-        .option("timestampFormat", TEXT_TS_FMT)
-        .option("timestampNTZFormat", TEXT_TS_FMT)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:

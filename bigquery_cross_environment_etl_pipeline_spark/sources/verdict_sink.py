@@ -41,11 +41,6 @@ manifest rename — the same division of labor as Spark's own
 FileOutputCommitter v2 / object-store committers. On a real object
 store the ``os.replace`` rename becomes a PUT-if-absent of the
 manifest key; the protocol is unchanged.
-
-Two writers share the protocol: ``jsonl_verdict`` (row-iterator
-``DataSourceWriter`` — the transparent, debuggable form) and
-``parquet_manifest`` (``DataSourceArrowWriter`` — RecordBatches in,
-parquet parts out, zero per-row Python: the columnar fast path).
 """
 
 from __future__ import annotations
@@ -58,7 +53,6 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceStreamWriter,
     DataSourceWriter,
     WriterCommitMessage,
@@ -144,10 +138,13 @@ def _abort(messages) -> None:
             os.remove(m.path)
 
 
-class _ManifestCommitMixin:
-    """The shared driver-side half of the two-phase protocol (one
-    definition for the JSONL and parquet batch writers — a protocol
-    fix can't miss one of them)."""
+class JsonlVerdictBatchWriter(DataSourceWriter):
+    def __init__(self, options, overwrite: bool):
+        self.path = options["path"]
+        self.overwrite = overwrite
+
+    def write(self, iterator) -> PartCommit:
+        return _stage_rows(self.path, iterator)
 
     def commit(self, messages) -> None:
         old = (
@@ -168,15 +165,6 @@ class _ManifestCommitMixin:
 
     def abort(self, messages) -> None:
         _abort(messages)
-
-
-class JsonlVerdictBatchWriter(_ManifestCommitMixin, DataSourceWriter):
-    def __init__(self, options, overwrite: bool):
-        self.path = options["path"]
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> PartCommit:
-        return _stage_rows(self.path, iterator)
 
 
 class JsonlVerdictStreamWriter(DataSourceStreamWriter):
@@ -230,57 +218,6 @@ class JsonlVerdictDataSource(DataSource):
                 "jsonl_verdict supports append-mode streaming only"
             )
         return JsonlVerdictStreamWriter(self.options)
-
-
-class ParquetManifestArrowWriter(_ManifestCommitMixin, DataSourceArrowWriter):
-    """The Arrow FAST PATH of the same protocol: tasks receive PyArrow
-    ``RecordBatch``es (no per-row Python), concatenate them into one
-    staged parquet part, and commit through the identical manifest
-    publish (the SHARED mixin — one commit/abort definition for both
-    batch writers) — columnar end to end, so the sink scales with
-    batch count, not row count, on the Python side."""
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options["path"]
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> PartCommit:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        part = os.path.join(staging, f"part-{uuid.uuid4().hex}.parquet")
-        batches = list(iterator)
-        n = sum(b.num_rows for b in batches)
-        if n:
-            pq.write_table(pa.Table.from_batches(batches), part)
-        return PartCommit(part, n)
-
-
-class ParquetManifestDataSource(DataSource):
-    """``df.write.format("parquet_manifest")`` — the columnar twin of
-    ``jsonl_verdict`` (same two-phase commit, parquet parts staged
-    from Arrow batches)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "parquet_manifest"
-
-    def writer(self, schema, overwrite: bool) -> ParquetManifestArrowWriter:
-        return ParquetManifestArrowWriter(self.options, overwrite)
-
-
-def read_committed_parquet(spark, path: str, schema):
-    """Manifest-gated read of the parquet twin."""
-    files = [
-        os.path.join(path, e["file"])
-        for m in committed_manifests(path)
-        for e in m["files"]
-    ]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
 
 
 def committed_manifests(path: str) -> list[dict]:

@@ -4,7 +4,8 @@ The reference's only state is the external checkpoint table; a real
 incremental engine also needs *in-stream* state (running per-key
 aggregates, dedup-across-batches, session tracking). This module is the
 template: per-key state as a typed tuple, Arrow-batched updates, update
-output mode.
+output mode. The running total is kept in integer cents, so the state
+after any micro-batch split is exact and oracle-checkable.
 
 Scale notes: state lives in the executors' state store partitioned by
 key (shuffle on user_id), so memory is O(distinct keys / executor);
@@ -21,105 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n_events bigint, total_value double"
-
-
-def _update_user_totals(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate (count, sum) per user across micro-batches."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def stream_user_totals_with_state(stream: DataFrame) -> DataFrame:
-    """Running per-user (count, sum) maintained in stream state —
-    emits the refreshed totals for keys touched by each micro-batch."""
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_totals,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- transformWithStateInPandas (Spark 4 arbitrary-state API) ---------------
-#
-# The successor API to applyInPandasWithState: state is declared as named,
-# typed handles (value/list/map state) on a processor object instead of one
-# opaque tuple, and the runtime requires the RocksDB state store (state
-# spills to disk — the 100 TB-safe configuration, where per-key state no
-# longer has to fit in executor heap).
-
-try:  # Spark >= 4.0 only; engine degrades gracefully on 3.x
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotalsProcessor(StatefulProcessor):
-        """Same running (count, sum) semantics as ``_update_user_totals``
-        — intentionally, so tests can assert both APIs converge to the
-        identical batch answer — but held in a named ValueState handle."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def stream_user_totals_transform_with_state(stream: DataFrame) -> DataFrame:
-    """Running per-user totals via ``transformWithStateInPandas``.
-
-    Requires the session to run the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) — set it on the
-    writeStream's session before starting the query. The streaming
-    Python driver worker also imports ``google.protobuf`` at runtime
-    (state-server wire protocol) — a standard cluster dependency.
-    """
-    if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas needs Spark >= 4.0")
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            UserTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-# --- exact-arithmetic variant (oracle-checkable) ----------------------------
 
 CENTS_OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
 CENTS_STATE_SCHEMA = "n_events bigint, total_cents bigint"
@@ -145,11 +47,10 @@ def _update_user_totals_cents(
 
 
 def stream_user_totals_cents(stream: DataFrame) -> DataFrame:
-    """Running per-user (count, cents) in stream state — the
-    oracle-checkable form of ``stream_user_totals_with_state``: values
-    are scaled to integer cents BEFORE crossing into state (2-dp input,
-    so the scaling is exact), making the accumulated state independent
-    of micro-batch boundaries."""
+    """Running per-user (count, cents) in stream state: values are
+    scaled to integer cents BEFORE crossing into state (2-dp input, so
+    the scaling is exact), making the accumulated state independent of
+    micro-batch boundaries."""
     return (
         stream.select(
             "user_id",

@@ -1,5 +1,5 @@
-"""Persisted MinHash signature index lifecycle (operators/dedup.py):
-build once, probe per ingest, append O(batch)."""
+"""Persisted MinHash signature index (operators/dedup.py): build once,
+probe each ingest batch against it."""
 
 from __future__ import annotations
 
@@ -26,16 +26,3 @@ def test_signature_index_probe_and_append(spark, tmp_path):
     ).collect()
     hits = {(r["new_doc"], r["corpus_doc"]): r["est_similarity"] for r in pairs}
     assert hits.get((100004, 4)) == 1.0
-
-    # append batch 1's signatures; batch 2 duplicates BATCH 1's doc ->
-    # must now collide against the appended signatures
-    dedup.signature_index_append(batch1, idx)
-    batch2 = batch1.select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-    pairs2 = dedup.incremental_lsh_pairs_from_index(
-        spark, idx, dedup.minhash_signatures(batch2)
-    ).collect()
-    hits2 = {(r["new_doc"], r["corpus_doc"]): r["est_similarity"] for r in pairs2}
-    assert hits2.get((200004, 100004)) == 1.0, "appended sigs must serve probes"
-    assert hits2.get((200004, 4)) == 1.0, "original corpus still probed"

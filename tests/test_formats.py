@@ -1,5 +1,5 @@
-"""Interchange-format round-trips: CSV / JSON / ORC with explicit
-schemas must preserve the events table exactly (µs timestamps incl.)."""
+"""Source-edge readers: the JDBC reader is configured without loading,
+and the schema-evolving parquet read merges old and new batches."""
 
 from __future__ import annotations
 
@@ -11,42 +11,9 @@ from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_
 from .conftest import SF_SMOKE
 
 
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 @pytest.fixture()
 def events(spark):
     return load_table(spark, SF_SMOKE, "events")
-
-
-def test_csv_roundtrip(spark, tmp_path, events):
-    path = str(tmp_path / "csv")
-    formats.write_csv(events, path)
-    back = formats.read_csv(spark, path, events.schema)
-    assert back.schema == events.schema
-    assert _canon(back) == _canon(events)
-
-
-def test_json_roundtrip(spark, tmp_path, events):
-    path = str(tmp_path / "json")
-    formats.write_json(events, path)
-    back = formats.read_json(spark, path, events.schema)
-    assert _canon(back) == _canon(events)
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path, events):
-    path = str(tmp_path / "orc")
-    formats.write_orc(events, path)
-    back = formats.read_orc(spark, path)
-    assert _canon(back) == _canon(events)
-    plan = (
-        back.filter("event_id < 100")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "event_id" in plan.split("PushedFilters")[-1]
 
 
 def test_jdbc_reader_is_configured_not_loaded(spark):
@@ -84,80 +51,3 @@ def test_parquet_schema_evolution_mergeschema(spark, tmp_path, events):
     assert merged.count() == 2 * n
     assert merged.filter(F.col("pipeline_tag").isNull()).count() == n
     assert merged.filter(F.col("pipeline_tag") == "enriched").count() == n
-
-
-def test_binaryfile_asset_ingest(spark, tmp_path):
-    """binaryFile source -> typed asset table: one row per file, payload
-    bytes intact, modality/mime from extension, metadata length column
-    usable for pre-decode filtering; features flow straight through the
-    Arrow featurizer."""
-    from bigquery_cross_environment_etl_pipeline_spark.operators import multimodal
-
-    files = {
-        "a.jpg": b"\xff\xd8fakejpegbytes",
-        "b.wav": b"RIFFfakewav",
-        "c.mp4": b"\x00\x00fakemp4",
-        "notes.txt": b"not media",
-    }
-    for name, data in files.items():
-        (tmp_path / name).write_bytes(data)
-
-    assets = multimodal.ingest_binary_assets(spark, str(tmp_path))
-    rows = {r["source_path"].rsplit("/", 1)[-1]: r for r in assets.collect()}
-    assert set(rows) == set(files)
-    assert rows["a.jpg"]["modality"] == "image"
-    assert rows["a.jpg"]["mime_type"] == "image/jpeg"
-    assert rows["b.wav"]["modality"] == "audio"
-    assert rows["c.mp4"]["modality"] == "video"
-    assert rows["notes.txt"]["modality"] is None
-    for name, data in files.items():
-        assert bytes(rows[name]["payload"]) == data
-        assert rows[name]["n_bytes"] == len(data)
-    # asset_id is the stable 48-bit path hash -> re-ingest gives same ids
-    again = {
-        r["source_path"]: r["asset_id"]
-        for r in multimodal.ingest_binary_assets(spark, str(tmp_path)).collect()
-    }
-    assert all(again[r["source_path"]] == r["asset_id"] for r in rows.values())
-
-    # media-only featurization: filter on metadata BEFORE the payload
-    # crosses the Arrow boundary
-    from pyspark.sql import functions as F
-
-    feats = multimodal.extract_features(
-        assets.filter(F.col("modality").isNotNull())
-    ).collect()
-    assert {f["asset_id"] for f in feats} == {
-        r["asset_id"] for n, r in rows.items() if n != "notes.txt"
-    }
-    assert all(f["n_bytes"] > 0 for f in feats)
-
-
-def test_json_permissive_quarantines_corrupt_rows(spark, tmp_path):
-    """One malformed line must not kill the read: good rows parse, bad
-    rows surface in _corrupt_record for quarantine."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    p = tmp_path / "mixed.json"
-    p.write_text(
-        '{"event_id": 1, "event_type": "click"}\n'
-        "{this is not json}\n"
-        '{"event_id": 3, "event_type": "view"}\n'
-        '{"event_id": "not_a_number", "event_type": "view"}\n'
-    )
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    df = formats.read_json_tolerant(spark, str(p), schema)
-    rows = df.collect()
-    assert len(rows) == 4, "every line produced a row"
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert {r["event_id"] for r in good} == {1, 3}
-    assert len(bad) == 2
-    assert any("not json" in r["_corrupt_record"] for r in bad)
-    # the input schema object is not mutated by the tolerant reader
-    assert len(schema.fields) == 2

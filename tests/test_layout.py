@@ -1,101 +1,13 @@
-"""Z-order layout: files must stay clustered in BOTH interleaved
-dimensions (a predicate on either column overlaps only a fraction of
-file bounding boxes), while a single-key sorted layout clusters one
-dimension only. Also: the layout never changes query answers."""
+"""Data layout: the Z-order key on degenerate input, compaction that
+keeps range clustering, and bucketed tables that join without a
+shuffle."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
-from bigquery_cross_environment_etl_pipeline_spark.operators.layout import (
-    file_bounding_boxes,
-    write_zordered,
-)
-from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_table
-
-from .conftest import SF_SMOKE
-
-N_FILES = 16
-
-
-def _touched(boxes, col, lo, hi) -> int:
-    """Files whose [min, max] range intersects [lo, hi] — the footer
-    pruning decision."""
-    return boxes.filter(
-        (F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi)
-    ).count()
-
-
-def test_zorder_prunes_both_dimensions(spark, tmp_path):
-    events = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "ts")
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(events, zpath, ["user_id", "ts"], num_files=N_FILES)
-
-    upath = str(tmp_path / "usersort")
-    (
-        events.repartitionByRange(N_FILES, "user_id")
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(upath)
-    )
-
-    zbox = file_bounding_boxes(spark, zpath, ["user_id", "ts"]).cache()
-    ubox = file_bounding_boxes(spark, upath, ["user_id", "ts"]).cache()
-    n_z, n_u = zbox.count(), ubox.count()
-    assert n_z >= 8 and n_u >= 8, "need enough files for pruning to mean anything"
-
-    # ~6% box on each dimension
-    users = events.agg(F.min("user_id"), F.max("user_id")).first()
-    u_lo = users[0]
-    u_hi = users[0] + max(1, (users[1] - users[0]) // N_FILES)
-    ts = events.agg(
-        F.min(F.col("ts").cast("timestamp_ntz")), F.max(F.col("ts").cast("timestamp_ntz"))
-    ).first()
-    import datetime as dt
-
-    span = ts[1] - ts[0]
-    t_lo = ts[0] + span / 2
-    t_hi = t_lo + span / N_FILES
-    t_lo_e, t_hi_e = (
-        (t - dt.datetime(1970, 1, 1)).total_seconds() for t in (t_lo, t_hi)
-    )
-
-    # single-key layout: perfect on its sort key, blind on the other —
-    # a ts predicate overlaps every file
-    assert _touched(ubox, "user_id", u_lo, u_hi) <= max(2, n_u // 4)
-    assert _touched(ubox, "ts", t_lo_e, t_hi_e) == n_u
-
-    # z-order: BOTH single-dimension predicates prune
-    z_user = _touched(zbox, "user_id", u_lo, u_hi)
-    z_ts = _touched(zbox, "ts", t_lo_e, t_hi_e)
-    assert z_user < n_z, f"user predicate touched all {n_z} z-ordered files"
-    assert z_ts < n_z, f"ts predicate touched all {n_z} z-ordered files"
-    # and the 2-D box touches fewer files than either 1-D slab
-    z_box = zbox.filter(
-        (F.col("max_user_id") >= u_lo)
-        & (F.col("min_user_id") <= u_hi)
-        & (F.col("max_ts") >= t_lo_e)
-        & (F.col("min_ts") <= t_hi_e)
-    ).count()
-    assert z_box <= min(z_user, z_ts)
-
-
-def test_zorder_layout_preserves_answers(spark, tmp_path):
-    events = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "ts")
-    zpath = str(tmp_path / "zorder")
-    write_zordered(events, zpath, ["user_id", "ts"], num_files=8)
-    back = spark.read.parquet(zpath)
-    assert back.count() == events.count()
-    want = {r["event_id"] for r in events.filter(F.col("user_id") < 10).collect()}
-    got = {r["event_id"] for r in back.filter(F.col("user_id") < 10).collect()}
-    assert got == want
-
-
-def test_zorder_key_tolerates_empty_and_all_null_input(spark, tmp_path):
+def test_zorder_key_tolerates_empty_and_all_null_input(spark):
     """Empty or all-null inputs produce None min/max bounds; the key
-    must degrade to rank 0 instead of raising TypeError (round-2
-    advice), and the write must still succeed."""
+    must degrade to rank 0 instead of raising TypeError."""
     from bigquery_cross_environment_etl_pipeline_spark.operators.layout import zorder_key
 
     empty = spark.createDataFrame([], "a double, b double")
@@ -104,23 +16,6 @@ def test_zorder_key_tolerates_empty_and_all_null_input(spark, tmp_path):
     nulls = spark.createDataFrame([(None, None)] * 5, "a double, b double")
     keyed = nulls.withColumn("_z", zorder_key(nulls, ["a", "b"])).collect()
     assert [r["_z"] for r in keyed] == [0] * 5
-    write_zordered(nulls, str(tmp_path / "nulls"), ["a", "b"], num_files=2)
-    assert spark.read.parquet(str(tmp_path / "nulls")).count() == 5
-
-
-def test_write_zordered_restores_session_conf(spark, tmp_path):
-    """write_zordered forces the stats-bearing timestamp encoding for
-    its own write but must not leak it into the session (round-2
-    advice)."""
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "INT96")
-    try:
-        df = load_table(spark, SF_SMOKE, "events").limit(50)
-        write_zordered(df, str(tmp_path / "zo"), ["user_id", "value"], num_files=2)
-        assert spark.conf.get(key) == "INT96"
-    finally:
-        spark.conf.set(key, prev)
 
 
 def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):

@@ -41,44 +41,3 @@ def test_partitioned_rerun_is_idempotent(spark, tmp_path):
     load_append(events, dest, batch_id="b1", time_partition_col="ts")
     load_append(events, dest, batch_id="b1", time_partition_col="ts")  # re-run
     assert spark.read.parquet(dest).count() == 1000
-
-
-def test_write_sorted_partitions_rowgroup_stats(spark, tmp_path):
-    """Rows land sorted within every output file -> tight, disjoint
-    row-group min/max on the sort key (the skip-scan layout)."""
-    import pyarrow.parquet as pq
-
-    from bigquery_cross_environment_etl_pipeline_spark.operators.load import (
-        write_sorted_partitions,
-    )
-    from bigquery_cross_environment_etl_pipeline_spark.sources.registry import (
-        load_table,
-    )
-
-    from .conftest import SF_SMOKE
-
-    events = load_table(spark, SF_SMOKE, "events")
-    dest = str(tmp_path / "sorted")
-    write_sorted_partitions(events.repartition(4), dest, ["ts"])
-
-    import glob
-
-    files = glob.glob(f"{dest}/*.parquet")
-    assert len(files) >= 2
-    n_total = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        prev_max = None
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "ts"
-            )
-            lo, hi = col.statistics.min, col.statistics.max
-            assert lo <= hi
-            if prev_max is not None:
-                assert lo >= prev_max, "row groups disjoint within a sorted file"
-            prev_max = hi
-            n_total += md.row_group(rg).num_rows
-    assert n_total == events.count()

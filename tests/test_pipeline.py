@@ -260,26 +260,3 @@ def test_provision_workflow_and_rollback(spark, tmp_path):
 
     catalog.drop_database_cascade(spark, "org_2_standard_export")
     assert not catalog.database_exists(spark, "org_2_standard_export")
-
-
-def test_analyze_table_records_statistics(spark):
-    """ANALYZE TABLE puts rowCount/size into the catalog for the CBO."""
-    from bigquery_cross_environment_etl_pipeline_spark.operators import catalog as cat
-    from bigquery_cross_environment_etl_pipeline_spark.sources.registry import (
-        load_table,
-    )
-
-    from .conftest import SF_SMOKE
-
-    db = "stats_test_db"
-    cat.create_database(spark, db)
-    try:
-        orders = load_table(spark, SF_SMOKE, "orders")
-        orders.write.mode("overwrite").saveAsTable(f"{db}.orders_stats")
-        got = cat.analyze_table(spark, db, "orders_stats")
-        assert got["statistics"] is not None
-        assert "rows" in got["statistics"], got
-        n = orders.count()
-        assert str(n) in got["statistics"], got
-    finally:
-        cat.drop_database_cascade(spark, db)

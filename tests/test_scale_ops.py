@@ -3,8 +3,6 @@ merge upsert, approximate aggregates vs exact."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.operators import similarity
@@ -395,37 +393,6 @@ def test_batch_ivf_probe_matches_single_probes(spark, tmp_path):
             assert abs(r["cosine"] - s["cosine"]) < 1e-12
 
 
-def test_ivf_index_append_serves_new_vectors(spark, tmp_path):
-    """Incremental maintenance: vectors appended after the build must be
-    (a) assigned to their true max-cosine centroid among the existing
-    ones and (b) returned by a probe whose query IS one of them."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    delta = emb.filter(F.col("vec_id") >= 400)
-    path = str(tmp_path / "ivf")
-    similarity.ivf_index_persist(spark, base, path, n_centroids=8)
-    n_base = spark.read.parquet(path + "/assigned").count()
-    similarity.ivf_index_append(spark, delta, path)
-    index = spark.read.parquet(path + "/assigned")
-    assert index.count() == n_base + delta.count()
-
-    # appended assignment must agree with a fresh assignment pass
-    centroids = spark.read.parquet(path + "/centroids")
-    fresh = similarity._assign_to_centroids(
-        delta, centroids, "vec_id", "embedding", similarity.DIM
-    )
-    got = {r["vec_id"]: r["_cid"] for r in index.filter(F.col("vec_id") >= 400).collect()}
-    want = {r["vec_id"]: r["_cid"] for r in fresh.collect()}
-    assert got == want
-
-    # a probe querying an appended vector finds it at cosine ~1
-    some = delta.select("vec_id", "embedding").first()
-    qvec = [float(x) for x in some["embedding"]]
-    top = similarity.ann_topk_ivf_probe(spark, path, qvec, k=1, nprobe=2).first()
-    assert top["vec_id"] == some["vec_id"]
-    assert abs(top["cosine"] - 1.0) < 1e-9
-
-
 def test_dynamic_partition_pruning_on_date_layout(spark, tmp_path):
     """With the destination laid out by date (load_append's
     time-partition option), a join against a filtered dim triggers
@@ -581,75 +548,6 @@ def test_ivfpq_sidecar_prunes_and_recall(spark, tmp_path):
     }
     recall = len(exact & {r["vec_id"] for r in got}) / 10
     assert recall >= 0.2, f"IVF-PQ recall too low: {recall}"
-
-
-def test_ivf_append_invalidates_pq_sidecar(spark, tmp_path):
-    """ivf_index_append must invalidate the PQ-codes sidecar (drop its
-    _SUCCESS marker): the sidecar encodes only build-time vectors, so a
-    stale one would silently exclude every appended vector from IVF-PQ
-    probes. The _SUCCESS-gated rebuild then re-covers the full index."""
-    import os
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    delta = emb.filter(F.col("vec_id") >= 400)
-    path = str(tmp_path / "ivfpq")
-    similarity.ivf_index_persist(spark, base, path, n_centroids=8)
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in base.filter(F.col("vec_id") < similarity.PQ_K).collect()
-    ]
-    pq_path = similarity.ivfpq_codes_persist(spark, path, cents)
-    assert os.path.exists(pq_path + "/_SUCCESS")
-    assert spark.read.parquet(pq_path).count() == base.count()
-
-    similarity.ivf_index_append(spark, delta, path)
-    assert not os.path.exists(pq_path + "/_SUCCESS"), (
-        "append must invalidate the PQ sidecar"
-    )
-    # the rebuild (what ann_topk_ivfpq's ensure step runs next serve)
-    # encodes every vector, appended ones included
-    similarity.ivfpq_codes_persist(spark, path, cents)
-    assert os.path.exists(pq_path + "/_SUCCESS")
-    assert spark.read.parquet(pq_path).count() == emb.count()
-
-
-def test_ivf_append_crash_leaves_index_stale(spark, tmp_path, monkeypatch):
-    """Invalidate-first (round 6, mirroring the bm25_index_append fix):
-    a crash mid-append must leave the index's staleness marker
-    (centroids/_SUCCESS — what _ivf_index's existence check reads)
-    REMOVED, so the next reader rebuilds instead of serving a
-    partially-ingested delta; a successful append restores it."""
-    import os
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    delta = emb.filter(F.col("vec_id") >= 400)
-    path = str(tmp_path / "ivf_crash")
-    similarity.ivf_index_persist(spark, base, path, n_centroids=8)
-    marker = path + "/centroids/_SUCCESS"
-    assert os.path.exists(marker)
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated mid-append crash")
-
-    monkeypatch.setattr(similarity, "_assign_to_centroids", boom)
-    with pytest.raises(RuntimeError, match="simulated"):
-        similarity.ivf_index_append(spark, delta, path)
-    assert not os.path.exists(marker), (
-        "torn append must leave the index marked stale"
-    )
-    monkeypatch.undo()
-    # appending onto a torn index must REFUSE (it would restore the
-    # marker without restoring lost vectors) — recovery is a rebuild
-    with pytest.raises(ValueError, match="stale or torn"):
-        similarity.ivf_index_append(spark, delta, path)
-    similarity.ivf_index_persist(spark, base, path, n_centroids=8)
-    similarity.ivf_index_append(spark, delta, path)
-    assert os.path.exists(marker), "successful append restores the marker"
-    assert (
-        spark.read.parquet(path + "/assigned").count() == emb.count()
-    )
 
 
 def test_pq_encode_custom_id_col(spark, tmp_path):

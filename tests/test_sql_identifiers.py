@@ -8,7 +8,6 @@ from __future__ import annotations
 import contextlib
 
 import numpy as np
-import pytest
 from pyspark.errors import AnalysisException
 
 from bigquery_cross_environment_etl_pipeline_spark.functions.scalar import quote_ident
@@ -69,20 +68,3 @@ def test_catalog_ddl_keeps_a_backtick_inside_the_name(spark):
     finally:
         catalog.drop_database_cascade(spark, db)
     assert not catalog.database_exists(spark, db)
-
-
-def test_analyze_table_keeps_sql_text_inside_the_table_name(spark):
-    """A table name carrying SQL text must name one (missing) table: it
-    raises, and the statement it carries never runs, so ``billing``
-    gets no statistics."""
-    db = "quoting_stats_db"
-    catalog.create_database(spark, db)
-    try:
-        spark.sql(f"CREATE TABLE {db}.billing (k BIGINT) USING parquet")
-        spark.sql(f"INSERT INTO {db}.billing VALUES (1), (2)")
-        with pytest.raises(AnalysisException):
-            catalog.analyze_table(spark, db, "billing COMPUTE STATISTICS NOSCAN --")
-        described = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.billing").collect()
-        assert "Statistics" not in [r["col_name"] for r in described]
-    finally:
-        catalog.drop_database_cascade(spark, db)

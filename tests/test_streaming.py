@@ -13,16 +13,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigquery_cross_environment_etl_pipeline_spark.sources.registry import load_table
-from bigquery_cross_environment_etl_pipeline_spark.streaming import (
-    stream_incremental_append,
-    stream_windowed_counts,
-)
 from bigquery_cross_environment_etl_pipeline_spark.streaming.incremental import (
     await_drain,
     drain_memory_sink,
     ensure_event_time,
     file_feed,
+    stream_incremental_append,
     stream_stream_interval_join,
+    stream_windowed_counts,
     write_microbatches,
 )
 

@@ -147,43 +147,6 @@ def test_overwrite_supersession_is_atomic(spark, tmp_path):
     assert back.first()["o_orderstatus"] == "X"
 
 
-def test_parquet_manifest_arrow_writer_roundtrip(spark, tmp_path):
-    """The Arrow fast-path twin: RecordBatches staged as parquet parts
-    under the same manifest protocol — type-faithful (timestamps
-    included, no JSON text boundary) and manifest-gated."""
-    from bigquery_cross_environment_etl_pipeline_spark.sources.verdict_sink import (
-        ParquetManifestDataSource,
-        read_committed_parquet,
-    )
-
-    spark.dataSource.register(ParquetManifestDataSource)
-    src = (
-        load_table(spark, SF_SMOKE, "orders")
-        .filter(F.col("o_orderkey") < 200)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-    )
-    path = str(tmp_path / "t")
-    src.write.format("parquet_manifest").option("path", path).mode(
-        "append"
-    ).save()
-    manifests = committed_manifests(path)
-    assert len(manifests) == 1
-    assert manifests[0]["total_rows"] == src.count()
-    schema = (
-        "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
-        " o_orderdate timestamp"
-    )
-    back = read_committed_parquet(spark, path, schema)
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, src.collect())
-    )
-    # overwrite retraction works through the shared protocol
-    src.limit(3).write.format("parquet_manifest").option("path", path).mode(
-        "overwrite"
-    ).save()
-    assert read_committed_parquet(spark, path, schema).count() == 3
-
-
 def test_stream_writer_commits_per_epoch(spark, tmp_path):
     """writeStream.format('jsonl_verdict'): one manifest per
     micro-batch, union-of-manifests equals the streamed input, and
