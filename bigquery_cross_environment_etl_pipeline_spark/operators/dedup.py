@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import quote_ident
+from ..sources.registry import read_parquet
 from .iterative import iter_checkpoint
 from .text import hash48, tokens
 
@@ -777,7 +778,7 @@ def incremental_lsh_pairs_from_index(
     come from the PERSISTED index (no corpus re-scan, no re-signing),
     only the batch is signed fresh. ``broadcast_batch`` as in
     ``incremental_lsh_pairs`` — force only for known-small batches."""
-    corpus_sigs = spark.read.parquet(index_path)
+    corpus_sigs = read_parquet(spark, index_path)
     return incremental_lsh_pairs(
         corpus_sigs, batch_sigs, id_col, n_hashes, n_bands, broadcast_batch
     )

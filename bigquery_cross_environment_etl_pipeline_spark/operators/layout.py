@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from ..functions.scalar import epoch_seconds
+from ..sources.registry import read_parquet
 
 
 def _numeric(col_name: str, df: DataFrame) -> Column:
@@ -78,7 +79,7 @@ def file_bounding_boxes(
 ) -> DataFrame:
     """Per-file (min, max) of each column — the footer-statistics view a
     reader's pruning sees, reconstructed from data for testing/audit."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return df.groupBy(F.input_file_name().alias("file")).agg(
         *[
             agg
@@ -118,7 +119,7 @@ def compact(
         # the rewrite finishes; require a staging dir + rename instead.
         # realpath, not abspath: a symlinked dest must not sneak past.
         raise ValueError("compact(): dest_path must differ from path")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     files_before = df.inputFiles()
     if sort_cols:
         out = df.repartitionByRange(target_files, *[F.col(c) for c in sort_cols])
@@ -126,7 +127,7 @@ def compact(
     else:
         out = df.repartition(target_files)
     out.write.mode("overwrite").parquet(dest_path)
-    files_after = spark.read.parquet(dest_path).inputFiles()
+    files_after = read_parquet(spark, dest_path).inputFiles()
     return len(files_before), len(files_after)
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.registry import read_parquet
 from .text import tokens
 
 #: bump on any semantic change to tokenization or index layout — the
@@ -150,7 +151,7 @@ def bm25_index_append(
         .parquet(index_path + "/postings")
     )
     doclen.write.mode("append").parquet(index_path + "/doclen")
-    merged = spark.read.parquet(index_path + "/doclen")
+    merged = read_parquet(spark, index_path + "/doclen")
     _write_stats(merged, index_path)
 
 
@@ -237,12 +238,12 @@ def bm25_topk_from_index(
     )
     probe_buckets = [int(r["_tb"]) for r in bucket_rows]
     postings = (
-        spark.read.parquet(index_path + "/postings")
+        read_parquet(spark, index_path + "/postings")
         .filter(F.col("_tb").isin(probe_buckets))
         .filter(F.col("token").isin(*terms))
     )
-    doclen = spark.read.parquet(index_path + "/doclen")
-    stats = spark.read.parquet(index_path + "/stats")
+    doclen = read_parquet(spark, index_path + "/doclen")
+    stats = read_parquet(spark, index_path + "/stats")
     # postings are distinct per (token, doc_id), so df = COUNT(*)
     df_counts = postings.groupBy("token").agg(
         F.count(F.lit(1)).alias("df")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import has_parquet, overwrite_local
+from ..sources.registry import read_parquet
 
 ROLLUP_KEYS = ["bucket", "event_type"]
 
@@ -67,7 +68,7 @@ class RollupTable:
         self.path = path
 
     def read(self) -> DataFrame | None:
-        return self.spark.read.parquet(self.path) if has_parquet(self.path) else None
+        return read_parquet(self.spark, self.path) if has_parquet(self.path) else None
 
     def update(self, batch: DataFrame, ts_col: str = "ts") -> None:
         merged = merge_rollup(self.read(), aggregate_batch(batch, ts_col))
@@ -89,7 +90,7 @@ def compact(spark: SparkSession, path: str, target_files: int = 8) -> int:
     """Rewrite a parquet directory into ~target_files files; returns the
     resulting file count. (A cluster deployment drives target_files from
     bytes/128 MB; repartition not coalesce so output sizes balance.)"""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tmp = path.rstrip("/") + "__compacting"
     df.repartition(target_files).write.mode("overwrite").parquet(tmp)
     # atomic-enough swap for single-writer maintenance windows

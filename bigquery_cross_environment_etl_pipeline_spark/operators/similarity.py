@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import quote_ident
+from ..sources.registry import read_parquet
 from .iterative import iter_checkpoint
 
 DIM = 64
@@ -483,10 +484,10 @@ def ann_topk_ivf_probe(
     import math
 
     qnrm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    cents = spark.read.parquet(index_path + "/centroids").collect()
+    cents = read_parquet(spark, index_path + "/centroids").collect()
     probe_cids = _rank_probe_cids(cents, query_vec, qnrm, nprobe)
 
-    index = spark.read.parquet(index_path + "/assigned").filter(
+    index = read_parquet(spark, index_path + "/assigned").filter(
         F.col("_cid").isin(probe_cids)
     )
     if exclude_id is not None:
@@ -526,7 +527,7 @@ def ann_batch_topk_ivf_probe(
     """
     import math
 
-    cents = spark.read.parquet(index_path + "/centroids").collect()
+    cents = read_parquet(spark, index_path + "/centroids").collect()
     probe_pairs: list[tuple[int, int]] = []
     qrows = []
     for qid, vec in query_vecs.items():
@@ -538,7 +539,7 @@ def ann_batch_topk_ivf_probe(
         qrows.append((qid, v, qnrm))
 
     all_cids = sorted({cid for _, cid in probe_pairs})
-    index = spark.read.parquet(index_path + "/assigned").filter(
+    index = read_parquet(spark, index_path + "/assigned").filter(
         F.col("_cid").isin(all_cids)
     )
     from ..localrel import local_df
@@ -1021,7 +1022,7 @@ def ivfpq_codes_persist(
     returns the sidecar path (``<index>/pq_v{PQ_STORE_VERSION}``).
     """
     pq_path = f"{index_path}/pq_v{PQ_STORE_VERSION}"
-    assigned = spark.read.parquet(index_path + "/assigned")
+    assigned = read_parquet(spark, index_path + "/assigned")
     codes = pq_encode(assigned, centroid_rows, vec_col, dim, id_col)
     (
         assigned.select(id_col, "_cid")
@@ -1059,7 +1060,7 @@ def ann_topk_ivfpq_probe(
 
     sub_d = dim // PQ_M
     qnrm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    cents = spark.read.parquet(index_path + "/centroids").collect()
+    cents = read_parquet(spark, index_path + "/centroids").collect()
     probe_cids = _rank_probe_cids(cents, query_vec, qnrm, nprobe)
 
     # (M x K) ADC table: left-fold subspace squared-L2, driver-side —
@@ -1076,7 +1077,7 @@ def ann_topk_ivfpq_probe(
         table.append(row)
 
     pq_path = f"{index_path}/pq_v{PQ_STORE_VERSION}"
-    codes = spark.read.parquet(pq_path).filter(F.col("_cid").isin(probe_cids))
+    codes = read_parquet(spark, pq_path).filter(F.col("_cid").isin(probe_cids))
     if exclude_id is not None:
         codes = codes.filter(F.col(id_col) != exclude_id)
     codes_arr = codes.select(

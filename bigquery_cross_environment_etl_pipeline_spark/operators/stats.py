@@ -12,7 +12,7 @@ persisted ANN/signature indexes.
 {col: v}}`` for the requested columns, served from a JSON sidecar
 under ``$SPARK_GRAFT_INDEX_DIR`` keyed by (stats version, table,
 content fingerprint) — the same staleness discipline as the index
-caches (``sources/registry.dataset_fingerprint`` carries file names,
+caches (``sources/registry.dataset_fingerprint`` carries the relative paths,
 sizes, and mtime_ns, so a regenerated dataset recomputes instead of
 serving stale numbers). A cache miss costs one min/max/count
 aggregate — column-pruned to the requested columns, so the scan reads

@@ -14,7 +14,7 @@ from pyspark.sql import Window as W
 
 from ..functions.scalar import epoch_seconds, finite_metric, quote_ident
 from ..queries_catalog import TS_FMT_DUCK, TS_FMT_SPARK, register
-from ..sources.registry import load_table
+from ..sources.registry import load_table, read_parquet
 from ..localrel import local_df
 
 
@@ -1682,7 +1682,7 @@ def compaction_file_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             boxes[i][1] < boxes[i + 1][0] for i in range(len(boxes) - 1)
         )
         row = (
-            spark.read.parquet(dest)
+            read_parquet(spark, dest)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
                 F.round(

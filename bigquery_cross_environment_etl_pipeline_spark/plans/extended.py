@@ -18,7 +18,7 @@ from ..localrel import local_df
 from ..operators.joins import asof_join, range_join
 from ..operators.text import tokens
 from ..queries_catalog import TS_FMT_DUCK, TS_FMT_SPARK, register
-from ..sources.registry import index_cache_path, load_table
+from ..sources.registry import index_cache_path, load_table, read_parquet
 from ..streaming.incremental import (
     await_drain,
     drain_memory_sink,
@@ -3355,7 +3355,7 @@ def streaming_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
         last = snapshot_versions(f"{feed.dir}/snapshot")[-1][1]
-        final = spark.read.parquet(last).filter(F.col("op") != "D")
+        final = read_parquet(spark, last).filter(F.col("op") != "D")
         out = final.select(
             "user_id",
             F.date_format("ts", TS_FMT_SPARK).alias("last_ts"),
@@ -3842,7 +3842,7 @@ def load_time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ids would pull future batches into an as-of read
         load_append(w1, dest, batch_id="b0001")
         load_append(w2, dest, batch_id="b0002")
-        full = spark.read.parquet(dest)
+        full = read_parquet(spark, dest)
         as_of_1 = full.filter(F.col("_batch_id") <= "b0001").count()
         as_of_2 = full.filter(F.col("_batch_id") <= "b0002").count()
         only_2 = full.filter(F.col("_batch_id") == "b0002").count()
@@ -3895,12 +3895,12 @@ def retention_purge_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="purge_") as tmp:
         dest = f"{tmp}/dest"
         events.write.parquet(dest)
-        before = spark.read.parquet(dest).count()
-        kept = spark.read.parquet(dest).join(
+        before = read_parquet(spark, dest).count()
+        kept = read_parquet(spark, dest).join(
             F.broadcast(tombstones), "user_id", "left_anti"
         )
         kept.write.parquet(f"{tmp}/clean")
-        clean = spark.read.parquet(f"{tmp}/clean")
+        clean = read_parquet(spark, f"{tmp}/clean")
         after = clean.count()
         leaked = clean.join(F.broadcast(tombstones), "user_id", "left_semi").count()
         assert leaked == 0, "purged users survived the rewrite"

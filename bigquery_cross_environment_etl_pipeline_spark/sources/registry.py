@@ -11,14 +11,32 @@ predicate pushdown + column pruning reach the row-group level for free,
 and a 100 TB table is just more files behind the same call. No driver-side
 pagination (the reference's LIMIT/OFFSET loop at billing_etl.py:276-283
 is replaced by the partitioned scan).
+
+A relation's schema comes from Spark's own inference, run once per
+process and data version: every engine read of a parquet path without
+an explicit schema goes through ``read_parquet``. Its first read of a
+path infers the schema (a ``mergeSchemasInParallel`` job while the
+query is built); later reads of the same files pass that ``StructType``
+back through ``spark.read.schema(...)`` and build the relation with no
+job, the way a catalog supplies a table's schema. The key is the path,
+the recursive ``(relative path, size, mtime_ns)`` listing that
+``dataset_fingerprint`` hashes (a driver-side walk, the same listing
+Spark's file index makes) and the SQLConfs that change how parquet
+types map to Spark types, so a rewritten table or store, or a changed
+conversion setting, is inferred again. Nothing here spells a schema out.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from .. import CHECKOUT_DIR
 
@@ -45,6 +63,61 @@ def table_path(sf_dir: str, name: str) -> str:
 #: truncate to microseconds (the same truncation DuckDB applies).
 _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: the SQLConfs whose values change the schema Spark infers from parquet
+#: files: the parquet -> Spark type conversions, footer merging and the
+#: typing of partition directory values
+_SCHEMA_CONFS = (
+    _NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: inferred schemas kept per process, least recently used dropped first;
+#: a store rewritten on every build (a temp dir) adds one entry per build
+_SCHEMA_CACHE_SIZE = 256
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _set_conf(spark: SparkSession, key: str, value: str) -> None:
+    if spark.conf.get(key) != value:
+        spark.conf.set(key, value)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """``read_parquet`` plus the schema it read with."""
+    stats = _file_stats(path)
+    # nothing local to fingerprint (a URI, a missing path): no key can
+    # tell a rewrite apart, so Spark infers every time (or raises)
+    key = stats and (path, _fingerprint(stats), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    if key:
+        with _schemas_lock:
+            schema = _schemas.get(key)
+            if schema is not None:
+                _schemas.move_to_end(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path), schema
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if key:
+        with _schemas_lock:
+            _schemas[key] = schema
+            if len(_schemas) > _SCHEMA_CACHE_SIZE:
+                _schemas.popitem(last=False)
+    return df, schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job once
+    this process has inferred the schema of the same files under the
+    same conversion settings (see the module docstring)."""
+    return _read_parquet(spark, path)[0]
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one registered table."""
@@ -54,13 +127,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # instants, and any date_format/strftime rendering happens in session
     # time. Pin UTC so an engine session created without our factory
     # (e.g. the correctness driver's) still reproduces the oracle.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ns_cols = _NANOS_TS_COLUMNS.get(name, ())
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    for c in ns_cols:
-        if dict(df.dtypes).get(c) == "bigint":
+    _set_conf(spark, "spark.sql.session.timeZone", "UTC")
+    # set for every table, not only the nanos ones: it is part of the
+    # schema-cache key, so one value keeps each table's entry valid
+    # whichever table a session happens to load first
+    _set_conf(spark, _NANOS_AS_LONG, "true")
+    df, schema = _read_parquet(spark, table_path(sf_dir, name))
+    for c in _NANOS_TS_COLUMNS.get(name, ()):
+        if c in schema.names and isinstance(schema[c].dataType, LongType):
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 
@@ -75,27 +149,39 @@ def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def dataset_fingerprint(sf_dir: str, table: str) -> str:
-    """Cheap content fingerprint of a source table (file names + sizes,
-    no Spark job) — persisted-index cache keys include it so a
-    REGENERATED dataset at the same path (or a different root whose
-    leaf dir shares the name) can never serve a stale index."""
-    import hashlib
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    # (name, size, mtime_ns): size alone misses a regenerated dataset
-    # whose files happen to keep identical byte counts
-    stats: list[tuple[str, int, int]] = []
-    if os.path.isdir(p):
-        for f in sorted(os.listdir(p)):
-            fp = os.path.join(p, f)
-            if os.path.isfile(fp):
+def _file_stats(path: str) -> list[tuple[str, int, int]]:
+    """``(relative path, size, mtime_ns)`` of every regular file under
+    ``path``, sorted; a file path lists itself by its base name."""
+    # mtime_ns: size alone misses a regenerated dataset whose files
+    # happen to keep identical byte counts
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
+    stats = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            fp = os.path.join(d, f)
+            try:
                 st = os.stat(fp)
-                stats.append((f, st.st_size, st.st_mtime_ns))
-    elif os.path.isfile(p):
-        st = os.stat(p)
-        stats.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
+            except FileNotFoundError:  # a writer's temp file, gone mid-walk
+                continue
+            if stat.S_ISREG(st.st_mode):
+                stats.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return sorted(stats)
+
+
+def _fingerprint(stats: list[tuple[str, int, int]]) -> str:
     return hashlib.md5(repr(stats).encode()).hexdigest()[:10]
+
+
+def dataset_fingerprint(sf_dir: str, table: str) -> str:
+    """Cheap content fingerprint of a source table (file names, sizes
+    and mtimes of every file under it, partition directories included;
+    no Spark job) — the schema cache and the persisted-index cache keys
+    carry it, so a REGENERATED dataset at the same path (or a different
+    root whose leaf dir shares the name) can never serve a stale schema
+    or index."""
+    return _fingerprint(_file_stats(table_path(sf_dir, table)))
 
 
 #: where persisted indexes and sidecars live unless

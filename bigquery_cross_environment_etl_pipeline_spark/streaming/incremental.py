@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType, TimestampNTZType
 
 from ..operators.load import load_append, session_conf
+from ..sources.registry import read_parquet
 
 
 def ensure_event_time(df: DataFrame) -> DataFrame:
@@ -323,7 +324,7 @@ def stream_cdc_upsert(
         spark = batch.sparkSession
         collapsed = collapse_changes(batch, keys, sequence_cols)
         if state["last"] is not None:
-            prev = spark.read.parquet(state["last"])
+            prev = read_parquet(spark, state["last"])
             collapsed = collapse_changes(
                 prev.unionByName(collapsed), keys, sequence_cols
             )
