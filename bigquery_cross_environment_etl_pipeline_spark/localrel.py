@@ -26,6 +26,7 @@ path, and changing that per-host behaviour is not this helper's job.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -75,6 +76,17 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return out
     except Exception:  # noqa: BLE001 — constant data, correctness first
         return spark.createDataFrame(rows, schema)
+
+
+def local_store_path(path: str) -> str:
+    """``path`` unchanged when it is a plain filesystem path. A URI
+    (``file://``, ``gs://``, ...) is refused: the driver-managed stores
+    read and write it with ``os`` calls and pyarrow on plain paths,
+    which would read a URI as an empty store and write a stray
+    ``file:`` tree under the working directory."""
+    if urlparse(path).scheme:
+        raise ValueError(f"store path {path!r} is a URI; only a plain filesystem path is supported")
+    return path
 
 
 def has_parquet(path: str) -> bool:

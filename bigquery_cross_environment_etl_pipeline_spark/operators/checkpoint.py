@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import TimestampType
 
-from ..localrel import has_parquet
+from ..localrel import has_parquet, local_store_path
 from ..schemas import CHECKPOINT_SCHEMA, STATUS_SUCCESS, VALID_STATUSES
 
 #: CHECKPOINT_SCHEMA in arrow terms: timestamps are timestamp[us, UTC],
@@ -74,7 +74,7 @@ class CheckpointLog:
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        self.path = local_store_path(path)
 
     def read(self) -> DataFrame:
         if not has_parquet(self.path):

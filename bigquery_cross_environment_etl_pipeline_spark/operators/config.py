@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..localrel import has_parquet, overwrite_local
+from ..localrel import has_parquet, local_store_path, overwrite_local
 from ..schemas import CONFIG_SCHEMA, STEP_STATUS_SCHEMA
 
 CONFIG_COLUMNS = (
@@ -48,7 +48,7 @@ class ConfigStore:
 
     def __init__(self, spark: SparkSession, path: str, schema=CONFIG_SCHEMA, key_cols=("org_id",)):
         self.spark = spark
-        self.path = path
+        self.path = local_store_path(path)
         self.schema = schema
         self.key_cols = tuple(key_cols)
 

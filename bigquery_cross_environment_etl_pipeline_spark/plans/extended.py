@@ -325,7 +325,15 @@ def grouped_median_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     Finite-values contract (edge-replay finding): a NaN input makes
     the two engines disagree on rank — pandas .median() SKIPS NaN
     while DuckDB's median ranks it — so non-finite values are excluded
-    identically on both sides before the median."""
+    identically on both sides before the median.
+
+    Stage width: the subset's shuffle is far below AQE's 1 MB
+    coalescing floor, so the exchange ``applyInPandas`` plans by itself
+    is folded into ONE Python task although each of the 256 groups
+    costs ~2 ms of pandas work. An explicit ``repartition(N, "user_id")``
+    with N = ``defaultParallelism`` is an exchange AQE never coalesces
+    and already satisfies the grouping's distribution, so the plan
+    keeps one exchange and the grouped stage runs one task per core."""
 
     def median_of(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
@@ -335,7 +343,11 @@ def grouped_median_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").filter(
         (F.col("user_id") < 256) & finite_metric("value")
     )
-    return events.select("user_id", "value").groupBy("user_id").applyInPandas(
+    # an explicit-N hash exchange is one AQE never coalesces: one Python task per core
+    grouped = events.select("user_id", "value").repartition(
+        spark.sparkContext.defaultParallelism, "user_id"
+    )
+    return grouped.groupBy("user_id").applyInPandas(
         median_of, "user_id bigint, median_value double"
     )
 

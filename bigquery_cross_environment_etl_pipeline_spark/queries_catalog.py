@@ -137,6 +137,10 @@ _FORCE_WINDOW: list[str] = [
     # etl_protocol_edge_cases, whose null_org_lookup_no_match case pins
     # the NULL-key row matching nothing, is already listed above.
     "etl_provision_rollback",
+    # the grouped stage's exchange is now an explicit hash repartition
+    # (one Python task per core): the driver hash re-attests the median
+    # on the new exchange
+    "grouped_median_applyinpandas",  # r13 repartition composition
 ]
 
 _STABLE_ORDER = [

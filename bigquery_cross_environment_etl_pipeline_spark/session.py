@@ -9,10 +9,18 @@ Arrow for every Python boundary, and shuffle parallelism sized to the
 actual cores rather than the 200-partition default.
 
 Scale notes (100 TB / 1000 executors): everything configured here is
-cluster-size-agnostic — AQE coalesces the 32-partition local shuffle the
-same way it would coalesce a 2000-partition cluster shuffle; the only
-local-mode-specific knob is the master URL, which production deployments
-override via ``spark.master`` submit conf.
+cluster-size-agnostic — AQE coalesces the local shuffle (one partition
+per core by default) the same way it would coalesce a 2000-partition
+cluster shuffle; the only local-mode-specific knob is the master URL,
+which production deployments override via ``spark.master`` submit conf.
+
+AQE coalesces by bytes: partitions are merged up to its 1 MB
+``coalescePartitions.minPartitionSize`` floor, so any shuffle smaller
+than that runs its reduce side as ONE task. That is right for JVM
+operators and wrong for a Python stage whose cost is per group, not
+per byte — such a stage pins its width with an explicit
+``repartition(N, keys)``, an exchange AQE never coalesces
+(``plans/extended.grouped_median_applyinpandas``).
 """
 
 from __future__ import annotations
@@ -46,6 +54,12 @@ def build_conf(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # with the default "true" every pyspark.sql.functions call walks
+        # the Python stack and makes extra py4j round trips to record its
+        # call site (~684 calls to build embedding_cosine_topk). The
+        # trade-off: a runtime error loses its Python call-site
+        # "DataFrame" context; extra_conf can turn it back on to debug.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # preload numpy/pandas/pyarrow (and this package's worker-side
         # fixes) in the daemon so forked workers inherit them via COW
         # instead of paying ~4.7 s CPU of imports each (guide §4.5;

@@ -4,6 +4,7 @@ idempotent re-runs, partial-failure verdicts, provisioning DDL."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 from collections import Counter
 
 import pytest
@@ -66,6 +67,18 @@ def test_checkpoint_rejects_bad_status(spark, tmp_path):
     log = CheckpointLog(spark, str(tmp_path / "ckpt"))
     with pytest.raises(ValueError):
         log.save("BOGUS", 1, "p")
+
+
+@pytest.mark.parametrize("store", [CheckpointLog, ConfigStore, StepStatusStore])
+def test_store_refuses_a_uri_path(spark, tmp_path, monkeypatch, store):
+    """A URI would read as an empty store and write a stray ``file:``
+    tree under the working directory: construction refuses it."""
+    monkeypatch.chdir(tmp_path)
+    uri = (tmp_path / "store").as_uri()
+    with pytest.raises(ValueError, match=re.escape(uri)):
+        store(spark, uri)
+    assert not (tmp_path / "file:").exists()
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_etl_job_incremental_windows(spark, tmp_path, events):
